@@ -5,8 +5,11 @@ headline query does the wall go" by timing sub-phases with the noop sink
 and by counting Spark jobs per phase.  Run:
 
     python bench_extra.py phases        # phase breakdown of the big three
-    python bench_extra.py cc_iters      # per-round CC timings
-    python bench_extra.py pr_iters      # per-iteration PageRank timings
+
+Per-round CC and per-iteration PageRank figures come from the engine's
+own loops: ``python3 perfbench/run.py --workload hub_e2e --seed 1
+--trace 1`` (``graph.components.rounds``/``round_s``,
+``graph.pagerank.iter_s``).
 
 Same session config as bench.py (local[$SPARK_GRAFT_CPUS], shuffle
 partitions max(cpus, 8)), same sf dir ($SPARK_GRAFT_SF_DIR), untimed
@@ -133,94 +136,11 @@ def phases(spark):
     return out
 
 
-def cc_iters(spark):
-    """Time each round of the CC loop separately."""
-    from pyspark.sql import functions as F
-
-    from osm2ch_spark import tpch_world as W
-    from osm2ch_spark.graph.adjacency import canonical_edges
-    from osm2ch_spark.graph.checkpoint import localcheckpoint
-    from osm2ch_spark.graph.components import _large_star, _signature, _small_star
-
-    settle(spark)
-    edges = W.tpch_expanded(spark, SF_DIR).select(
-        F.col("src_edge_id").alias("source_vertex"),
-        F.col("dst_edge_id").alias("target_vertex"),
-    ).withColumn("weight", F.lit(1.0)).withColumn("one_way", F.lit(False))
-    edges = edges.localCheckpoint(eager=True)
-    out = {}
-    p = Phase(spark, out)
-    e = p.run("cc0: canonical+ckpt", lambda: localcheckpoint(canonical_edges(edges), level="deser"))
-    sig = p.run("cc0: signature", lambda: _signature(e))
-    for it in range(1, 30):
-        new_e = localcheckpoint(_small_star(_large_star(e)), eager=False, level="deser")
-        new_sig = p.run(f"cc{it}: stars+sig", lambda: _signature(new_e))
-        if new_sig == sig:
-            p.run(f"cc{it}: confirm anti-join",
-                  lambda: new_e.join(e, ["u", "v"], "left_anti").isEmpty())
-            e = new_e
-            break
-        sig = new_sig
-        e = new_e
-    return out
-
-
-def pr_iters(spark):
-    from pyspark.sql import functions as F
-
-    from osm2ch_spark import pipeline
-    from osm2ch_spark import tpch_world as W
-    from osm2ch_spark.graph.adjacency import build_adjacency, vertices_table
-    from osm2ch_spark.graph.checkpoint import localcheckpoint
-
-    settle(spark)
-    pe = pipeline.edge_table(
-        W.tpch_expanded(spark, SF_DIR).select(
-            F.col("src_edge_id").alias("source_vertex"),
-            F.col("dst_edge_id").alias("target_vertex"),
-            "weight", "one_way",
-        )
-    ).localCheckpoint(eager=True)
-    pe.count()
-    out = {}
-    p = Phase(spark, out)
-    verts = vertices_table(pe).persist()
-    stats = p.run("pr: vstats (verts agg)", lambda: verts.agg(
-        F.count("vertex").alias("n"), F.min("vertex"), F.max("vertex")).collect()[0])
-    n = stats["n"]
-    nb = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    adj = build_adjacency(pe, num_buckets=nb, with_weights=False).persist()
-    p.run("pr: adjacency materialize", lambda: adj.count())
-    ranks = localcheckpoint(verts.select("vertex", "has_out", (F.lit(1.0) / n).alias("rank")))
-    dangling = p.run("pr: initial dangling", lambda: ranks.filter(~F.col("has_out")).agg(F.sum("rank")).collect()[0][0] or 0.0)
-    base = (1.0 - 0.85) / n
-    for it in range(1, 6):
-        contribs = (
-            adj.join(ranks.select("vertex", "rank").hint("shuffle_hash"),
-                     adj.source_vertex == F.col("vertex"), "inner")
-            .select(F.explode("neighbors").alias("tgt"),
-                    (F.col("rank") / F.col("out_degree")).alias("c"))
-            .groupBy("tgt").agg(F.sum("c").alias("contrib"))
-        )
-        new_ranks = (
-            verts.join(contribs.hint("shuffle_hash"), verts.vertex == contribs.tgt, "left")
-            .select("vertex", "has_out",
-                    (F.lit(base) + F.lit(0.85)
-                     * (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.lit(dangling / n))).alias("rank"))
-        )
-        new_ranks = localcheckpoint(new_ranks, eager=False)
-        dangling = p.run(f"pr: iter {it}", lambda: new_ranks.filter(~F.col("has_out")).agg(F.sum("rank")).collect()[0][0] or 0.0)
-        ranks = new_ranks
-    adj.unpersist()
-    verts.unpersist()
-    return out
-
-
 def main():
     mode = sys.argv[1] if len(sys.argv) > 1 else "phases"
     spark = get_session()
     warmup(spark)
-    fn = {"phases": phases, "cc_iters": cc_iters, "pr_iters": pr_iters}[mode]
+    fn = {"phases": phases}[mode]
     out = fn(spark)
     print(json.dumps(out, indent=2))
     spark.stop()

@@ -23,26 +23,16 @@ from pyspark.sql import functions as F
 
 
 def build_adjacency(edges: DataFrame, num_buckets: int = 32, max_chunk: int = 4096,
-                    with_weights: bool = True, narrow_ids: bool = False) -> DataFrame:
+                    with_weights: bool = True) -> DataFrame:
     """Group the edge table into chunked, bucketed adjacency shards.
 
     ``with_weights=False`` omits the weights lists: unweighted consumers
     (PageRank) never read them, and the second collect_list both doubles
     the aggregate's heap footprint (the CSR build is the engine's most
     GC-heavy stage at 10^8 edges) and doubles the cached shard bytes.
-
-    ``narrow_ids=True`` stores neighbor ids as INT (4 B) instead of
-    BIGINT (8 B) — the caller asserts every vertex id fits in int32
-    (PageRank checks this from the vertex stats it already computes).
-    This is the poor man's dictionary encoding: it halves the cached CSR
-    bytes and the per-iteration explode/shuffle width, which matters
-    because the iteration loop is partly DRAM-bandwidth-bound (this
-    sandbox box's aggregate stream bandwidth does not grow from 8 to 32
-    workers — tools/membw_calibration.py).  At true web scale ids exceed
-    int32 and the flag stays False; a production variant would
-    dictionary-encode vertex ids first."""
-    tgt = F.col("target_vertex").cast("int") if narrow_ids else F.col("target_vertex")
-    aggs = [F.collect_list(tgt).alias("nbrs")]
+    (Int32 neighbor ids were A/B'd and showed no win:
+    BENCH/ab_pr_narrow.json.)"""
+    aggs = [F.collect_list("target_vertex").alias("nbrs")]
     if with_weights:
         aggs.append(F.collect_list("weight").alias("wts"))
     adj = (
@@ -103,13 +93,17 @@ def canonical_edges(edges: DataFrame) -> DataFrame:
     )
 
 
+def symmetrize(pairs: DataFrame) -> DataFrame:
+    """(u, v) pairs ∪ their swaps (v, u) — no dedup."""
+    return pairs.unionAll(pairs.select(F.col("v").alias("u"), F.col("u").alias("v")))
+
+
 def undirected_edges(edges: DataFrame) -> DataFrame:
-    """Distinct symmetric (u, v) pairs, self-loops removed — shared by
-    CC / LPA / triangles, which treat the graph as undirected.
+    """Distinct symmetric (u, v) pairs, self-loops removed (LPA's
+    neighbor table).
 
     Built as canonical pairs ∪ their swaps: the dedup shuffle then runs
     over N canonicalized rows instead of 2N symmetric rows, and the
     input is scanned once instead of twice.  (A canonical pair and its
     swap are distinct rows, so the union needs no further dedup.)"""
-    cp = canonical_edges(edges)
-    return cp.unionAll(cp.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    return symmetrize(canonical_edges(edges))

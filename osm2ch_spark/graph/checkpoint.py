@@ -1,8 +1,9 @@
 """Per-iteration checkpointing + lineage for the iterative algorithms.
 
-North-rule contract: every iteration commits (a) the vertex-state table
-and (b) a lineage row (algorithm, iteration, rows, delta, partitions,
-checkpoint_path) so a run is RESUMABLE mid-iteration.  Parquet stands in
+North-rule contract: every ``checkpoint_every``-th iteration commits (a)
+the vertex-state table and (b) a lineage row (algorithm, iteration,
+rows, delta, partitions, checkpoint_path) so a run is RESUMABLE
+mid-iteration (the commit rule itself lives in loop.py).  Parquet stands in
 for Iceberg at sandbox scale (same layout; swap format= for real runs).
 
 No wall-clock anywhere — restart determinism is part of the contract.
@@ -117,29 +118,9 @@ def localcheckpoint(df: DataFrame, eager: bool = True, level: str = "ser") -> Da
     per iteration.
 
     ``level`` is the call site's default storage level (overridable via
-    ``OSM2CH_CKPT_LEVEL`` — workerenv.ckpt_storage_level), A/B'd per
-    algorithm because their scan patterns differ:
-
-    - PageRank/LPA default ``"ser"`` (serialized heap blocks): the
-      per-iteration rank/label tables are 10^8 rows, scanned once or
-      twice then dropped, and deserialized blocks at that size put
-      full-GC tracing on every iteration's critical path — interleaved
-      A/B on the 174M-edge PageRank: 8→32 speedup 1.86× (deser) → 2.56×
-      (ser), @32 wall 58.4 → 38.7 s.  A ser-vs-disk A/B
-      (BENCH/ab_pr_ckpt_level.json) was ambiguous in a degraded host
-      window (disk won the min, ser 2 of 3 rounds) — ser kept.
-    - Connected components defaults ``"deser"`` since the r6 loop
-      restructuring: the r5 A/B that picked disk
-      (BENCH/ab_cc_ckpt_level.json: disk 119.9 s vs deser 192.2 s)
-      measured the OLD loop whose per-round table was scanned ~3× per
-      iteration at 10^7-row width; the r6 loop checkpoints far narrower
-      tables (canonical seed, window-based small-star, primitive-array
-      explode) and the serialize/write cost now dominates the GC it
-      avoids — re-A/B'd interleaved on the restructured engine
-      (BENCH/ab_cc_ckpt_level_r6.json): deser min 54.0 s vs ser 69.8 s
-      vs disk 74.7 s, with a back-to-back materialize probe showing the
-      mechanism (deser 3.6 s vs ser 14.6 s vs disk 15.5 s for the same
-      5.8M-row table)."""
+    ``OSM2CH_CKPT_LEVEL`` — workerenv.ckpt_storage_level): ``"ser"`` for
+    PageRank and LPA (BENCH/ab_pr_ckpt_level.json), ``"deser"`` for
+    connected components (BENCH/ab_cc_ckpt_level_r6.json)."""
     from osm2ch_spark.workerenv import ckpt_storage_level
 
     return df.localCheckpoint(eager=eager, storageLevel=ckpt_storage_level(level))

@@ -14,13 +14,12 @@ of the component (exact, oracle-comparable).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from osm2ch_spark.graph.adjacency import canonical_edges
-from osm2ch_spark.graph.checkpoint import CheckpointManager, localcheckpoint
+from osm2ch_spark.graph.adjacency import canonical_edges, symmetrize, vertices_table
+from osm2ch_spark.graph.checkpoint import localcheckpoint
+from osm2ch_spark.graph.loop import iterate
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -28,7 +27,7 @@ def _large_star(e: DataFrame) -> DataFrame:
     neighbors to m = min(Γ(u) ∪ {u}).  Join-based (a per-key min + an
     equi-join) — no collect_set arrays, so hub vertices cost O(degree)
     narrow rows instead of one giant list row."""
-    sym = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    sym = symmetrize(e)
     mins = sym.groupBy("u").agg(F.min("v").alias("mv"))
     mins = mins.select("u", F.least("u", "mv").alias("m"))
     out = (
@@ -41,7 +40,7 @@ def _large_star(e: DataFrame) -> DataFrame:
     return out.filter(F.col("u") != F.col("v"))
 
 
-def _small_star(e: DataFrame, dedup: bool = True) -> DataFrame:
+def _small_star(e: DataFrame) -> DataFrame:
     """Canonicalize so u = max: for each u connect all smaller-or-equal
     neighbors (and u itself) to their min.
 
@@ -53,14 +52,7 @@ def _small_star(e: DataFrame, dedup: bool = True) -> DataFrame:
     one pass over one exchange of ``canon`` (guide §2.4), and the
     ``mins`` rows for the union drop out of the same pass with a
     partition-local dedup (no extra shuffle — the window's partitioning
-    already satisfies the aggregate).
-
-    ``dedup=False`` skips the trailing ``distinct`` — the only full-dedup
-    shuffle of a round.  Both star passes are duplicate-insensitive as
-    SET functions (their only aggregate is a per-key min), so a round may
-    emit a multiset and let a later round's distinct restore set
-    semantics; only the signature/convergence check requires a deduped
-    input (see connected_components' OSM2CH_CC_DEDUP_EVERY cadence)."""
+    already satisfies the aggregate)."""
     from pyspark.sql import Window
 
     canon = e.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
@@ -69,8 +61,7 @@ def _small_star(e: DataFrame, dedup: bool = True) -> DataFrame:
     # achieving the min additionally emit the (u, m) self-link that the
     # old shape union'd from the mins table.  (A duplicated (u, m) input
     # row emits the self-link more than once — a multiset difference the
-    # trailing distinct erases; skip-dedup rounds tolerate multisets by
-    # contract, see above.)  The exploded array holds primitive LONGS
+    # trailing distinct erases.)  The exploded array holds primitive LONGS
     # with the shared min carried as a plain column — an array of structs
     # here allocated one object per emitted edge and showed up as ~50 s
     # of GC in the round's Generate stage (guide §5).
@@ -79,7 +70,7 @@ def _small_star(e: DataFrame, dedup: bool = True) -> DataFrame:
     ).otherwise(F.array(F.col("v")))
     out = proj.select(F.explode(firsts).alias("u"), F.col("m").alias("v"))
     out = out.filter(F.col("u") != F.col("v"))
-    return out.distinct() if dedup else out
+    return out.distinct()
 
 
 def _signature(e: DataFrame):
@@ -105,76 +96,43 @@ def connected_components(
     resume: bool = False,
 ) -> DataFrame:
     """Returns (vertex, component) for every vertex of the edge table."""
-    spark = edges.sparkSession
-    # single-use (the final left join below) — no persist: caching a
-    # 10^8-row vertex set bought nothing and competed with execution
-    # memory for the whole loop (guide §5, caching)
-    verts = (
-        edges.select(F.col("source_vertex").alias("vertex"))
-        .unionAll(edges.select(F.col("target_vertex").alias("vertex")))
-        .distinct()
-    )
-    ckpt = CheckpointManager(checkpoint_dir, "connected_components", every=checkpoint_every)
 
-    start_iter = 0
-    e = None
-    if resume and checkpoint_dir:
-        got = ckpt.resume(spark)
-        if got is not None:
-            e, start_iter = got
-    if e is None:
+    def init() -> DataFrame:
         # Seed with the CANONICAL pair set, not the symmetric one:
-        # _large_star symmetrizes its input internally (sym = e ∪ swap(e)),
-        # so a symmetric seed made round 1 process every edge TWICE and the
-        # initial checkpoint carry 2× the rows.  sym(canonical) ==
-        # sym(undirected) — the fixed point is identical.  eager=False: the
-        # signature aggregate right below is the first action and
-        # materializes the blocks — an eager checkpoint here paid a
-        # separate full pass.
-        e = localcheckpoint(canonical_edges(edges), eager=False, level="deser")
+        # _large_star symmetrizes its input internally, so a symmetric
+        # seed made round 1 process every edge TWICE and the initial
+        # checkpoint carry 2× the rows.  sym(canonical) == sym(undirected)
+        # — the fixed point is identical.  eager=False: the signature
+        # aggregate in begin() is the first action and materializes the
+        # blocks — an eager checkpoint here paid a separate full pass.
+        return localcheckpoint(canonical_edges(edges), eager=False, level="deser")
 
-    # Dedup cadence (OSM2CH_CC_DEDUP_EVERY, default 1 = every round):
-    # small_star's distinct is the only full-dedup shuffle per round, and
-    # both star passes are duplicate-insensitive set functions, so the
-    # distinct (and with it the signature/convergence check) can run every
-    # k-th round, letting intermediate rounds emit multisets.  With
-    # cadence k the loop compares the deduped set at iteration it against
-    # the one at it-k: the star rounds are deterministic set functions
-    # whose potential strictly decreases off the fixed point (Kiveris et
-    # al. §4), so R^k(S) == S implies S IS the fixed point — no period-k
-    # cycles exist, and the exact anti-join confirm still guards the
-    # signature against hash collisions.  Commit rounds force a dedup so
-    # checkpointed state and lineage row counts stay set-accurate.
-    dedup_every = max(1, int(os.environ.get("OSM2CH_CC_DEDUP_EVERY", "1")))
-    sig = _signature(e)
-    ref_e = e  # last DEDUPED edge set — the signature's subject
-    for it in range(start_iter + 1, max_iter + 1):
-        do_dedup = (it % dedup_every == 0) or (bool(checkpoint_dir) and ckpt.should_commit(it))
-        # eager=False: on dedup rounds the signature aggregate below
-        # materializes it; on skip rounds the NEXT round's signature
-        # materializes the (short) two-round chain in one job
-        new_e = localcheckpoint(
-            _small_star(_large_star(e), dedup=do_dedup), eager=False, level="deser"
-        )
-        if do_dedup:
+    def begin(e: DataFrame):
+        sig = _signature(e)
+
+        def step(e: DataFrame):
+            nonlocal sig
+            # eager=False: the signature aggregate below materializes it
+            new_e = localcheckpoint(_small_star(_large_star(e)), eager=False, level="deser")
             new_sig = _signature(new_e)
-            if checkpoint_dir and ckpt.should_commit(it):
-                new_e = ckpt.commit(new_e, it, float(abs(new_sig[0] - sig[0])), new_sig[0])
-            if new_sig == sig:
-                # signature says converged — confirm EXACTLY before
-                # breaking (counts already equal, so one-sided anti-join
-                # against the previous deduped set suffices)
-                if new_e.join(ref_e, ["u", "v"], "left_anti").isEmpty():
-                    e = new_e
-                    break
+            # a matching signature is confirmed EXACTLY (counts already
+            # equal, so a one-sided anti-join against the previous set
+            # suffices)
+            converged = new_sig == sig and new_e.join(e, ["u", "v"], "left_anti").isEmpty()
+            delta = float(abs(new_sig[0] - sig[0]))
             sig = new_sig
-            ref_e = new_e
-        e = new_e
+            return new_e, delta, new_sig[0], converged
 
+        return step
+
+    e = iterate(edges.sparkSession, "connected_components", init, begin, max_iter,
+                checkpoint_dir, checkpoint_every, resume)
     # at convergence every edge points a vertex at its component root
     roots = e.select(F.col("u").alias("vertex"), F.col("v").alias("component"))
     roots = roots.groupBy("vertex").agg(F.min("component").alias("component"))
-    out = verts.join(roots, "vertex", "left").select(
+    # single-use vertex set — no persist: caching a 10^8-row vertex set
+    # bought nothing and competed with execution memory for the whole loop
+    verts = vertices_table(edges).select("vertex")
+    return verts.join(roots, "vertex", "left").select(
         "vertex", F.coalesce("component", F.col("vertex")).alias("component")
     )
-    return out

@@ -16,7 +16,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osm2ch_spark.graph.adjacency import undirected_edges
-from osm2ch_spark.graph.checkpoint import CheckpointManager, localcheckpoint
+from osm2ch_spark.graph.checkpoint import localcheckpoint
+from osm2ch_spark.graph.loop import iterate
 
 
 def label_propagation(
@@ -29,19 +30,12 @@ def label_propagation(
     """Returns (vertex, label) at convergence (or max_iter)."""
     e = undirected_edges(edges)
     e = localcheckpoint(e)
-    ckpt = CheckpointManager(checkpoint_dir, "label_propagation", every=checkpoint_every)
 
-    start_iter = 0
-    labels = None
-    if resume and checkpoint_dir:
-        got = ckpt.resume(e.sparkSession)
-        if got is not None:
-            labels, start_iter = got
-    if labels is None:
+    def init() -> DataFrame:
         verts = e.select(F.col("u").alias("vertex")).distinct()
-        labels = localcheckpoint(verts.select("vertex", F.col("vertex").alias("label")))
+        return localcheckpoint(verts.select("vertex", F.col("vertex").alias("label")))
 
-    for it in range(start_iter + 1, max_iter + 1):
+    def step(labels: DataFrame):
         nbr_labels = e.join(
             labels.select(F.col("vertex").alias("v"), "label"), "v", "inner"
         ).select(F.col("u").alias("vertex"), "label")
@@ -54,17 +48,20 @@ def label_propagation(
             labels.join(best, "vertex", "left")
             .select("vertex", F.coalesce("new_label", "label").alias("label"))
         )
-        # eager=False: the changed-count below materializes it
+        # eager=False: the sync aggregate below materializes it
         new_labels = localcheckpoint(new_labels, eager=False)
-        changed = (
+        # one sync job: changed labels AND the row count for the lineage
+        # (both tables hold exactly one row per vertex)
+        sync = (
             new_labels.alias("n")
             .join(labels.select("vertex", F.col("label").alias("old")), "vertex")
-            .filter(F.col("label") != F.col("old"))
-            .count()
+            .agg(
+                F.count(F.lit(1)).alias("rows"),
+                F.count(F.when(F.col("label") != F.col("old"), 1)).alias("changed"),
+            )
+            .collect()[0]
         )
-        labels = new_labels
-        if checkpoint_dir and (ckpt.should_commit(it) or changed == 0):
-            labels = ckpt.commit(labels, it, float(changed), labels.count())
-        if changed == 0:
-            break
-    return labels
+        return new_labels, float(sync["changed"]), sync["rows"], sync["changed"] == 0
+
+    return iterate(e.sparkSession, "label_propagation", init, lambda labels: step, max_iter,
+                   checkpoint_dir, checkpoint_every, resume)

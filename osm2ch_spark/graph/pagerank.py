@@ -11,9 +11,9 @@ Per iteration (one lazy plan + one driver sync):
   update:   (1-d)/n + d·(contrib + dangling_mass/n)
   sync:     ONE aggregate job computes L1 delta AND next dangling mass.
 
-Lineage growth is cut every iteration with localCheckpoint; durable
-parquet checkpoints + lineage rows every ``checkpoint_every`` iterations
-make the run resumable (checkpoint.py).
+Lineage growth is cut every iteration with localCheckpoint; the loop
+itself (resume, commit every ``checkpoint_every`` iterations, stop) is
+graph/loop.py.
 """
 
 from __future__ import annotations
@@ -22,7 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osm2ch_spark.graph.adjacency import build_adjacency, vertices_table
-from osm2ch_spark.graph.checkpoint import CheckpointManager, localcheckpoint
+from osm2ch_spark.graph.checkpoint import localcheckpoint
+from osm2ch_spark.graph.loop import iterate
 
 
 def pagerank(
@@ -34,125 +35,99 @@ def pagerank(
     checkpoint_every: int = 5,
     num_buckets: int | None = None,
     resume: bool = False,
-    narrow_ids: bool | None = None,
 ) -> DataFrame:
     """Returns (vertex BIGINT, rank DOUBLE).  ``edges`` is the engine's
-    directed edge table (source_vertex, target_vertex, weight, one_way).
-
-    ``narrow_ids``: int32 CSR neighbor ids.  Default OFF — an
-    interleaved A/B on the 174M-edge graph (BENCH/ab_pr_narrow.json)
-    showed no win at local[32]: the implicit int→long cast on the
-    exploded contribution stream costs what the narrower shuffle saves,
-    consistent with the iteration being only ~10% DRAM-stream-bound
-    (BENCH/scaling.json stream_bound_fraction_per_query).  Kept as an
-    explicit knob; True requires every vertex id to fit int32."""
+    directed edge table (source_vertex, target_vertex, weight, one_way)."""
     spark = edges.sparkSession
     if num_buckets is None:
         num_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     verts = vertices_table(edges).persist()
-    # one job: vertex count + id range (the range guards the optional
-    # narrow_ids path — int32 neighbors are only legal when every id fits)
-    vstats = verts.agg(
-        F.count("vertex").alias("n"),
-        F.min("vertex").alias("vmin"),
-        F.max("vertex").alias("vmax"),
-    ).collect()[0]
-    n = vstats["n"]
+    n = verts.count()
     if n == 0:
         return spark.createDataFrame([], "vertex long, rank double")
-    ids_fit_int32 = -(2**31) <= vstats["vmin"] and vstats["vmax"] < 2**31
-    narrow = bool(narrow_ids) and ids_fit_int32
     # with_weights=False: PageRank is unweighted (networkx semantics);
     # skipping the weights collect_list halves the CSR build's heap
     # churn and the cached shard size
-    adj = build_adjacency(edges, num_buckets=num_buckets, with_weights=False,
-                          narrow_ids=narrow).persist()
-
-    ckpt = CheckpointManager(checkpoint_dir, "pagerank", every=checkpoint_every)
-
-    start_iter = 0
-    ranks = None
-    if resume and checkpoint_dir:
-        got = ckpt.resume(spark)
-        if got is not None:
-            ranks, start_iter = got
-    if ranks is None:
-        ranks = verts.select("vertex", "has_out", (F.lit(1.0) / n).alias("rank"))
-        # eager=False: the dangling aggregate right below is the first
-        # action and materializes the blocks — one pass, not two
-        ranks = localcheckpoint(ranks, eager=False)
-
-    # dangling mass of the CURRENT ranks (needed before first update)
-    dangling = ranks.filter(~F.col("has_out")).agg(F.sum("rank")).collect()[0][0] or 0.0
-
+    adj = build_adjacency(edges, num_buckets=num_buckets, with_weights=False).persist()
     base = (1.0 - damping) / n
-    for it in range(start_iter + 1, max_iter + 1):
-        contribs = (
-            adj.join(
-                ranks.select("vertex", "rank").hint("shuffle_hash"),
-                adj.source_vertex == F.col("vertex"),
-                "inner",
-            )
-            .select(
-                F.explode("neighbors").alias("tgt"),
-                (F.col("rank") / F.col("out_degree")).alias("c"),
-            )
-            .groupBy("tgt")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        # shuffle_hash hint: verts and contribs have similar sizes, so
-        # the planner's "much smaller side" rule falls back to a
-        # sort-merge join that re-SORTS both 14M-row sides every
-        # iteration; a shuffled hash join streams them instead.
-        new_ranks = (
-            verts.join(contribs.hint("shuffle_hash"), verts.vertex == contribs.tgt, "left")
-            .select(
-                "vertex",
-                "has_out",
-                (
-                    F.lit(base)
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.lit(dangling / n))
-                ).alias("rank"),
-            )
-        )
-        # eager=False: the dangling/delta sync right below is the first
-        # action and materializes the checkpoint — one job per iteration
-        new_ranks = localcheckpoint(new_ranks, eager=False)
 
-        if tol > 0.0:
-            # one sync job: L1 delta + next dangling mass
-            stats = (
-                new_ranks.alias("n")
-                .join(
-                    ranks.select("vertex", F.col("rank").alias("old")).hint("shuffle_hash").alias("o"),
-                    "vertex",
+    def init() -> DataFrame:
+        # eager=False: the dangling aggregate in begin() is the first
+        # action and materializes the blocks — one pass, not two
+        return localcheckpoint(
+            verts.select("vertex", "has_out", (F.lit(1.0) / n).alias("rank")), eager=False
+        )
+
+    def begin(ranks: DataFrame):
+        # dangling mass of the CURRENT ranks (needed before first update)
+        dangling = ranks.filter(~F.col("has_out")).agg(F.sum("rank")).collect()[0][0] or 0.0
+
+        def step(ranks: DataFrame):
+            nonlocal dangling
+            contribs = (
+                adj.join(
+                    ranks.select("vertex", "rank").hint("shuffle_hash"),
+                    adj.source_vertex == F.col("vertex"),
+                    "inner",
                 )
-                .agg(
-                    F.sum(F.abs(F.col("rank") - F.col("old"))).alias("delta"),
-                    F.sum(F.when(~F.col("has_out"), F.col("rank")).otherwise(0.0)).alias("dang"),
+                .select(
+                    F.explode("neighbors").alias("tgt"),
+                    (F.col("rank") / F.col("out_degree")).alias("c"),
                 )
-                .collect()[0]
+                .groupBy("tgt")
+                .agg(F.sum("c").alias("contrib"))
             )
-            delta = stats["delta"] or 0.0
-            dangling = stats["dang"] or 0.0
-        else:
+            # shuffle_hash hint: verts and contribs have similar sizes, so
+            # the planner's "much smaller side" rule falls back to a
+            # sort-merge join that re-SORTS both 14M-row sides every
+            # iteration; a shuffled hash join streams them instead.
+            new_ranks = (
+                verts.join(contribs.hint("shuffle_hash"), verts.vertex == contribs.tgt, "left")
+                .select(
+                    "vertex",
+                    "has_out",
+                    (
+                        F.lit(base)
+                        + F.lit(damping)
+                        * (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.lit(dangling / n))
+                    ).alias("rank"),
+                )
+            )
+            # eager=False: the dangling/delta sync right below is the first
+            # action and materializes the checkpoint — one job per iteration
+            new_ranks = localcheckpoint(new_ranks, eager=False)
+
+            if tol > 0.0:
+                # one sync job: L1 delta + next dangling mass
+                stats = (
+                    new_ranks.alias("n")
+                    .join(
+                        ranks.select("vertex", F.col("rank").alias("old")).hint("shuffle_hash").alias("o"),
+                        "vertex",
+                    )
+                    .agg(
+                        F.sum(F.abs(F.col("rank") - F.col("old"))).alias("delta"),
+                        F.sum(F.when(~F.col("has_out"), F.col("rank")).otherwise(0.0)).alias("dang"),
+                    )
+                    .collect()[0]
+                )
+                delta = stats["delta"] or 0.0
+                dangling = stats["dang"] or 0.0
+                return new_ranks, float(delta), n, delta <= n * tol
             # fixed-iteration mode: no convergence sync needed — the
             # checkpoint materialization is the only action; dangling mass
-            # comes from a one-row agg over the (cached) new ranks.
-            delta = float("inf")
+            # comes from a one-row agg over the (cached) new ranks.  The
+            # lineage row records delta -1.0 (not measured).
             dangling = (
-                new_ranks.filter(~F.col("has_out")).agg(F.sum("rank")).collect()[0][0]
-                or 0.0
+                new_ranks.filter(~F.col("has_out")).agg(F.sum("rank")).collect()[0][0] or 0.0
             )
-        ranks = new_ranks
-        if ckpt.should_commit(it) or delta <= n * tol or it == max_iter:
-            if checkpoint_dir:
-                ranks = ckpt.commit(ranks, it, float(delta) if delta != float("inf") else -1.0, n)
-        if delta <= n * tol:
-            break
+            return new_ranks, -1.0, n, False
 
+        return step
+
+    ranks = iterate(spark, "pagerank", init, begin, max_iter,
+                    checkpoint_dir, checkpoint_every, resume)
     adj.unpersist()
     verts.unpersist()
     return ranks.select("vertex", "rank")

@@ -16,13 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from osm2ch_spark.graph.adjacency import canonical_edges
-
-
-def _canonical(edges: DataFrame) -> DataFrame:
-    # canonical_edges is already the distinct u < v pair set; the old
-    # symmetric-then-filter shape deduped 2N rows to keep N (guide §2.3)
-    return canonical_edges(edges)
+from osm2ch_spark.graph.adjacency import canonical_edges, symmetrize, vertices_table
 
 
 def _oriented(canon: DataFrame) -> DataFrame:
@@ -30,8 +24,7 @@ def _oriented(canon: DataFrame) -> DataFrame:
     Output (x, y, ky) where ky = struct(degree(y), y) is y's order key
     (carried so the wedge stage can order out-neighbor pairs without
     another join)."""
-    sym = canon.unionAll(canon.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
+    deg = symmetrize(canon).groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     e = (
         canon.join(deg.withColumnRenamed("u", "_k").withColumnRenamed("d", "du"),
                    F.col("u") == F.col("_k")).drop("_k")
@@ -69,7 +62,7 @@ def triangles_df(edges: DataFrame) -> DataFrame:
     # at full parallelism with no further exchange.
     n_part = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     oe = materialize_df(
-        _oriented(_canonical(edges)).repartition(n_part, F.col("x"))
+        _oriented(canonical_edges(edges)).repartition(n_part, F.col("x"))
     )
     e1 = oe.select("x", F.col("y").alias("y1"), F.col("ky").alias("k1"))
     e2 = oe.select("x", F.col("y").alias("y2"), F.col("ky").alias("k2"))
@@ -101,11 +94,7 @@ def triangles_per_vertex(edges: DataFrame) -> DataFrame:
     # the triangle set feeds three union branches (a/b/c) — barrier it so
     # the wedge join runs once, not three times
     t = materialize_df(triangles_df(edges))
-    verts = (
-        edges.select(F.col("source_vertex").alias("vertex"))
-        .unionAll(edges.select(F.col("target_vertex").alias("vertex")))
-        .distinct()
-    )
+    verts = vertices_table(edges).select("vertex")
     hits = (
         t.select(F.col("a").alias("vertex"))
         .unionAll(t.select(F.col("b").alias("vertex")))

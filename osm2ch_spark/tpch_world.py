@@ -147,15 +147,15 @@ def tpch_ways(spark, sf_dir) -> DataFrame:
     # removes one full Window (exchange + sort over every lineitem row)
     # from every world build (guide §2.4).
     #
-    # The sort key is PACKED into one long (ln<<32 | pk) instead of a
+    # The sort key is PACKED into one long (ln<<60 | pk) instead of a
     # two-field struct: numeric order of the packed value equals (ln, pk)
-    # order because both fields are non-negative and l_partkey < 2^32
-    # (TPC-H partkey tops out at 200k·SF — the bound holds to SF ~21000),
-    # so the collect_list buffers and the array_sort run over primitive
-    # longs instead of one struct object per way-node reference — the
+    # order because both fields are non-negative, TPC-H caps
+    # l_linenumber at 7 (3 bits) and l_partkey < 2^60, so the
+    # collect_list buffers and the array_sort run over primitive longs
+    # instead of one struct object per way-node reference — the
     # aggregate was the world build's worst GC stage (guide §5).
     li = T(spark, sf_dir, "lineitem")
-    packed = F.shiftleft(F.col("l_linenumber").cast("long"), 32) + F.col(
+    packed = F.shiftleft(F.col("l_linenumber").cast("long"), 60) + F.col(
         "l_partkey"
     ).cast("long")
     nodes_arr = (
@@ -164,7 +164,7 @@ def tpch_ways(spark, sf_dir) -> DataFrame:
         .select(
             "way_id",
             F.transform(
-                "pn", lambda s: s.bitwiseAND(F.lit(0xFFFFFFFF))
+                "pn", lambda s: s.bitwiseAND(F.lit((1 << 60) - 1))
             ).alias("nodes"),
         )
     )

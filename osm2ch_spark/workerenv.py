@@ -10,13 +10,11 @@ to the kernel between batches, every batch re-faults them — a cost that
 does NOT shrink with more cores (fault handling contends), i.e. a direct
 scaling killer.
 
-Two-part fix:
-  * ``get_spark`` exports MALLOC_MMAP_THRESHOLD_/MALLOC_TRIM_THRESHOLD_
-    so glibc serves large allocations from the retained brk heap instead
-    of transient mmaps and never trims it back;
-  * ``prewarm()`` (called once per worker process from the hot UDFs)
-    faults a block of heap in up front, so steady-state batches run
-    fault-free.
+The fix: ``get_spark`` exports MALLOC_MMAP_THRESHOLD_/
+MALLOC_TRIM_THRESHOLD_ so glibc serves large allocations from the
+retained brk heap instead of transient mmaps and never trims it back;
+the first real batch then warms the heap and later batches run
+fault-free.
 """
 
 from __future__ import annotations
@@ -94,27 +92,3 @@ def materialize_df(df):
     lock-wait floor)."""
     return df.localCheckpoint(eager=True, storageLevel=ckpt_storage_level("disk"))
 
-
-_PREWARMED = False
-
-
-def prewarm(mb: int = 32) -> None:
-    """Fault ``mb`` MB of heap into this process once and release it back
-    to the (never-trimmed) allocator, so subsequent batch allocations
-    reuse already-mapped pages.  No-op after the first call.
-
-    NOT called from the hot UDFs: with PYTHONMALLOC=malloc + the retained
-    heap, the first real batch self-warms and every later batch runs
-    fault-free; an explicit 128 MB pre-touch across 64 concurrent cold
-    workers was itself a fault storm on this host (~1500 task-seconds of
-    blocked executor threads in the first UDF stage).  Kept for tools
-    that want to warm a single worker deliberately."""
-    global _PREWARMED
-    if _PREWARMED:
-        return
-    _PREWARMED = True
-    # bytearray zero-fills via memset — touches every page.  Must stay
-    # below MALLOC_MMAP_THRESHOLD_ so it comes from (and returns to) the
-    # brk heap rather than a transient mmap.
-    block = bytearray(mb << 20)
-    del block

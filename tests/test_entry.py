@@ -79,3 +79,26 @@ def test_cli_sink_autoswitch():
     assert pick_distributed(5_000_001, False, False, 5_000_000) is True
     assert pick_distributed(5_000_001, True, False, 5_000_000) is False  # forced parity
     assert pick_distributed(100, False, True, 5_000_000) is True  # forced dist
+
+
+def test_tpch_ways_wide_partkeys(spark, tmp_path):
+    """The packed (l_linenumber, l_partkey) sort key keeps node ids and
+    their order exact for partkeys at and above 2^32."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from osm2ch_spark import tpch_world as W
+
+    big = 2**32
+    pq.write_table(pa.table({"o_orderkey": pa.array([1, 2], pa.int64())}),
+                   str(tmp_path / "orders.parquet"))
+    lines = [(1, 2, big + 5), (1, 1, 2 * big), (1, 1, big + 1), (1, 3, 7),
+             (1, 7, 2**59 + 3), (2, 1, 2**40)]
+    pq.write_table(pa.table({
+        "l_orderkey": pa.array([o for o, _, _ in lines], pa.int64()),
+        "l_linenumber": pa.array([ln for _, ln, _ in lines], pa.int32()),
+        "l_partkey": pa.array([pk for _, _, pk in lines], pa.int64()),
+    }), str(tmp_path / "lineitem.parquet"))
+    got = {r["way_id"]: list(r["nodes"]) for r in W.tpch_ways(spark, str(tmp_path)).collect()}
+    # (l_linenumber, l_partkey) order
+    assert got == {1: [big + 1, 2 * big, big + 5, 7, 2**59 + 3], 2: [2**40]}

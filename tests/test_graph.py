@@ -64,21 +64,6 @@ def test_connected_components_exact(spark, key, graphs):
     assert got == oracle
 
 
-@pytest.mark.parametrize("key", GRAPH_KEYS)
-def test_connected_components_dedup_cadence(spark, key, graphs, monkeypatch):
-    """OSM2CH_CC_DEDUP_EVERY=2 (distinct + convergence check every other
-    round) must be result-identical to the every-round default — the star
-    passes are duplicate-insensitive set functions."""
-    monkeypatch.setenv("OSM2CH_CC_DEDUP_EVERY", "2")
-    edges = graphs[key]
-    oracle = O.cc_oracle(edges)
-    got = {
-        r["vertex"]: r["component"]
-        for r in connected_components(edge_df(spark, edges)).collect()
-    }
-    assert got == oracle
-
-
 @pytest.mark.parametrize("key", ["multi_component", "expanded_fixture"])
 def test_label_propagation_exact(spark, key, graphs):
     edges = graphs[key]
@@ -112,7 +97,8 @@ def test_triangles_skewed_hub(spark):
     with low vertex id would pay C(200,2)=19900 wedges under
     id-orientation; oriented low-degree→high-degree the hub receives the
     edges instead and generates ZERO wedges.  Count stays exact."""
-    from osm2ch_spark.graph.triangles import _canonical, _oriented
+    from osm2ch_spark.graph.adjacency import canonical_edges
+    from osm2ch_spark.graph.triangles import _oriented
 
     hub = 0  # lowest id — the id-orientation worst case
     spokes = list(range(1, 201))
@@ -122,7 +108,7 @@ def test_triangles_skewed_hub(spark):
     assert O.triangles_oracle(edges) == 3
     df = edge_df(spark, edges)
     assert triangle_count(df) == 3
-    oe = _oriented(_canonical(df))
+    oe = _oriented(canonical_edges(df))
     out_deg = {
         r["x"]: r["cnt"]
         for r in oe.groupBy("x").count().withColumnRenamed("count", "cnt").collect()
@@ -161,19 +147,28 @@ def test_pagerank_resume(spark, tmp_path, graphs):
     assert np.allclose(g, r, atol=1e-12)
 
 
-def test_lineage_rows(spark, tmp_path, graphs):
+@pytest.mark.parametrize("algo", [pagerank, connected_components, label_propagation],
+                         ids=lambda f: f.__name__)
+def test_lineage_rows(spark, tmp_path, graphs, algo):
+    """One commit rule for every loop: commit iff the iteration is a
+    multiple of checkpoint_every — neither convergence nor max_iter
+    forces a commit."""
     import json
     import os
 
     ck = str(tmp_path / "ck2")
-    pagerank(edge_df(spark, graphs["multi_component"]), max_iter=4, tol=0.0,
-             checkpoint_dir=ck, checkpoint_every=2)
+    kwargs = {"tol": 0.0} if algo is pagerank else {}
+    algo(edge_df(spark, graphs["multi_component"]), max_iter=5,
+         checkpoint_dir=ck, checkpoint_every=2, **kwargs)
     lineage = [
         json.loads(l)
-        for l in open(os.path.join(ck, "pagerank", "lineage.json"))
+        for l in open(os.path.join(ck, algo.__name__, "lineage.json"))
         if l.strip()
     ]
-    assert [m["iteration"] for m in lineage] == [2, 4]
+    iters = [m["iteration"] for m in lineage]
+    assert iters and all(it % 2 == 0 for it in iters)
+    if algo is pagerank:
+        assert iters == [2, 4]
     for m in lineage:
         assert m["rows"] > 0 and m["checkpoint_path"] and "delta" in m and m["partitions"] > 0
         # per-partition lineage (north rule): one entry per committed
