@@ -99,7 +99,7 @@ def phases(spark):
     settle(spark)
     p.run("ways (memo materialize)", lambda: W._memo(spark, SF_DIR, "ways", lambda: W.tpch_ways(spark, SF_DIR)).count())
     p.run("edges (split_ways W1+ID1)", lambda: W.tpch_edges(spark, SF_DIR).count())
-    p.run("expanded (J3+ID2, memo)", lambda: W._memo(spark, SF_DIR, "expanded", lambda: W.tpch_expanded(spark, SF_DIR)).count())
+    p.run("expanded (J3+ID2, memo)", lambda: W.tpch_expanded(spark, SF_DIR).count())
     p.run("final (rules+anti-joins+splice)", lambda: W.tpch_final_expanded(spark, SF_DIR).count())
 
     print("== connected_components phase split ==", flush=True)

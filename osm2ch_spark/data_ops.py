@@ -359,10 +359,10 @@ def q_embedding_cosine_topk(spark, sf):
 _ANN_BITS = 8
 _ANN_TABLES = 8
 # Per-(table, bucket) corpus cap: the constant-in-N bound on the
-# candidate join (see q_ann_topk).  tools/ann_sweep.py sweeps this and
-# _ANN_TABLES to map the recall-vs-candidate-volume operating curve;
-# the DuckDB oracle CTEs pin the DEFAULT (8 tables, cap 128), so the
-# oracle gate always checks the shipped configuration.
+# candidate join (see q_ann_topk).  Together with _ANN_TABLES it sets
+# the recall-vs-candidate-volume trade-off; the DuckDB oracle CTEs pin
+# the DEFAULT (8 tables, cap 128), so the oracle gate always checks the
+# shipped configuration.
 _ANN_CAP = 128
 
 
@@ -498,7 +498,7 @@ def _ann_candidates(spark, sf):
     """Distinct (query_id, neighbor_id) ANN candidate pairs: (table,
     bucket)-equality join of Hamming≤2 query probes against the
     per-bucket-capped corpus — the part of ann_topk whose volume the
-    cap bounds (swept by tools/ann_sweep.py)."""
+    cap bounds."""
     b = q_ann_lsh_buckets(spark, sf)
     # corpus side: cap every (t, bucket) to its _ANN_CAP lowest vec_ids
     w_cap = Window.partitionBy("t", "bucket").orderBy("vec_id")

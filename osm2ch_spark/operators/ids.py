@@ -1,20 +1,25 @@
 """Deterministic gapless 1-based sequential IDs in a distributed engine.
 
 The reference assigns edge IDs with a driver-side counter in scan order
-(`/root/reference/osm_loader.go:228-271`, invariant EdgeID == index+1 at
+(`osm_loader.go:228-271`, invariant EdgeID == index+1 at
 `osm_loader.go:305`) and expanded-edge IDs the same way
 (`osm_loader.go:313-314`).  No Spark built-in produces gapless
-input-ordered IDs across partitions.
+input-ordered IDs across partitions.  Both numberings (ID1 edges, ID2
+expanded edges) go through the one two-level prefix sum here:
 
-This implementation is a two-level prefix sum:
+  id = offset(group)
+       + SUM(weight) OVER (PARTITION BY group ORDER BY key
+                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+       + 1
 
-  id = offset(group) + row_number() OVER (PARTITION BY group ORDER BY key)
-
-where ``group`` is a caller-chosen column set that (a) is CONTIGUOUS in
-the global order — all rows of a group sort together — and (b) has
-bounded per-group size (here: one OSM source file, (repo, path)).  The
-offsets are an exclusive running sum over the per-group counts table
-(one row per FILE — metadata-scale), joined back on the group key.
+i.e. each row owns the block of ``weight`` consecutive ids starting at
+``id`` (ID1: weight 1 per edge, so ``id = offset + row_number``; ID2:
+weight = surviving continuations of the source edge, each pair adding
+its explode position).  ``group`` is a caller-chosen column set that
+(a) is CONTIGUOUS in the global order — all rows of a group sort
+together — and (b) has bounded per-group size.  The offsets are an
+exclusive running sum over the per-group weight totals (one row per
+group — metadata-scale), broadcast back on the group key.
 
 The ranked table feeds two branches (the data branch and the counts
 branch).  With ``materialize=True`` it is eagerly local-checkpointed:
@@ -33,9 +38,10 @@ cleaner when the result DataFrame is dropped — no cache-manager entry
 outlives the caller (the round-3 cache-lifetime leak).
 
 Scale notes: the data-level windows are partitioned (parallel); only the
-counts prefix-sum is a global window over per-group rows.  At 10^12
-files that one window shards hierarchically (prefix-sum tree over
-(repo-bucket, repo, path)); at sandbox scale a single level suffices.
+counts prefix-sum is a global window over per-group rows, and the
+broadcast offsets table grows with the group count.  At 10^12 files that
+one window shards hierarchically (prefix-sum tree over (repo-bucket,
+repo, path)); at sandbox scale a single level suffices.
 """
 
 from __future__ import annotations
@@ -49,22 +55,19 @@ def with_sequential_id(
     group_cols: list[str],
     order_cols: list[str],
     id_col: str,
-    broadcast_offsets: bool = True,
+    weight: str | None = None,
     materialize: bool = False,
 ) -> DataFrame:
-    """Add ``id_col`` = 1-based gapless rank under the total order
-    ``(group_cols, order_cols)``, which must be duplicate-free.  Groups
-    must be contiguous in that total order (true for per-file grouping
-    when the order key starts with the file identity or with ids assigned
-    in file order).
+    """Add ``id_col`` = the first id of the row's block under the total
+    order ``(group_cols, order_cols)``, which must be duplicate-free:
+    the group offset plus the sum of ``weight`` over the group's earlier
+    rows plus 1.  Groups must be contiguous in that total order (true
+    for per-file grouping when the order key starts with the file
+    identity or with ids assigned in file order).
 
-    ``broadcast_offsets``: True (default) asserts the caller's group key
-    is METADATA-scale (one row per source file here) and broadcasts the
-    offsets table — see the comment below for why the hint is load-
-    bearing.  A caller numbering by a HIGH-CARDINALITY group key must
-    pass False: broadcasting would collect every group onto the driver
-    (the plain shuffled join it falls back to is the correct plan
-    there).
+    ``weight``: name of a non-negative integer column; None counts every
+    row once (a 1-based gapless rank).  A row of weight 0 still gets a
+    value but owns no ids.
 
     ``materialize``: True eagerly local-checkpoints the ranked table so
     the input pipeline runs exactly once (module docstring) — the right
@@ -72,7 +75,12 @@ def with_sequential_id(
     keeps the result fully lazy; the counts branch then re-executes the
     input subtree (fine for small/oracle-scale inputs).
     """
-    w_local = Window.partitionBy(*group_cols).orderBy(*[F.col(c) for c in order_cols])
+    wt = F.col(weight) if weight else F.lit(1)
+    w_before = (
+        Window.partitionBy(*group_cols)
+        .orderBy(*[F.col(c) for c in order_cols])
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
     if materialize:
         # explicit-N repartition on the window's partition keys: satisfies
         # the window's required distribution (no second exchange) AND pins
@@ -82,22 +90,18 @@ def with_sequential_id(
         # every later phase that scans the materialized table.
         n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         df = df.repartition(n, *[F.col(c) for c in group_cols])
-    ranked = df.withColumn("_rk", F.row_number().over(w_local))
+    ranked = df.withColumn("_rk", F.coalesce(F.sum(wt).over(w_before), F.lit(0)) + 1)
     if materialize:
         from osm2ch_spark.workerenv import materialize_df
 
         ranked = materialize_df(ranked)
 
-    # per-group counts = max local rank — derived from the ranked table
-    # (not from df) so the materialized path never re-runs the input.
-    counts = ranked.groupBy(*group_cols).agg(F.max("_rk").alias("_grp_cnt"))
+    # per-group totals — derived from the ranked table (not from df) so
+    # the materialized path never re-runs the input.
+    counts = ranked.groupBy(*group_cols).agg(F.sum(wt).alias("_grp_cnt"))
     w_off = (
         Window.orderBy(*[F.col(c) for c in group_cols])
         .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.select(
-        *group_cols,
-        F.coalesce(F.sum("_grp_cnt").over(w_off), F.lit(0)).alias("_grp_off"),
     )
     # BROADCAST the offsets: one row per group (metadata-scale by the
     # contract above).  Catalyst cannot estimate a window-over-aggregate
@@ -105,11 +109,14 @@ def with_sequential_id(
     # data table by the group key a second time — measured 2× the whole
     # stage's CPU on the 21M-row expansion table.  (At 10^12-file scale
     # the offsets table itself shards hierarchically — module docstring.)
-    if broadcast_offsets:
-        offsets = F.broadcast(offsets)
-    out = (
+    offsets = F.broadcast(
+        counts.select(
+            *group_cols,
+            F.coalesce(F.sum("_grp_cnt").over(w_off), F.lit(0)).alias("_grp_off"),
+        )
+    )
+    return (
         ranked.join(offsets, list(group_cols), "inner")
         .withColumn(id_col, (F.col("_grp_off") + F.col("_rk")).cast("long"))
         .drop("_grp_off", "_rk")
     )
-    return out

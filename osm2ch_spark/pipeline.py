@@ -342,13 +342,9 @@ def expand_edges(edges: DataFrame, materialize: bool = False) -> DataFrame:
     measured 5.6–6.8 s of wall per headline query in the window sort
     stage alone at sf0.1).
 
-    IDs: expanded_id = group offset (broadcast two-level prefix sum over
-    floor(src_edge_id/2048) buckets — contiguous under the global
-    (src_edge_id, dst_edge_id) order since edge ids are globally
-    sequential) + per-source-edge running sum of surviving-candidate
-    counts within the bucket (a window over EDGE-level rows) + the
-    0-based posexplode position + 1.  Value-identical to ranking the
-    exploded pairs directly.
+    IDs: expanded_id = the source edge's block start from
+    :func:`with_sequential_id` (weight = surviving continuations) + the
+    posexplode position.
 
     Skew note: hub intersections make the per-node candidate arrays
     long, but a node's array length is bounded by node degree (not by
@@ -361,8 +357,6 @@ def expand_edges(edges: DataFrame, materialize: bool = False) -> DataFrame:
     attached, filters applied, ranks assigned) is eagerly checkpointed;
     consumers re-run only the broadcast probe + explode per action.
     """
-    from pyspark.sql import Window
-
     # candidate struct: dst edge id FIRST so array_sort orders by it
     # (ids are unique — later fields never break ties)
     cand = edges.groupBy(F.col("source_node").alias("_node")).agg(
@@ -428,42 +422,21 @@ def expand_edges(edges: DataFrame, materialize: bool = False) -> DataFrame:
             ),
         ),
     )
+    # 2048-edge buckets: contiguous in the global (src_edge_id,
+    # dst_edge_id) order because edge ids are globally sequential
     j = j.withColumn("_idb", F.floor(F.col("src_edge_id") / 2048))
     j = j.withColumn("_n", F.size("_cands"))
-    if materialize:
-        # pin the partition count before the ranking window — same
-        # rationale as with_sequential_id (AQE would coalesce below
-        # target parallelism and the checkpoint would freeze that)
-        n_part = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        j = j.repartition(n_part, F.col("_idb"))
-    w_src = (
-        Window.partitionBy("_idb")
-        .orderBy("src_edge_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    ranked = j.withColumn("_src_off", F.coalesce(F.sum("_n").over(w_src), F.lit(0)))
-    if materialize:
-        from osm2ch_spark.workerenv import materialize_df
-
-        ranked = materialize_df(ranked)
-    # bucket offsets: exclusive running sum over per-bucket pair counts
-    # (metadata-scale — one row per 2048 source edges), broadcast back
-    counts = ranked.groupBy("_idb").agg(F.sum("_n").alias("_grp_cnt"))
-    w_off = Window.orderBy("_idb").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = F.broadcast(
-        counts.select(
-            "_idb", F.coalesce(F.sum("_grp_cnt").over(w_off), F.lit(0)).alias("_grp_off")
-        )
+    ranked = with_sequential_id(
+        j, ["_idb"], ["src_edge_id"], "_base", weight="_n", materialize=materialize
     )
     out = (
-        ranked.join(offsets, "_idb")
-        .select(
+        ranked.select(
             F.col("src_edge_id"),
             "source_way",
             "src_source_node",
             "src_target_node",
             "one_way",
-            (F.col("_grp_off") + F.col("_src_off") + F.lit(1)).alias("_base"),
+            "_base",
             "src_cost",
             F.posexplode("_cands").alias("_pos", "_c"),
         )

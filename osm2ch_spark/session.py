@@ -52,13 +52,37 @@ def _default_local_dir() -> str:
     return tempfile.gettempdir()
 
 
+def _default_driver_memory() -> str:
+    """Default heap: half of what this host can hand out — MemAvailable
+    or the cgroup memory limit, whichever is lower — capped at 48 GB and
+    at least 1 GB, so a default session starts on whatever host it gets
+    (the heap is pre-sized with -Xms below)."""
+    avail = []
+    try:
+        with open("/proc/meminfo") as f:
+            avail += [int(l.split()[1]) * 1024 for l in f if l.startswith("MemAvailable:")]
+    except OSError:
+        pass
+    for path in ("/sys/fs/cgroup/memory.max",  # cgroup v2; "max" = no limit
+                 "/sys/fs/cgroup/memory/memory.limit_in_bytes"):  # cgroup v1
+        try:
+            with open(path) as f:
+                v = f.read().strip()
+        except OSError:
+            continue
+        if v.isdigit():
+            avail.append(int(v))
+    half_mb = min(avail, default=96 * 1024**3) // 2 // 1024**2
+    return f"{max(1024, min(48 * 1024, half_mb))}m"
+
+
 def get_spark(
     app_name: str = "osm2ch_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     # pyarrow's default jemalloc pool madvise-purges aggressively; with
     # many concurrent Python workers the resulting kernel-side page churn
@@ -80,8 +104,10 @@ def get_spark(
         os.environ.get("SPARK_SHUFFLE_PARTITIONS", str(max(cpus, 8)))
     )
     extra_conf = dict(extra_conf or {})
-    mem = extra_conf.pop(
-        "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g")
+    mem = (
+        extra_conf.pop("spark.driver.memory", None)
+        or os.environ.get("SPARK_DRIVER_MEMORY")
+        or _default_driver_memory()
     )
     # OSM2CH_AQE=0 disables adaptive execution for A/B runs: every AQE
     # stage materialization is a separate job with driver round-trips

@@ -195,8 +195,17 @@ def tpch_edges(spark, sf_dir) -> DataFrame:
 
 
 def tpch_expanded(spark, sf_dir) -> DataFrame:
-    """Real pipeline J3+ID2 (pre-restriction, pre-splice)."""
-    return pipeline.expand_edges(tpch_edges(spark, sf_dir), materialize=True)
+    """Real pipeline J3+ID2 (pre-restriction, pre-splice), memoized per
+    session+sf over the memoized edges.  materialize=False on both:
+    split_ways_to_edges / expand_edges each barrier their ranked table
+    internally (see _memo)."""
+    edges = _memo(spark, sf_dir, "edges",
+                  lambda: tpch_edges(spark, sf_dir), materialize=False)
+    return _memo(
+        spark, sf_dir, "expanded",
+        lambda: pipeline.expand_edges(edges, materialize=True),
+        materialize=False,
+    )
 
 
 def tpch_rules(expanded: DataFrame) -> DataFrame:
@@ -230,13 +239,8 @@ def tpch_rules(expanded: DataFrame) -> DataFrame:
 def tpch_final_expanded(spark, sf_dir) -> DataFrame:
     """Expansion + both restriction passes (J4 then J5)."""
     ways = tpch_ways(spark, sf_dir)
-    # expanded feeds three subtrees (base + rule derivation + anti-joins);
-    # materialize=False — expand_edges(materialize=True) already barriers
-    # its ranked table, so the memo'd layer is ckpt-scan + broadcast probe
-    expanded = _memo(
-        spark, sf_dir, "expanded",
-        lambda: tpch_expanded(spark, sf_dir), materialize=False,
-    )
+    # expanded feeds three subtrees (base + rule derivation + anti-joins)
+    expanded = tpch_expanded(spark, sf_dir)
     rules = tpch_rules(expanded)
     seen = pipeline.ways_seen(ways)
     out = pipeline.apply_no_restrictions(expanded, rules, seen)
@@ -248,15 +252,9 @@ def tpch_spliced(spark, sf_dir) -> DataFrame:
     reference output row (cmd/osm2ch/main.go:139-150) over the projected
     world."""
     ways = tpch_ways(spark, sf_dir)
-    # materialize=False on both: split_ways_to_edges / expand_edges each
-    # barrier their ranked table internally (see _memo)
     edges = _memo(spark, sf_dir, "edges",
                   lambda: tpch_edges(spark, sf_dir), materialize=False)
-    expanded = _memo(
-        spark, sf_dir, "expanded2",
-        lambda: pipeline.expand_edges(edges, materialize=True),
-        materialize=False,
-    )
+    expanded = tpch_expanded(spark, sf_dir)
     rules = tpch_rules(expanded)
     seen = pipeline.ways_seen(ways)
     out = pipeline.apply_no_restrictions(expanded, rules, seen)

@@ -102,3 +102,20 @@ def test_tpch_ways_wide_partkeys(spark, tmp_path):
     got = {r["way_id"]: list(r["nodes"]) for r in W.tpch_ways(spark, str(tmp_path)).collect()}
     # (l_linenumber, l_partkey) order
     assert got == {1: [big + 1, 2 * big, big + 5, 7, 2**59 + 3], 2: [2**40]}
+
+
+def test_default_session_starts():
+    """get_spark() with no cores/heap/JVM overrides sizes itself from the
+    host (affinity cores, half the available memory) and runs a job."""
+    import os
+    import subprocess
+    import sys
+
+    env = {k: v for k, v in os.environ.items()
+           if k not in ("SPARK_GRAFT_CPUS", "SPARK_DRIVER_MEMORY", "SPARK_DRIVER_JAVA_OPTS")}
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = "from osm2ch_spark import get_spark; print(get_spark().range(10).count())"
+    r = subprocess.run([sys.executable, "-c", code], cwd=repo, env=env,
+                       capture_output=True, text=True, timeout=180)
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert r.stdout.split()[-1] == "10"

@@ -113,6 +113,37 @@ def test_multi_file_order(spark):
     ]
 
 
+@pytest.mark.parametrize("materialize", [False, True])
+def test_with_sequential_id_weighted(spark, materialize):
+    """Each row's id is its group offset + the weight sum of the earlier
+    rows of its group + 1, i.e. a prefix sum over the (group, key) order;
+    a weight-1 column numbers exactly like weight=None (1..N)."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from osm2ch_spark.operators.ids import with_sequential_id
+
+    rng = random.Random(7)
+    rows = [(g, k, rng.choice([0, 0, 1, 2, 5])) for g in (3, 1, 2, 0) for k in range(25)]
+    rng.shuffle(rows)
+    df = spark.createDataFrame(rows, "g long, k long, w int").repartition(5)
+    assert 0 in {w for _, _, w in rows}
+    expected, nxt = {}, 1
+    for g, k, w in sorted(rows):
+        expected[(g, k)] = nxt
+        nxt += w
+
+    def ids(weight):
+        out = with_sequential_id(df.withColumn("one", F.lit(1)), ["g"], ["k"], "id",
+                                 weight=weight, materialize=materialize)
+        return {(r["g"], r["k"]): r["id"] for r in out.collect()}
+
+    assert ids("w") == expected
+    ranks = {gk: i for i, gk in enumerate(sorted(expected), start=1)}
+    assert ids("one") == ids(None) == ranks
+
+
 def ref_vertices_csv(exp_rows):
     """Reference vertex-CSV semantics (cmd/osm2ch/main.go:165-187):
     first-occurrence order over (expanded_id, source-then-target);

@@ -188,13 +188,14 @@ def test_no_cache_entries_leaked(spark):
     assert cm.isEmpty(), "pipeline left entries in the SQL cache manager"
 
 
-def test_sequential_id_offsets_broadcast(spark):
+@pytest.mark.parametrize("build", [W.tpch_edges, W.tpch_expanded], ids=["ID1", "ID2"])
+def test_sequential_id_offsets_broadcast(spark, build):
     """The gapless-ID offsets join must broadcast (a sort-merge join here
     re-sorts the full data table by the group key — measured 2x stage
-    CPU on the expansion table)."""
-    edges = W.tpch_edges(spark, SF)
-    p = plan_of(edges)
-    assert "BroadcastHashJoin" in p
+    CPU on the expansion table).  Both numberings are materialized, so
+    the offsets join is the only join left in the plan."""
+    p = plan_of(build(spark, SF))
+    assert "BroadcastHashJoin" in p and "SortMergeJoin" not in p
 
 
 def test_pagerank_iteration_join_not_smj(spark):

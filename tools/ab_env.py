@@ -2,8 +2,9 @@
 
 VERDICT r4 items 2/5/6 all reduce to "alternate one env knob across
 interleaved rounds on a drifting host and report per-value minima with
-bracketing raw-CPU calibrations" — this tool is that protocol, factored
-out of tools/ab_cc.py (which hard-coded the preferSortMergeJoin flag).
+bracketing raw-CPU calibrations" — this tool is that protocol, for any
+env knob (the preferSortMergeJoin verdict it generalizes is in
+BENCH/ab_cc.json).
 
 Usage:
     python tools/ab_env.py --var OSM2CH_CKPT_LEVEL --values ser,deser,disk \
