@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from osm2ch_spark.graph.adjacency import build_adjacency, vertices_table
 from osm2ch_spark.graph.checkpoint import localcheckpoint
 from osm2ch_spark.graph.loop import iterate
+from osm2ch_spark.session import shuffle_partitions
 
 
 def pagerank(
@@ -40,7 +41,7 @@ def pagerank(
     directed edge table (source_vertex, target_vertex, weight, one_way)."""
     spark = edges.sparkSession
     if num_buckets is None:
-        num_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        num_buckets = shuffle_partitions(spark)
 
     verts = vertices_table(edges).persist()
     n = verts.count()

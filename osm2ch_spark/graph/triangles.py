@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osm2ch_spark.graph.adjacency import canonical_edges, symmetrize, vertices_table
+from osm2ch_spark.session import shuffle_partitions
 
 
 def _oriented(canon: DataFrame) -> DataFrame:
@@ -60,7 +61,7 @@ def triangles_df(edges: DataFrame) -> DataFrame:
     # same serialization with_sequential_id guards against) — and
     # hash(x) partitioning lets both wedge sides join partition-locally
     # at full parallelism with no further exchange.
-    n_part = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n_part = shuffle_partitions(edges.sparkSession)
     oe = materialize_df(
         _oriented(canonical_edges(edges)).repartition(n_part, F.col("x"))
     )

@@ -49,6 +49,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from osm2ch_spark.session import shuffle_partitions
+
 
 def with_sequential_id(
     df: DataFrame,
@@ -88,7 +90,7 @@ def with_sequential_id(
         # coalesce the planner-inserted exchange below target parallelism
         # (observed 16 partitions feeding 32 cores), under-parallelizing
         # every later phase that scans the materialized table.
-        n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        n = shuffle_partitions(df.sparkSession)
         df = df.repartition(n, *[F.col(c) for c in group_cols])
     ranked = df.withColumn("_rk", F.coalesce(F.sum(wt).over(w_before), F.lit(0)) + 1)
     if materialize:

@@ -38,6 +38,7 @@ from pyspark.sql.types import (
 
 from osm2ch_spark import geom
 from osm2ch_spark.operators.ids import with_sequential_id
+from osm2ch_spark.session import shuffle_partitions
 from osm2ch_spark.sources import parse as P
 
 # "no" / "only" restriction families — osm_loader.go:351, :393
@@ -123,7 +124,7 @@ def split_ways_to_edges(
     # allocation-free.  (repo, path, seq) is the way's identity; pos
     # orders its nodes; the Arrow pass re-derives the way boundaries from
     # key changes and carries split ways across batch edges.
-    n_part = int(ways.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n_part = shuffle_partitions(ways.sparkSession)
     flat = wn.repartition(
         n_part, F.col("repo"), F.col("path"), F.col("seq")
     ).sortWithinPartitions("repo", "path", "seq", "pos")
@@ -685,7 +686,7 @@ def build_expanded(source: DataFrame, entity: str = P.DEFAULT_ENTITY,
     # per-file line blow-up over the full shuffle-partition width before
     # the checkpoint pins it (the hash key is unique per line — even
     # balance at any partition count).
-    n_part = int(source.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n_part = shuffle_partitions(source.sparkSession)
     from osm2ch_spark.workerenv import materialize_df
 
     slim = materialize_df(

@@ -10,24 +10,44 @@ cluster via ``spark-submit --py-files``.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
 import shutil
 import tempfile
 
 from pyspark.sql import SparkSession
 
+# the directory holding the ``osm2ch_spark`` package
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def make_pyfiles_zip(out_dir: str | None = None) -> str:
     """Zip this package for ``spark-submit --py-files`` / addPyFile.
 
-    Returns the zip path.  Deterministic content (the package source);
-    written to a temp dir by default.
+    Returns the zip path.  Deterministic content (the package source).
+    Without ``out_dir`` the zip is built once per process in a temp dir
+    that is removed at interpreter exit.
     """
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    out_dir = out_dir or tempfile.mkdtemp(prefix="osm2ch_spark_pyfiles_")
+    if out_dir is None:
+        return _process_pyfiles_zip()
     base = os.path.join(out_dir, "osm2ch_spark")
     # zip root must contain the package directory itself
-    return shutil.make_archive(base, "zip", os.path.dirname(pkg_dir), "osm2ch_spark")
+    return shutil.make_archive(base, "zip", _ROOT, "osm2ch_spark")
+
+
+@functools.cache
+def _process_pyfiles_zip() -> str:
+    tmp = tempfile.mkdtemp(prefix="osm2ch_spark_pyfiles_")
+    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    return make_pyfiles_zip(tmp)
+
+
+def shuffle_partitions(spark) -> int:
+    """``spark.sql.shuffle.partitions`` as an int; the default
+    parallelism when the value is not numeric (e.g. ``"auto"``)."""
+    value = spark.conf.get("spark.sql.shuffle.partitions")
+    return int(value) if value.isdigit() else spark.sparkContext.defaultParallelism
 
 
 def _default_local_dir() -> str:
@@ -109,17 +129,12 @@ def get_spark(
         or os.environ.get("SPARK_DRIVER_MEMORY")
         or _default_driver_memory()
     )
-    # OSM2CH_AQE=0 disables adaptive execution for A/B runs: every AQE
-    # stage materialization is a separate job with driver round-trips
-    # (~34 stage jobs on the flagship pipeline — a fixed ~10 s serial
-    # term, perf_notes_r04 §5), and with shuffle partitions pinned the
-    # runtime re-planning may not pay for itself.  Default stays ON.
-    aqe = os.environ.get("OSM2CH_AQE", "1") != "0"
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        # AQE: runtime coalescing, skew-join splitting, join re-planning.
-        .config("spark.sql.adaptive.enabled", str(aqe).lower())
+        # AQE: runtime coalescing, skew-join splitting, join re-planning
+        # (always on: BENCH/ab_aqe_perfbench.json).
+        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -198,6 +213,15 @@ def get_spark(
             ),
         )
     )
+    if master.startswith("local"):
+        # fork Python workers from a daemon that has preloaded the UDF
+        # stack (pydaemon.py).  It imports the engine before any task
+        # ships it, so the package must be importable from the JVM's cwd;
+        # exported before the JVM starts, like MALLOC_ENV.
+        paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+        if _ROOT not in paths:
+            os.environ["PYTHONPATH"] = os.pathsep.join(paths + [_ROOT])
+        b = b.config("spark.python.daemon.module", "osm2ch_spark.pydaemon")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

@@ -10,11 +10,11 @@ wall time.
 
 Knobs:
   --shuffle 64,192      pinned shuffle-partition count (wave granularity)
-  --env NAME=v1,v2      any env var read by the engine (e.g. OSM2CH_AQE=1,0)
+  --env NAME=v1,v2      any env var read by the engine (e.g. OSM2CH_CKPT_LEVEL=disk,ser)
 
 Usage:
   python tools/ab_scaling.py --shuffle 64,192 --rounds 2 --out BENCH/ab_waves.json
-  python tools/ab_scaling.py --env OSM2CH_AQE=1,0 --rounds 2 --out BENCH/ab_aqe.json
+  python tools/ab_scaling.py --env OSM2CH_CKPT_LEVEL=disk,ser --rounds 2 --out BENCH/ab_ckpt.json
 """
 
 from __future__ import annotations
@@ -24,6 +24,7 @@ import os
 import statistics
 import subprocess
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -73,8 +74,9 @@ def run_worker(cpus: int, shuffle: int | None, env_kv: tuple[str, str] | None,
             return json.loads(line[-1][len("BENCH_RESULT "):])
         # persist the FULL transcript (the stderr tail alone is usually
         # pure shutdown noise) so a failed multi-round A/B is diagnosable
-        fail_path = f"/tmp/ab_scaling_fail_cpus{cpus}_attempt{attempt}.log"
-        with open(fail_path, "w") as f:
+        fd, fail_path = tempfile.mkstemp(
+            prefix=f"ab_scaling_fail_cpus{cpus}_attempt{attempt}_", suffix=".log")
+        with os.fdopen(fd, "w") as f:
             f.write(p.stdout + "\n===== STDERR =====\n" + p.stderr)
         print(f"WARN: worker cpus={cpus} attempt {attempt} failed; "
               f"full transcript at {fail_path}", file=sys.stderr)
