@@ -1,27 +1,25 @@
-"""Benchmark harness (driver contract + scaling mode).
+"""Headline benchmark.
 
-Default: run the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]; print ONE JSON line
+Runs the headline queries at $SPARK_GRAFT_SF_DIR (default: ``SF_DIR``
+below) on local[$SPARK_GRAFT_CPUS] (default: the CPUs in this process's
+affinity mask); prints ONE JSON line
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
---scaling: run the same job in two subprocesses at local[8] and
-local[32] on the same input and report throughput at both plus the
-scaling efficiency (the sandbox proxy for N vs 4N executors —
-BASELINE.md); writes BENCH/BASELINE.md.
+Per-layer timings, A/B pairs and N-vs-4N scaling are measured with
+``perfbench/run.py`` (see README.md, "Scaling").
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 # warmup runs use the small sibling sf dir of SF_DIR (overridable) so the
 # harness works on any testdata layout, not just /root/testdata
 WARMUP_SF_DIR = os.environ.get(
@@ -80,24 +78,6 @@ def headline_queries(sf_dir=None):
         connected_components(edges).count()
         return edges.count()
 
-    def q_edge_pipeline_big(spark):
-        # scaling workload for the flagship parse→split→expand path over a
-        # multi-FILE world (the realistic 100-TB shape — thousands of
-        # independent source files, per-file ID groups), sized so
-        # per-stage compute dominates scheduling latency
-        src = spark.read.parquet(big_source_path(spark, sf_dir))
-        return pipeline.build_expanded(src, strict=False).count()
-
-    def q_pagerank_big(spark):
-        # scaling workload: per-iteration compute dominates scheduling
-        # latency (the sf0.1 graph alone is latency-bound); measures the
-        # adjacency build + 3 power iterations over a 127M-edge table —
-        # the north rule's "PageRank iterations/sec, edges/sec" path.
-        big = spark.read.parquet(big_edges_path(spark, sf_dir))
-        n_edges = big.count()
-        pagerank(big, max_iter=3, tol=0.0).count()
-        return n_edges * 3
-
     def q_triangles(spark):
         return triangle_count(W.tpch_edge_graph(spark, sf_dir))
 
@@ -113,10 +93,8 @@ def headline_queries(sf_dir=None):
 
     return {
         "edge_pipeline": q_edge_pipeline,
-        "edge_pipeline_big": q_edge_pipeline_big,
         "osm_parse_pipeline": q_osm_parse_pipeline,
         "pagerank5": q_pagerank,
-        "pagerank3_big": q_pagerank_big,
         "connected_components": q_connected_components,
         "triangles": q_triangles,
         "dedup_minhash": q_dedup_minhash,
@@ -124,142 +102,37 @@ def headline_queries(sf_dir=None):
     }
 
 
-# the driver's default per-round bench set (pagerank3_big is scaling-only)
+# the per-round bench set: every headline query, in run order
 DEFAULT_QUERIES = (
     "edge_pipeline", "osm_parse_pipeline", "pagerank5",
     "connected_components", "triangles", "dedup_minhash", "cosine_topk",
 )
 
 
-# Scaling set: the flagship parse→split→expand pipeline over a MULTI-FILE
-# world and the replicated-graph PageRank — both sized so per-stage compute
-# dominates scheduling latency (the single-file sf0.1 edge_pipeline is
-# ~90 stages × 0.5s, i.e. it measures scheduler latency, not scaling).
-SCALING_QUERIES = ("edge_pipeline_big", "pagerank3_big")
-
-
-# Version token for the pre-materialized /tmp inputs: bump when fixtures
-# or the input shape change, so stale caches can't be silently benched.
-INPUTS_VERSION = "v4"
-
-
-def big_source_path(spark, sf_dir):
-    """Deterministic 2048-file source table (16 files at warmup scale),
-    materialized to parquet once — never inside a timed region.
-
-    Sizing history: the scaling measurement must sit in the compute-
-    dominated regime.  v3 (768 files, grid=24) was sized for the round-3
-    engine; after round 4 removed the cache-lock waits and the Python
-    allocator/page-fault overheads (~10× on the UDF passes), that input
-    finished in ~22 s at local[8] — smaller than the pipeline's ~8-10 s
-    fixed stage-chain latency, so the ratio measured latency again.  v4
-    (2048 files, grid=40 → ~83 ways / 13k expanded rows per file, ~30M
-    expanded rows total) restores per-stage compute ≫ scheduling floor at
-    both parallelism levels."""
-    from osm2ch_spark import fixtures
-
-    n_files = 2048 if _sf_of(sf_dir) >= 0.1 else 16
-    path = f"/tmp/bench_big_source_{INPUTS_VERSION}_{n_files}"
-    if not os.path.exists(path + "/_SUCCESS"):
-        fixtures.synth_source(spark, n_files=n_files, grid=40).write.mode(
-            "overwrite"
-        ).parquet(path)
-    return path
-
-
-def big_edges_path(spark, sf_dir):
-    """Deterministic replicated line graph (127M edges at sf0.1),
-    materialized to parquet once per sf — never inside a timed region
-    (parquet, not heap cache: cached blocks would starve execution memory
-    for the aggregation-heavy iterations)."""
-    from pyspark.sql import functions as F
-
-    from osm2ch_spark import tpch_world as W
-
-    path = f"/tmp/bench_big_edges_{INPUTS_VERSION}_sf{_sf_of(sf_dir)}"
-    if not os.path.exists(path + "/_SUCCESS"):
-        e = W.tpch_expanded(spark, sf_dir).select(
-            F.col("src_edge_id").alias("s"), F.col("dst_edge_id").alias("t")
-        )
-        big = (
-            e.crossJoin(spark.range(6))
-            .select(
-                (F.col("s") + F.col("id") * 10_000_000).alias("source_vertex"),
-                (F.col("t") + F.col("id") * 10_000_000).alias("target_vertex"),
-            )
-            .withColumn("weight", F.lit(1.0))
-            .withColumn("one_way", F.lit(False))
-        )
-        big.write.mode("overwrite").parquet(path)
-        spark.catalog.clearCache()
-    return path
-
-
-def prepare_big_inputs():
-    """Materialize every scaling input up front (separate session), so no
-    worker's timed rep ever pays a one-time parquet write."""
-    from osm2ch_spark import get_spark
-
-    spark = get_spark(app_name="bench-prepare", master=f"local[{CPUS}]")
-    spark.sparkContext.setLogLevel("ERROR")
-    for sf in (WARMUP_SF_DIR, SF_DIR):
-        big_source_path(spark, sf)
-        big_edges_path(spark, sf)
-    spark.stop()
-
-
-def prepare_big_inputs_subprocess():
-    """Run prepare in a CHILD process: a pyspark gateway JVM lives until
-    its Python process exits (spark.stop() does not kill it), and with
-    -Xms + AlwaysPreTouch a lingering 48g prepare JVM in the protocol
-    parent starves the 80g worker JVMs (observed gateway OOM-exit)."""
-    p = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), "--prepare"],
-        capture_output=True, text=True,
-    )
-    if p.returncode != 0:
-        print(p.stdout[-2000:], p.stderr[-2000:], file=sys.stderr)
-        sys.exit(1)
-
-
-def run_once(cpus: int, names=None, reps: int = 1, shuffle_partitions: int | None = None,
-             warm_big: bool = False) -> dict:
+def run_once(cpus: int, reps: int = 1) -> dict:
     """Run the headline queries; with reps>1 keep the per-query MIN
-    (steady-state — this sandbox VM has large first-touch costs that are
-    not a property of the plan).
-
-    ``shuffle_partitions``: the scaling mode pins this to the SAME value
-    at both parallelism levels — on a real cluster you scale executors,
-    not the partition count, and a plan that changes shape between the
-    two runs would measure Catalyst differences, not scaling."""
+    (steady-state — first-touch costs are not a property of the plan)."""
     from osm2ch_spark import get_spark
 
     spark = get_spark(
         app_name=f"bench-{cpus}",
         master=f"local[{cpus}]",
-        shuffle_partitions=shuffle_partitions or max(cpus, 8),
+        shuffle_partitions=max(cpus, 8),
     )
     spark.sparkContext.setLogLevel("ERROR")
     # warmup: run the same paths at sf0.01 untimed — absorbs JIT, heap
     # page-faulting, and Python-worker spawn so timings measure the plan,
     # not first-touch costs.
-    for name, fn in headline_queries(WARMUP_SF_DIR).items():
-        if names is None or name in names:
-            fn(spark)
-    out = {"queries": {}, "rows": {}}
+    for fn in headline_queries(WARMUP_SF_DIR).values():
+        fn(spark)
     qs = headline_queries()
-    if names is not None:
-        qs = {k: v for k, v in qs.items() if k in names}
+
     def settle_heap():
         """Drop the previous pass's checkpoint blocks and collect its
-        garbage before a timed rep: the big queries leave ~10^8 row
-        objects behind, and without this the NEXT rep's first full GC
-        inherits the entire previous heap (profiled: 5000+ task-seconds
-        of GC inside the first stages of a timed run — a global pause
-        that does not scale with cores and poisons the 8-vs-32 ratio).
-        Two GC cycles: the first enqueues the dropped RDDs' weak refs
-        (ContextCleaner unpersists asynchronously), the second reclaims
-        the freed block memory."""
+        garbage before a timed rep, so the next rep's first full GC does
+        not inherit the previous heap.  Two GC cycles: the first enqueues
+        the dropped RDDs' weak refs (ContextCleaner unpersists
+        asynchronously), the second reclaims the freed block memory."""
         import gc
 
         from osm2ch_spark import tpch_world as W
@@ -272,379 +145,28 @@ def run_once(cpus: int, names=None, reps: int = 1, shuffle_partitions: int | Non
         spark.sparkContext._jvm.System.gc()
         time.sleep(1)
 
-    if warm_big:
-        # fault-warm with ONE untimed pass of the ACTUAL workloads: this
-        # host provisions first-touch pages at ~250 MB/s through the
-        # hypervisor, and the big queries touch tens of GB of heap — a
-        # cold timed run measured 293 s vs 73 s for the identical query
-        # immediately after.  Steady-state (fault-free) throughput is
-        # what a long-running cluster delivers, so the timed reps must
-        # not pay one-time page provisioning.
-        for name, fn in qs.items():
-            spark.catalog.clearCache()
-            fn(spark)
     best: dict[str, float] = {}
     # reps are INTERLEAVED round-robin across queries (q1..qN, q1..qN,
-    # ...) with the per-query MIN kept: this box's effective CPU drifts
-    # ~2x with host-neighbor load over minutes, and interleaving spreads
-    # any drift window across every query instead of poisoning one.
+    # ...) with the per-query MIN kept: interleaving spreads any
+    # host-load drift window across every query instead of poisoning one.
     for _ in range(reps):
         for name, fn in qs.items():
             # drop memoized world tables + any cached plans so every rep
-            # honestly rebuilds from the parquet inputs; settle_heap also
-            # collects the previous pass's garbage so this rep's GC work
-            # is its own
+            # honestly rebuilds from the parquet inputs
             settle_heap()
             t0 = time.perf_counter()
-            rows = fn(spark)
+            fn(spark)
             dt = time.perf_counter() - t0
             best[name] = min(best.get(name, dt), dt)
-            out["rows"][name] = rows
-    for name, b in best.items():
-        out["queries"][name] = round(b, 3)
-    out["total_sec"] = round(sum(best.values()), 3)
     spark.stop()
-    return out
-
-
-def _spin(_):
-    t0 = time.perf_counter()
-    x = 0
-    while time.perf_counter() - t0 < 2.0:
-        for _ in range(10000):
-            x += 1
-    return x
-
-
-def cpu_calibration() -> dict:
-    """Raw-CPU 8→32 speedup of this box — the hardware ceiling that the
-    Spark scaling efficiency is normalized against (vCPUs in this sandbox
-    do not deliver 4x from 8 to 32 even for pure python loops)."""
-    import multiprocessing as mp
-
-    rates = {}
-    for procs in (8, 32):
-        with mp.Pool(procs) as p:
-            rates[procs] = sum(p.map(_spin, range(procs))) / 2.0
-    return {"hw_speedup_8_to_32": round(rates[32] / rates[8], 3)}
-
-
-def _stream(args):
-    """STREAM-like triad over a fresh buffer; returns bytes moved."""
-    mb, secs = args
-    import numpy as np
-
-    n = mb * 1024 * 1024 // 8
-    a, b, c = np.ones(n), np.ones(n), np.zeros(n)
-    c[:] = a  # warm: first-touch pages cost ~100us each on this host
-    t_end = time.perf_counter() + secs
-    passes = 0
-    while time.perf_counter() < t_end:
-        np.add(a, b, out=c)
-        np.add(c, b, out=c)
-        passes += 1
-    return passes * 6 * n * 8
-
-
-def bw_calibration(mb: int = 192, secs: float = 2.0) -> dict:
-    """Aggregate DRAM stream bandwidth at 8 vs 32 concurrent processes.
-
-    This is the OTHER hardware ceiling: ALU spins scale ~4x from 8 to 32
-    on this box, but the shared memory subsystem saturates at ~8 streams
-    (measured aggregate triad throughput DROPS 8→32).  Any phase whose
-    inner loop is a memory stream — shuffle hash aggregation, sorts, GC
-    tracing, Arrow copies, CSR gather — is capped by THIS ratio on one
-    box, while a real N→4N executor cluster scales memory channels with
-    nodes.  A workload with stream-bound fraction f (at the 8-way level)
-    has a single-box ceiling of 1/(f/bw + (1-f)/alu)."""
-    import multiprocessing as mp
-
-    gbps = {}
-    for procs in (8, 32):
-        with mp.Pool(procs) as p:
-            t0 = time.perf_counter()
-            total = sum(p.map(_stream, [(mb, secs)] * procs))
-            gbps[procs] = total / (time.perf_counter() - t0) / 1e9
     return {
-        "bw8_gbps": round(gbps[8], 1),
-        "bw32_gbps": round(gbps[32], 1),
-        "bw_speedup_8_to_32": round(gbps[32] / gbps[8], 3),
+        "queries": {name: round(b, 3) for name, b in best.items()},
+        "total_sec": round(sum(best.values()), 3),
     }
 
 
-def _stream_fraction(speedup: float, bw: float, alu: float) -> float | None:
-    """Solve 1/s = f/bw + (1-f)/alu for f — the fraction of the 8-way
-    wall that is DRAM-stream-bound, implied by the measured speedup and
-    the two measured hardware ceilings.  None if outside [0, 1] (the
-    model can't explain the number: drift, or another bottleneck)."""
-    denom = 1.0 / bw - 1.0 / alu
-    if abs(denom) < 1e-9:
-        return None
-    f = (1.0 / speedup - 1.0 / alu) / denom
-    return round(f, 3) if -0.05 <= f <= 1.05 else None
-
-
-def _write_scaling_md(r: dict) -> None:
-    """BENCH/BASELINE.md — the driver-requested scaling evidence: same job,
-    same input, two parallelism levels, throughput at both + efficiency."""
-    lines = [
-        "# BENCH/BASELINE.md — scaling evidence (N vs 4N parallelism)",
-        "",
-        "Sandbox proxy for the north rule's N→4N executor criterion: the same",
-        "jobs on the same pre-materialized inputs at `local[8]` vs `local[32]`,",
-        "shuffle partitions pinned to 64 at BOTH levels (a real cluster scales",
-        "executors, not the partition count).  This VM's effective CPU drifts",
-        "~2x with host-neighbor load, so the protocol is drift-robust:",
-        f"{r['protocol']}.",
-        "",
-        "| query | local[8] s | local[32] s | speedup | rows/s @8 | rows/s @32 |",
-        "|---|---|---|---|---|---|",
-    ]
-    for q, d in r["per_query"].items():
-        lines.append(
-            f"| {q} | {d['local8_sec']} | {d['local32_sec']} | {d['speedup']} "
-            f"| {d['throughput8_rows_per_sec']:,} | {d['throughput32_rows_per_sec']:,} |"
-        )
-    lines += [
-        "",
-        f"- total: {r['local8_sec']} s → {r['local32_sec']} s, speedup **{r['speedup']}×**",
-        f"- per-round walls: "
-        + "; ".join(
-            f"{q} @8={d['rounds_local8']} @32={d['rounds_local32']}"
-            for q, d in r["per_query"].items()
-        ),
-        f"- hardware ceiling (raw-CPU 8→32 spin), bracketing calibrations: "
-        f"{r['hw_calibrations']} → median {r['hw_speedup_8_to_32']}×",
-        f"- scaling efficiency vs ideal 4×: **{r['scaling_efficiency_vs_4x']}**",
-        f"- scaling efficiency vs the measured hardware ceiling: **{r['scaling_efficiency_vs_hw']}**",
-        "",
-        "## The second hardware ceiling: DRAM bandwidth does not scale 8→32",
-        "",
-        "Aggregate STREAM-triad throughput, measured between rounds "
-        "(`bench.bw_calibration`, 8 vs 32 concurrent processes):",
-        "",
-    ]
-    for c in r.get("bw_calibrations", []):
-        lines.append(f"- {c['bw8_gbps']} GB/s @8 → {c['bw32_gbps']} GB/s @32 "
-                     f"(ratio {c['bw_speedup_8_to_32']}×)")
-    bw = r.get("bw_speedup_8_to_32")
-    if bw is not None:
-        lines += [
-            "",
-            f"Median DRAM ratio **{bw}×** vs ALU ratio "
-            f"**{r['hw_speedup_8_to_32']}×**: this box's memory subsystem",
-            "saturates at ~8 streams — 8→32 workers adds compute but ZERO",
-            "bandwidth.  Every phase whose inner loop is a memory stream",
-            "(shuffle hash-agg, sort, Arrow copies, GC tracing, CSR gather)",
-            "is capped by the DRAM ratio on one box; a real N→4N executor",
-            "cluster scales memory channels with nodes, so this cap is a",
-            "single-box artifact, not a property of the plans.  A workload",
-            "with stream-bound fraction f (of its 8-way wall) has a box",
-            "ceiling of 1/(f/bw + (1−f)/alu).  Solving with the measured",
-            "ceilings, the implied stream-bound fraction per query:",
-            "",
-        ]
-        for q, f_ in r.get("stream_bound_fraction_per_query", {}).items():
-            if f_ is None:
-                lines.append(f"- {q}: outside the two-ceiling model "
-                             "(drift or another bottleneck)")
-            else:
-                ceil = 1.0 / (f_ / bw + (1.0 - f_) / r["hw_speedup_8_to_32"])
-                lines.append(
-                    f"- {q}: f ≈ {f_} → box ceiling ≈ {ceil:.2f}× "
-                    f"(measured {r['per_query'][q]['speedup']}×)")
-        lines += [
-            "",
-            "Independent confirmation that the residual gap is traffic, not",
-            "instructions: narrowing the PageRank CSR neighbor ids from int64",
-            "to int32 (bytes halved, instruction count unchanged) moves the",
-            "@32 wall — see BENCH/ab_pr_narrow.json.",
-        ]
-    lines += [
-        "",
-        "Per-query notes: `edge_pipeline_big` is the flagship parse→split→",
-        "expand pipeline over 2048 independent source files (the realistic",
-        "many-file shape — per-file ID groups, Arrow-vectorized splitting).",
-        "`pagerank3_big` is 3 power iterations over a 174M-edge graph.",
-    ]
-    os.makedirs("BENCH", exist_ok=True)
-    with open("BENCH/BASELINE.md", "w") as f:
-        f.write("\n".join(lines) + "\n")
-
-
 def main():
-    if "--prepare" in sys.argv:
-        prepare_big_inputs()
-        return
-    if "--worker" in sys.argv:
-        cpus = int(sys.argv[sys.argv.index("--worker") + 1])
-        reps = (
-            int(sys.argv[sys.argv.index("--reps") + 1]) if "--reps" in sys.argv else 1
-        )
-        if "--scaling-set" in sys.argv:
-            # --shuffle N overrides the pinned partition count (default 64)
-            # for wave-granularity A/Bs; the scaling protocol itself always
-            # pins the SAME value at both parallelism levels.
-            shuf = (
-                int(sys.argv[sys.argv.index("--shuffle") + 1])
-                if "--shuffle" in sys.argv else 64
-            )
-            # --queries a,b restricts the set (A/B tools target one query
-            # to halve worker cost); default = the full scaling set.
-            names = (
-                tuple(sys.argv[sys.argv.index("--queries") + 1].split(","))
-                if "--queries" in sys.argv else SCALING_QUERIES
-            )
-            print("BENCH_RESULT " + json.dumps(
-                run_once(cpus, names=names, reps=reps,
-                         shuffle_partitions=shuf, warm_big=True)
-            ))
-        else:
-            print("BENCH_RESULT " + json.dumps(run_once(cpus)))
-        return
-
-    if "--scaling" in sys.argv:
-        # This sandbox VM's effective CPU drifts with host-neighbor load
-        # (observed ~2x swings over 15 minutes, enough to flip an
-        # 8-vs-32-core comparison).  The protocol is therefore
-        # drift-robust: inputs are pre-materialized; the 8- and 32-core
-        # workers run INTERLEAVED for several rounds; the per-query wall
-        # at each level is the MIN over rounds; and the raw-CPU hardware
-        # ceiling is calibrated between every round (median used).
-        rounds = int(os.environ.get("SPARK_GRAFT_SCALING_ROUNDS", "3"))
-        prepare_big_inputs_subprocess()
-        # ≥12 bracketing calibrations: the hw ceiling divides the final
-        # efficiency number, and single samples on this drifting host span
-        # 1.4-5.1x — take 3 per bracket and use the median of all.
-        cals = [cpu_calibration()["hw_speedup_8_to_32"] for _ in range(3)]
-        bw_cals = [bw_calibration()]
-        results: dict[int, list] = {8: [], 32: []}
-
-        def wait_for_memory(need_gb: int = 95, timeout_s: int = 120):
-            # back-to-back subprocess JVMs: the previous 80g heap can
-            # still be unwinding when the next -Xms80g JVM starts;
-            # wait for the kernel to actually reclaim it
-            t0 = time.time()
-            while time.time() - t0 < timeout_s:
-                avail = int(
-                    [l for l in open("/proc/meminfo") if l.startswith("MemAvailable")][0].split()[1]
-                ) // (1024 * 1024)
-                if avail >= need_gb:
-                    return
-                time.sleep(2)
-            print(f"WARN: proceeding with only {avail}G available (< {need_gb}G)",
-                  file=sys.stderr)
-
-        for rnd in range(rounds):
-            for cpus in (8, 32):
-                # transient JVM/RPC failures (rare executor shutdown races
-                # on this host) must not void a 40-minute protocol run:
-                # retry the level; the min-over-rounds statistic is
-                # unaffected by a retried sample.  (Raised to 3 attempts
-                # after a degraded-window run lost 3 workers to shuffle-file
-                # FileNotFound races — see BENCH/perf_notes_r05.md.)
-                for attempt in (1, 2, 3):
-                    wait_for_memory()
-                    p = subprocess.run(
-                        [sys.executable, os.path.abspath(__file__),
-                         "--worker", str(cpus), "--scaling-set", "--reps", "1"],
-                        capture_output=True,
-                        text=True,
-                        env={
-                            **os.environ,
-                            "SPARK_GRAFT_CPUS": str(cpus),
-                            "SPARK_DRIVER_MEMORY": os.environ.get("SPARK_DRIVER_MEMORY", "80g"),
-                            # pin GC parallelism to the level's core budget:
-                            # the default scales with the MACHINE's 32 cores,
-                            # which hands the local[8] level ~23 free GC
-                            # threads and distorts the scaling ratio
-                            "SPARK_DRIVER_JAVA_OPTS": (
-                                f"-Xms{os.environ.get('SPARK_DRIVER_MEMORY', '80g')} "
-                                "-XX:+UseParallelGC -XX:+UseTransparentHugePages "
-                                f"-XX:ParallelGCThreads={cpus}"
-                            ),
-                        },
-                    )
-                    line = [l for l in p.stdout.splitlines()
-                            if l.startswith("BENCH_RESULT ")]
-                    if line:
-                        break
-                    print(f"WARN: worker local[{cpus}] round {rnd} attempt "
-                          f"{attempt} produced no result", file=sys.stderr)
-                    # keep the FULL transcript: the tail alone is shutdown
-                    # noise (blockmgr teardown); the primary failure is
-                    # usually thousands of lines earlier
-                    fail_log = f"/tmp/scaling_fail_{cpus}_{rnd}_{attempt}.log"
-                    with open(fail_log, "w") as fl:
-                        fl.write("==== STDOUT ====\n" + p.stdout +
-                                 "\n==== STDERR ====\n" + p.stderr)
-                    print(f"WARN: full worker transcript -> {fail_log}",
-                          file=sys.stderr)
-                    print(p.stdout[-2000:], p.stderr[-2000:], file=sys.stderr)
-                if not line:
-                    sys.exit(1)
-                results[cpus].append(json.loads(line[-1][len("BENCH_RESULT "):]))
-            cals.extend(cpu_calibration()["hw_speedup_8_to_32"] for _ in range(3))
-            bw_cals.append(bw_calibration())
-        hw_speedup = sorted(cals)[len(cals) // 2]
-        bw_ratios = sorted(c["bw_speedup_8_to_32"] for c in bw_cals)
-        bw_speedup = bw_ratios[len(bw_ratios) // 2]
-        best8 = {q: min(r["queries"][q] for r in results[8]) for q in SCALING_QUERIES}
-        best32 = {q: min(r["queries"][q] for r in results[32]) for q in SCALING_QUERIES}
-        t8 = round(sum(best8.values()), 3)
-        t32 = round(sum(best32.values()), 3)
-        speedup = t8 / t32
-        rows = results[32][-1]["rows"]
-        per_query = {
-            q: {
-                "local8_sec": best8[q],
-                "local32_sec": best32[q],
-                "speedup": round(best8[q] / best32[q], 3),
-                "throughput8_rows_per_sec": round(rows[q] / best8[q]),
-                "throughput32_rows_per_sec": round(rows[q] / best32[q]),
-                "rounds_local8": [r["queries"][q] for r in results[8]],
-                "rounds_local32": [r["queries"][q] for r in results[32]],
-            }
-            for q in SCALING_QUERIES
-        }
-        report = {
-            "queries": list(SCALING_QUERIES),
-            "protocol": f"{rounds} interleaved rounds, min per level; "
-                        "inputs pre-materialized; hw ceiling = median of "
-                        f"{len(cals)} bracketing calibrations",
-            "local8_sec": t8,
-            "local32_sec": t32,
-            "speedup": round(speedup, 3),
-            "scaling_efficiency_vs_4x": round(speedup / 4.0, 3),
-            "hw_calibrations": cals,
-            "hw_speedup_8_to_32": round(hw_speedup, 3),
-            "scaling_efficiency_vs_hw": round(speedup / hw_speedup, 3),
-            # the second hardware ceiling: aggregate DRAM stream bandwidth
-            # does not grow 8→32 on this box (memory subsystem saturates
-            # at ~8 streams), so a phase-mix with stream-bound fraction f
-            # cannot exceed 1/(f/bw + (1-f)/alu) here no matter the plan
-            "bw_calibrations": bw_cals,
-            "bw_speedup_8_to_32": round(bw_speedup, 3),
-            "stream_bound_fraction_per_query": {
-                q: _stream_fraction(
-                    per_query[q]["speedup"], bw_speedup, hw_speedup)
-                for q in SCALING_QUERIES
-            },
-            "per_query": per_query,
-            "rows": rows,
-        }
-        print(json.dumps(report, indent=2))
-        os.makedirs("BENCH", exist_ok=True)
-        with open("BENCH/scaling.json", "w") as f:
-            json.dump(report, f, indent=2)
-        _write_scaling_md(report)
-        return
-
-    res = run_once(
-        CPUS,
-        names=DEFAULT_QUERIES,
-        reps=int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2")),
-    )
+    res = run_once(CPUS, reps=int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2")))
     print(
         json.dumps(
             {

@@ -24,10 +24,9 @@ import argparse
 import sys
 import time
 
-DEFAULT_TAGS = (
-    "motorway,primary,primary_link,road,secondary,secondary_link,residential,"
-    "tertiary,tertiary_link,unclassified,trunk,trunk_link,motorway_link"
-)
+from osm2ch_spark.sources import parse as P
+
+DEFAULT_TAGS = ",".join(P.DEFAULT_TAGS)
 
 
 def build_parser() -> argparse.ArgumentParser:

@@ -1,19 +1,22 @@
 """Partitioned CSR-like adjacency shards (SURVEY.md §2.9).
 
-The edge table (source_vertex, target_vertex, weight, one_way) is
-materialized once into bucketed neighbor-list shards:
+The edge table (source_vertex, target_vertex, ...) is grouped once into
+chunked neighbor-list shards:
 
-  (src_bucket INT, source_vertex BIGINT, chunk INT,
-   neighbors ARRAY<BIGINT>, weights ARRAY<DOUBLE>, out_degree BIGINT)
+  (source_vertex BIGINT, chunk INT, neighbors ARRAY<BIGINT>, out_degree BIGINT)
 
-- ``src_bucket = pmod(hash(source_vertex), num_buckets)`` gives every
-  iteration the same co-location, so the per-iteration rank⋈adjacency
-  join shuffles only the (small) rank side once the shards are cached.
+- The shards are hash-partitioned by ``source_vertex`` into
+  ``num_buckets`` partitions, so every PageRank iteration's
+  rank⋈adjacency join finds the persisted side already co-located and
+  shuffles only the (small) rank side.
 - Hub vertices (motorway junctions) produce huge neighbor lists; lists
   are CHUNKED to ≤ max_chunk so no single task/row explodes — this is
   the skew treatment for the explode stage (the groupBy(target).sum
   side is already skew-safe: partial map-side aggregation bounds any
   target's reduce input by the partition count).
+- Edge weights are not carried: PageRank, the only consumer, is
+  unweighted (networkx semantics).  (Int32 neighbor ids were A/B'd and
+  showed no win: BENCH/ab_pr_narrow.json.)
 """
 
 from __future__ import annotations
@@ -22,41 +25,25 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def build_adjacency(edges: DataFrame, num_buckets: int = 32, max_chunk: int = 4096,
-                    with_weights: bool = True) -> DataFrame:
-    """Group the edge table into chunked, bucketed adjacency shards.
-
-    ``with_weights=False`` omits the weights lists: unweighted consumers
-    (PageRank) never read them, and the second collect_list both doubles
-    the aggregate's heap footprint (the CSR build is the engine's most
-    GC-heavy stage at 10^8 edges) and doubles the cached shard bytes.
-    (Int32 neighbor ids were A/B'd and showed no win:
-    BENCH/ab_pr_narrow.json.)"""
-    aggs = [F.collect_list("target_vertex").alias("nbrs")]
-    if with_weights:
-        aggs.append(F.collect_list("weight").alias("wts"))
+def build_adjacency(edges: DataFrame, num_buckets: int = 32, max_chunk: int = 4096) -> DataFrame:
+    """Group the edge table into chunked adjacency shards (layout above)."""
     adj = (
         edges.groupBy("source_vertex")
-        .agg(*aggs)
+        .agg(F.collect_list("target_vertex").alias("nbrs"))
         .withColumn("out_degree", F.size("nbrs").cast("long"))
     )
     # chunk hub lists: slice(nbrs, k*max_chunk+1, max_chunk) per chunk k
     n_chunks = F.ceil(F.col("out_degree") / F.lit(max_chunk)).cast("int")
     adj = adj.withColumn("chunk", F.explode(F.sequence(F.lit(0), F.greatest(n_chunks - 1, F.lit(0)))))
-    cols = [
-        F.pmod(F.hash("source_vertex"), F.lit(num_buckets)).alias("src_bucket"),
+    adj = adj.select(
         "source_vertex",
         "chunk",
         F.slice(F.col("nbrs"), F.col("chunk") * max_chunk + 1, max_chunk).alias("neighbors"),
-    ]
-    if with_weights:
-        cols.append(F.slice(F.col("wts"), F.col("chunk") * max_chunk + 1, max_chunk).alias("weights"))
-    adj = adj.select(*cols, "out_degree")
-    # partition by the JOIN KEY (hash(source_vertex)): the cached scan
-    # then satisfies the per-iteration rank⋈adjacency distribution
-    # requirement, so iterations reshuffle only the small rank side.
-    # (src_bucket == pmod(hash(source_vertex), P) documents the shard
-    # layout; the physical partitioning below is what the planner sees.)
+        "out_degree",
+    )
+    # partition by the JOIN KEY: the persisted scan then satisfies the
+    # per-iteration rank⋈adjacency distribution requirement, so
+    # iterations reshuffle only the small rank side.
     return adj.repartition(num_buckets, "source_vertex")
 
 

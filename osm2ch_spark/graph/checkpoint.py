@@ -14,6 +14,7 @@ from __future__ import annotations
 import json
 import os
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -111,16 +112,13 @@ class CheckpointManager:
         return spark.read.parquet(meta["checkpoint_path"]), meta["iteration"]
 
 
-def localcheckpoint(df: DataFrame, eager: bool = True, level: str = "ser") -> DataFrame:
+def localcheckpoint(df: DataFrame, level: StorageLevel, eager: bool = True) -> DataFrame:
     """Lineage cut without durable storage (used between durable commits
     to stop plan growth in the driver loop).  Pass eager=False when the
     next driver-side action will materialize it anyway — halves the jobs
     per iteration.
 
-    ``level`` is the call site's default storage level (overridable via
-    ``OSM2CH_CKPT_LEVEL`` — workerenv.ckpt_storage_level): ``"ser"`` for
-    PageRank and LPA (BENCH/ab_pr_ckpt_level.json), ``"deser"`` for
+    ``level``: ``MEMORY_AND_DISK`` (serialized) for PageRank and LPA
+    (BENCH/ab_pr_ckpt_level.json), ``MEMORY_AND_DISK_DESER`` for
     connected components (BENCH/ab_cc_ckpt_level_r6.json)."""
-    from osm2ch_spark.workerenv import ckpt_storage_level
-
-    return df.localCheckpoint(eager=eager, storageLevel=ckpt_storage_level(level))
+    return df.localCheckpoint(eager=eager, storageLevel=level)

@@ -14,6 +14,7 @@ of the component (exact, oracle-comparable).
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -105,7 +106,8 @@ def connected_components(
         # — the fixed point is identical.  eager=False: the signature
         # aggregate in begin() is the first action and materializes the
         # blocks — an eager checkpoint here paid a separate full pass.
-        return localcheckpoint(canonical_edges(edges), eager=False, level="deser")
+        return localcheckpoint(canonical_edges(edges), StorageLevel.MEMORY_AND_DISK_DESER,
+                               eager=False)
 
     def begin(e: DataFrame):
         sig = _signature(e)
@@ -113,7 +115,8 @@ def connected_components(
         def step(e: DataFrame):
             nonlocal sig
             # eager=False: the signature aggregate below materializes it
-            new_e = localcheckpoint(_small_star(_large_star(e)), eager=False, level="deser")
+            new_e = localcheckpoint(_small_star(_large_star(e)),
+                                    StorageLevel.MEMORY_AND_DISK_DESER, eager=False)
             new_sig = _signature(new_e)
             # a matching signature is confirmed EXACTLY (counts already
             # equal, so a one-sided anti-join against the previous set

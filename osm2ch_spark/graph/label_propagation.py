@@ -12,6 +12,7 @@ label) → max_by((count, -label)) — all partial-aggregated, skew-safe.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -29,11 +30,12 @@ def label_propagation(
 ) -> DataFrame:
     """Returns (vertex, label) at convergence (or max_iter)."""
     e = undirected_edges(edges)
-    e = localcheckpoint(e)
+    e = localcheckpoint(e, StorageLevel.MEMORY_AND_DISK)
 
     def init() -> DataFrame:
         verts = e.select(F.col("u").alias("vertex")).distinct()
-        return localcheckpoint(verts.select("vertex", F.col("vertex").alias("label")))
+        return localcheckpoint(verts.select("vertex", F.col("vertex").alias("label")),
+                               StorageLevel.MEMORY_AND_DISK)
 
     def step(labels: DataFrame):
         nbr_labels = e.join(
@@ -49,7 +51,7 @@ def label_propagation(
             .select("vertex", F.coalesce("new_label", "label").alias("label"))
         )
         # eager=False: the sync aggregate below materializes it
-        new_labels = localcheckpoint(new_labels, eager=False)
+        new_labels = localcheckpoint(new_labels, StorageLevel.MEMORY_AND_DISK, eager=False)
         # one sync job: changed labels AND the row count for the lineage
         # (both tables hold exactly one row per vertex)
         sync = (

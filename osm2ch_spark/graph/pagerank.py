@@ -18,6 +18,7 @@ graph/loop.py.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -47,17 +48,15 @@ def pagerank(
     n = verts.count()
     if n == 0:
         return spark.createDataFrame([], "vertex long, rank double")
-    # with_weights=False: PageRank is unweighted (networkx semantics);
-    # skipping the weights collect_list halves the CSR build's heap
-    # churn and the cached shard size
-    adj = build_adjacency(edges, num_buckets=num_buckets, with_weights=False).persist()
+    adj = build_adjacency(edges, num_buckets=num_buckets).persist()
     base = (1.0 - damping) / n
 
     def init() -> DataFrame:
         # eager=False: the dangling aggregate in begin() is the first
         # action and materializes the blocks — one pass, not two
         return localcheckpoint(
-            verts.select("vertex", "has_out", (F.lit(1.0) / n).alias("rank")), eager=False
+            verts.select("vertex", "has_out", (F.lit(1.0) / n).alias("rank")),
+            StorageLevel.MEMORY_AND_DISK, eager=False,
         )
 
     def begin(ranks: DataFrame):
@@ -97,7 +96,7 @@ def pagerank(
             )
             # eager=False: the dangling/delta sync right below is the first
             # action and materializes the checkpoint — one job per iteration
-            new_ranks = localcheckpoint(new_ranks, eager=False)
+            new_ranks = localcheckpoint(new_ranks, StorageLevel.MEMORY_AND_DISK, eager=False)
 
             if tol > 0.0:
                 # one sync job: L1 delta + next dangling mass

@@ -56,13 +56,6 @@ def node_use_count(ways: DataFrame) -> DataFrame:
     return w.groupBy("node_id").agg(F.sum("w").cast("long").alias("use_count"))
 
 
-def missing_node_count(ways: DataFrame, nodes: DataFrame) -> int:
-    """The reference hard-errors on a way node absent from the node scan
-    (osm_loader.go:216-218).  Returns the violation count (0 = ok)."""
-    refs = ways.select(F.explode("nodes").alias("node_id")).distinct()
-    return refs.join(nodes, "node_id", "left_anti").count()
-
-
 EDGE_SCHEMA = StructType(
     [
         StructField("way_id", LongType(), False),
@@ -697,9 +690,8 @@ def build_expanded(source: DataFrame, entity: str = P.DEFAULT_ENTITY,
     ways = P.scan_ways_slim(slim, tag_whitelist)
     restrictions = P.scan_restrictions_slim(slim)
     counts = node_use_count(ways)
-    # membership probe rides the counts aggregation (same node_id keys) —
-    # no separate explode+distinct subtree
-    nodes = P.scan_nodes_slim(slim, ways, use_counts=counts)
+    # membership probe rides the counts aggregation (same node_id keys)
+    nodes = P.scan_nodes_slim(slim, counts)
     # edges feeds the expansion twice (e1/e2) and the splice geometry
     # join; materialize=True checkpoints the ranked split output — the
     # split UDF runs once.

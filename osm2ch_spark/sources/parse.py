@@ -115,45 +115,62 @@ def slim_records(records: DataFrame, entity: str = DEFAULT_ENTITY) -> DataFrame:
 
 
 def scan_ways_slim(slim: DataFrame, tag_whitelist: list[str] | None = None) -> DataFrame:
-    """S1 + F1 + F2 + P1 over ``slim_records`` output (the pipeline's
-    shared-exchange path).  Same rows as ``scan_ways`` minus the tags
-    column (nothing downstream of the pipeline reads it)."""
+    """S1 + F1 + F2 + P1 — osm_loader.go:27-73, over ``slim_records``
+    output.  Output: (way_id, oneway, nodes, repo, path, seq)."""
     tag_whitelist = tag_whitelist if tag_whitelist is not None else DEFAULT_TAGS
     w = slim.filter(F.col("rec_type") == "way")
+    # F1 filter_entity_tag (osm_loader.go:42-46)
     w = w.filter(F.col("entity_tag").isNotNull())
+    # F2 filter_tag_whitelist (osm_configuration.go:10-17)
     w = w.filter(F.col("entity_tag").isin(tag_whitelist))
     return w.select(
         F.col("rec_id").alias("way_id"), "oneway", "nodes", "repo", "path", "seq"
     )
 
 
-def scan_nodes_slim(slim: DataFrame, ways: DataFrame,
-                    use_counts: DataFrame | None = None) -> DataFrame:
-    """S2 + J1 over ``slim_records`` output — same semantics as
-    ``scan_nodes``.
+def scan_nodes_slim(slim: DataFrame, use_counts: DataFrame) -> DataFrame:
+    """S2 + J1 — osm_loader.go:80-103, over ``slim_records`` output.
 
-    ``use_counts``: when the caller has already aggregated per-node use
+    Keep only nodes referenced by kept ways: the membership probe (the
+    hash-set probe at osm_loader.go:91) joins against the per-node use
     counts (A1 — every counted node is by construction referenced by a
-    kept way), the membership probe joins against that table instead of
-    re-deriving explode(nodes)+distinct — two fewer stages and one fewer
-    full shuffle of the node references, and the dedup groupBy lands
-    co-partitioned with the counts aggregation."""
+    kept way), so it lands co-partitioned with the counts aggregation.
+    Duplicate node ids resolve first-wins in (repo, path, seq) scan order
+    (osm_loader.go:91-98).  Output: (node_id, lon, lat).
+
+    First-wins is a row_number window, not min_by(struct, struct): the
+    struct-buffered aggregate runs as SortAggregate with one pair of
+    object buffers per group — profiled as the pipeline's worst GC stage
+    (190 s of GC in a 105 s run) — while WindowExec ranks UnsafeRows with
+    no per-group objects.  (repo, path, seq) is unique per record, so the
+    rank-1 row is deterministic."""
     n = slim.filter(F.col("rec_type") == "node").select(
         F.col("rec_id").alias("node_id"), "lon", "lat", "repo", "path", "seq"
     )
-    if use_counts is not None:
-        seen = use_counts.select("node_id")
-    else:
-        seen = ways.select(F.explode("nodes").alias("node_id")).distinct()
-    return _dedup_nodes(n, seen)
+    n = n.join(use_counts.select("node_id"), "node_id", "left_semi")
+    w = Window.partitionBy("node_id").orderBy("repo", "path", "seq")
+    return (
+        n.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .select("node_id", "lon", "lat")
+    )
 
 
 def scan_restrictions_slim(slim: DataFrame) -> DataFrame:
-    """S3 + F3 + P2 + P3 over ``slim_records`` output — same semantics as
-    ``scan_restrictions``."""
+    """S3 + F3 + P2 + P3 — osm_loader.go:110-202, over ``slim_records``
+    output.
+
+    Pivot the 3 members by role with LAST-member-wins per role (the Go
+    switch over members[0..2] overwrites earlier assignments,
+    osm_loader.go:137-183), default component (-1, ""); then first-wins
+    dedup per (rtype, from, to) in scan order (osm_loader.go:195-197).
+
+    Output: (rtype, from_id, from_type, to_id, to_type, via_id, via_type).
+    """
     r = slim.filter(
         (F.col("rec_type") == "relation") & F.col("restriction").isNotNull()
     )
+    # F3 — exactly 3 members (osm_loader.go:128-131)
     r = r.filter(F.size("members") == 3)
     m = r.select(
         F.col("rec_id").alias("rel_id"),
@@ -163,105 +180,6 @@ def scan_restrictions_slim(slim: DataFrame) -> DataFrame:
         "seq",
         F.posexplode("members").alias("mpos", "m"),
     )
-    return _pivot_restrictions(m)
-
-
-def scan_ways(
-    records: DataFrame,
-    entity: str = DEFAULT_ENTITY,
-    tag_whitelist: list[str] | None = None,
-) -> DataFrame:
-    """S1 + F1 + F2 + P1 — osm_loader.go:27-73.
-
-    Output: (way_id, oneway, nodes, tags, repo, path, seq).
-    """
-    tag_whitelist = tag_whitelist if tag_whitelist is not None else DEFAULT_TAGS
-    w = records.filter(F.col("rec.type") == "way")
-    # F1 filter_entity_tag (osm_loader.go:42-46)
-    w = w.filter(F.col("rec.tags").getItem(entity).isNotNull())
-    # F2 filter_tag_whitelist (osm_configuration.go:10-17)
-    w = w.filter(F.col("rec.tags").getItem(entity).isin(tag_whitelist))
-    return w.select(
-        F.col("rec.id").alias("way_id"),
-        oneway_col(F.col("rec.tags")).alias("oneway"),
-        F.col("rec.nodes").alias("nodes"),
-        F.col("rec.tags").alias("tags"),
-        "repo",
-        "path",
-        "seq",
-    )
-
-
-def scan_nodes(records: DataFrame, ways: DataFrame) -> DataFrame:
-    """S2 + J1 — osm_loader.go:80-103.
-
-    Keep only nodes referenced by kept ways (left-semi = the hash-set
-    probe at osm_loader.go:91); duplicate node ids resolve first-wins in
-    (repo, path, seq) scan order (the reference's `delete` from the seen
-    set).  Output: (node_id, lon, lat).
-    """
-    seen = ways.select(F.explode("nodes").alias("node_id")).distinct()
-    n = records.filter(F.col("rec.type") == "node").select(
-        F.col("rec.id").alias("node_id"),
-        F.col("rec.lon").alias("lon"),
-        F.col("rec.lat").alias("lat"),
-        "repo",
-        "path",
-        "seq",
-    )
-    return _dedup_nodes(n, seen)
-
-
-def _dedup_nodes(n: DataFrame, seen: DataFrame) -> DataFrame:
-    """Semi-join against referenced node ids + first-wins dedup in
-    (repo, path, seq) scan order (osm_loader.go:91-98).
-
-    First-wins is a row_number window, not min_by(struct, struct): the
-    struct-buffered aggregate runs as SortAggregate with one pair of
-    object buffers per group — profiled as the pipeline's worst GC stage
-    (190 s of GC in a 105 s run) — while WindowExec ranks UnsafeRows with
-    no per-group objects.  (repo, path, seq) is unique per record, so the
-    rank-1 row is deterministic."""
-    n = n.join(seen, "node_id", "left_semi")
-    w = Window.partitionBy("node_id").orderBy("repo", "path", "seq")
-    return (
-        n.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("node_id", "lon", "lat")
-    )
-
-
-def scan_restrictions(records: DataFrame) -> DataFrame:
-    """S3 + F3 + P2 + P3 — osm_loader.go:110-202.
-
-    Pivot the 3 members by role with LAST-member-wins per role (the Go
-    switch over members[0..2] overwrites earlier assignments,
-    osm_loader.go:137-183), default component (-1, ""); then first-wins
-    dedup per (rtype, from, to) in scan order (osm_loader.go:195-197).
-
-    Output: (rtype, from_id, from_type, to_id, to_type, via_id, via_type).
-    """
-    r = records.filter(
-        (F.col("rec.type") == "relation")
-        & F.col("rec.tags").getItem("restriction").isNotNull()
-    )
-    # F3 — exactly 3 members (osm_loader.go:128-131)
-    r = r.filter(F.size("rec.members") == 3)
-    m = r.select(
-        F.col("rec.id").alias("rel_id"),
-        F.col("rec.tags").getItem("restriction").alias("rtype"),
-        "repo",
-        "path",
-        "seq",
-        F.posexplode("rec.members").alias("mpos", "m"),
-    )
-    return _pivot_restrictions(m)
-
-
-def _pivot_restrictions(m: DataFrame) -> DataFrame:
-    """Role pivot (last-member-wins per role) + first-wins (from, to)
-    dedup — osm_loader.go:137-197.  Input: one row per (relation,
-    member) with columns (rel_id, rtype, repo, path, seq, mpos, m)."""
 
     def role_slot(role: str, out: str):
         # last member with this role wins → max_by member position

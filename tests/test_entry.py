@@ -119,3 +119,23 @@ def test_default_session_starts():
                        capture_output=True, text=True, timeout=180)
     assert r.returncode == 0, r.stderr[-2000:]
     assert r.stdout.split()[-1] == "10"
+
+
+def test_bench_defaults_from_host():
+    """bench.py sizes itself from the host (affinity cores) and its query
+    set is exactly the headline set."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = ("import json, bench; print(json.dumps([bench.CPUS, "
+            "list(bench.headline_queries()), list(bench.DEFAULT_QUERIES)]))")
+    r = subprocess.run([sys.executable, "-c", code], cwd=repo, env=env,
+                       capture_output=True, text=True, timeout=120)
+    assert r.returncode == 0, r.stderr[-2000:]
+    cpus, keys, default = json.loads(r.stdout.splitlines()[-1])
+    assert cpus == len(os.sched_getaffinity(0))
+    assert keys == default

@@ -198,16 +198,6 @@ def test_resume_skips_torn_lineage_tail(spark, tmp_path, graphs):
     assert it == 4 and state.count() > 0
 
 
-def test_ckpt_storage_level_rejects_typo(monkeypatch):
-    import pytest
-
-    from osm2ch_spark.workerenv import ckpt_storage_level
-
-    monkeypatch.setenv("OSM2CH_CKPT_LEVEL", "serialized")
-    with pytest.raises(ValueError, match="serialized"):
-        ckpt_storage_level("ser")
-
-
 def test_partition_rows_tolerates_nonlocal_path():
     from osm2ch_spark.graph.checkpoint import CheckpointManager
 

@@ -6,7 +6,6 @@ import hashlib
 import pytest
 
 from osm2ch_spark import fixtures, pipeline, sinks
-from osm2ch_spark.sources import parse as P
 from tests import reference_impl as R
 
 
@@ -83,18 +82,6 @@ def test_units_m(spark):
     got = sinks.edges_csv_rows(pipeline.build_expanded(src), units="m")
     got_rows = [r["csv_row"] for r in sorted(got.collect(), key=lambda r: r["expanded_id"])]
     assert got_rows == exp_rows
-
-
-def test_missing_node_detection(spark):
-    records = [
-        fixtures.node(1, 37.0, 55.0),
-        fixtures.way(1, [1, 2], fixtures.HW),  # node 2 absent
-    ]
-    src = fixtures.source_df(spark, [fixtures.records_to_row(records)])
-    recs = P.parse_records(src)
-    ways = P.scan_ways(recs)
-    nodes = P.scan_nodes(recs, ways)
-    assert pipeline.missing_node_count(ways, nodes) == 1
 
 
 def test_multi_file_order(spark):

@@ -50,9 +50,9 @@ def _lazy_pipeline(spark, names):
     records = pipeline.parse_source(src)
     slim = P.slim_records(records)
     ways = P.scan_ways_slim(slim)
-    nodes = P.scan_nodes_slim(slim, ways)
     restrictions = P.scan_restrictions_slim(slim)
     counts = pipeline.node_use_count(ways)
+    nodes = P.scan_nodes_slim(slim, counts)
     edges = pipeline.split_ways_to_edges(ways, nodes, counts)
     expanded = pipeline.expand_edges(edges)
     seen = pipeline.ways_seen(ways)
@@ -147,7 +147,7 @@ spark = get_spark(master="local[4]", app_name="reuse-audit")
 spark.sparkContext.setLogLevel("ERROR")
 src = fixtures.micrograph_source(spark, ["t_junction", "split_shared_node"])
 from pyspark.sql import functions as F
-n_refs = P.scan_ways(P.parse_records(src)).select(F.explode("nodes")).count()
+n_refs = P.scan_ways_slim(P.slim_records(P.parse_records(src))).select(F.explode("nodes")).count()
 n = pipeline.build_expanded(src).count()
 print("RESULT", n_refs, n)
 spark.stop()

@@ -61,7 +61,7 @@ def main():
     import __spark_entry__ as E
     from osm2ch_spark import get_spark
 
-    spark = get_spark(app_name="check", master="local[8]", shuffle_partitions=8)
+    spark = get_spark(app_name="check", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:

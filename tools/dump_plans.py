@@ -27,9 +27,7 @@ def main():
 
     import __spark_entry__ as E
 
-    spark = get_spark(app_name="dump-plans", master="local[8]",
-                      shuffle_partitions=8,
-                      extra_conf={"spark.driver.memory": "8g"})
+    spark = get_spark(app_name="dump-plans", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     qs = E.queries()
     for name in names:

@@ -50,9 +50,8 @@ def main():
     warm(spark)
     spark.catalog.clearCache()
     if os.environ.get("PROFILE_WARM_BIG", "1") == "1":
-        # untimed pass of the actual workload (matches the scaling
-        # protocol's fault-warming): the timed+profiled run below then
-        # measures steady state, not one-time page provisioning
+        # untimed pass of the actual workload: the timed+profiled run
+        # below then measures steady state, not one-time page provisioning
         fn(spark)
         from osm2ch_spark import tpch_world as W
 
