@@ -114,11 +114,7 @@ def run_once(cpus: int, reps: int = 1) -> dict:
     (steady-state — first-touch costs are not a property of the plan)."""
     from osm2ch_spark import get_spark
 
-    spark = get_spark(
-        app_name=f"bench-{cpus}",
-        master=f"local[{cpus}]",
-        shuffle_partitions=max(cpus, 8),
-    )
+    spark = get_spark(app_name=f"bench-{cpus}", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
     # warmup: run the same paths at sf0.01 untimed — absorbs JIT, heap
     # page-faulting, and Python-worker spawn so timings measure the plan,

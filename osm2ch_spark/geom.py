@@ -23,16 +23,6 @@ PI180 = np.pi / 180.0
 PI180_REV = 180.0 / np.pi
 
 
-def degrees_to_radians(d):
-    """geomath.go:42-44."""
-    return d * PI180
-
-
-def radians_to_degrees(r):
-    """geomath.go:47-49."""
-    return r * PI180_REV
-
-
 def great_circle_distance(lon1, lat1, lon2, lat2):
     """Haversine distance in KILOMETERS — geomath.go:52-63 (G1).
 
@@ -68,11 +58,6 @@ def spherical_length(line: np.ndarray) -> float:
     for v in d:
         total += v
     return float(total)
-
-
-def spherical_length_many(lines) -> np.ndarray:
-    """Vectorized G2 over a ragged batch: list of (n,2) arrays → lengths."""
-    return np.array([spherical_length(l) for l in lines], dtype=np.float64)
 
 
 def middle_point_segment(p, q):
@@ -120,38 +105,12 @@ def find_centroid(line: np.ndarray):
     return (central_lon * PI180_REV, central_lat * PI180_REV)
 
 
-def euclidean_distance(p, q) -> float:
-    """Planar distance, Lon==X Lat==Y — geomath.go:123-127 (G5)."""
-    dx = p[0] - q[0]
-    dy = p[1] - q[1]
-    return float(np.sqrt(dx * dx + dy * dy))
-
-
-def euclidean_length(line: np.ndarray) -> float:
-    """Pairwise planar length — geomath.go:130-139 (G5)."""
-    line = np.asarray(line, dtype=np.float64)
-    if line.shape[0] < 2:
-        return 0.0
-    dx = np.diff(line[:, 0])
-    dy = np.diff(line[:, 1])
-    d = np.sqrt(dx * dx + dy * dy)
-    total = 0.0
-    for v in d:
-        total += v
-    return float(total)
-
-
 def point_on_segment_by_fraction(p, q, fraction):
     """Linear interpolation — geomath.go:173-178 (G11 helper)."""
     return (
         (1.0 - fraction) * p[0] + fraction * q[0],
         (1.0 - fraction) * p[1] + fraction * q[1],
     )
-
-
-def point_on_segment(p, q, distance):
-    """Interpolate by absolute planar distance — geomath.go:164-170 (G11)."""
-    return point_on_segment_by_fraction(p, q, distance / euclidean_distance(p, q))
 
 
 def find_middle_point(line: np.ndarray):

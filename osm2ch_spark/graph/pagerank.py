@@ -35,20 +35,16 @@ def pagerank(
     max_iter: int = 100,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 5,
-    num_buckets: int | None = None,
     resume: bool = False,
 ) -> DataFrame:
     """Returns (vertex BIGINT, rank DOUBLE).  ``edges`` is the engine's
     directed edge table (source_vertex, target_vertex, weight, one_way)."""
     spark = edges.sparkSession
-    if num_buckets is None:
-        num_buckets = shuffle_partitions(spark)
-
     verts = vertices_table(edges).persist()
     n = verts.count()
     if n == 0:
         return spark.createDataFrame([], "vertex long, rank double")
-    adj = build_adjacency(edges, num_buckets=num_buckets).persist()
+    adj = build_adjacency(edges, num_buckets=shuffle_partitions(spark)).persist()
     base = (1.0 - damping) / n
 
     def init() -> DataFrame:

@@ -22,10 +22,10 @@ exclusive running sum over the per-group weight totals (one row per
 group — metadata-scale), broadcast back on the group key.
 
 The ranked table feeds two branches (the data branch and the counts
-branch).  With ``materialize=True`` it is eagerly local-checkpointed:
-the expensive input pipeline runs EXACTLY once, both branches scan the
-materialized RDD, and the frozen rows also make the assigned IDs immune
-to AQE re-planning between actions.  The alternatives measured worse:
+branch), so it is eagerly local-checkpointed: the expensive input
+pipeline runs EXACTLY once, both branches scan the materialized RDD, and
+the frozen rows also make the assigned IDs immune to AQE re-planning
+between actions.  The alternatives measured worse:
   * ``persist()`` — concurrent AQE stage jobs race to build the same
     cache blocks; the losers block on cache-block locks while OCCUPYING
     task slots (a ~19 s non-scaling wall floor on the flagship run);
@@ -49,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from osm2ch_spark import workerenv
 from osm2ch_spark.session import shuffle_partitions
 
 
@@ -58,7 +59,6 @@ def with_sequential_id(
     order_cols: list[str],
     id_col: str,
     weight: str | None = None,
-    materialize: bool = False,
 ) -> DataFrame:
     """Add ``id_col`` = the first id of the row's block under the total
     order ``(group_cols, order_cols)``, which must be duplicate-free:
@@ -71,11 +71,8 @@ def with_sequential_id(
     row once (a 1-based gapless rank).  A row of weight 0 still gets a
     value but owns no ids.
 
-    ``materialize``: True eagerly local-checkpoints the ranked table so
-    the input pipeline runs exactly once (module docstring) — the right
-    choice when ``df`` is expensive (a UDF pass or a big join).  False
-    keeps the result fully lazy; the counts branch then re-executes the
-    input subtree (fine for small/oracle-scale inputs).
+    The ranked table is eagerly local-checkpointed (module docstring), so
+    Spark jobs run during this call.
     """
     wt = F.col(weight) if weight else F.lit(1)
     w_before = (
@@ -83,23 +80,20 @@ def with_sequential_id(
         .orderBy(*[F.col(c) for c in order_cols])
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    if materialize:
-        # explicit-N repartition on the window's partition keys: satisfies
-        # the window's required distribution (no second exchange) AND pins
-        # the checkpointed RDD's partition count — AQE would otherwise
-        # coalesce the planner-inserted exchange below target parallelism
-        # (observed 16 partitions feeding 32 cores), under-parallelizing
-        # every later phase that scans the materialized table.
-        n = shuffle_partitions(df.sparkSession)
-        df = df.repartition(n, *[F.col(c) for c in group_cols])
-    ranked = df.withColumn("_rk", F.coalesce(F.sum(wt).over(w_before), F.lit(0)) + 1)
-    if materialize:
-        from osm2ch_spark.workerenv import materialize_df
-
-        ranked = materialize_df(ranked)
+    # explicit-N repartition on the window's partition keys: satisfies
+    # the window's required distribution (no second exchange) AND pins
+    # the checkpointed RDD's partition count — AQE would otherwise
+    # coalesce the planner-inserted exchange below target parallelism
+    # (observed 16 partitions feeding 32 cores), under-parallelizing
+    # every later phase that scans the materialized table.
+    n = shuffle_partitions(df.sparkSession)
+    df = df.repartition(n, *[F.col(c) for c in group_cols])
+    ranked = workerenv.materialize_df(
+        df.withColumn("_rk", F.coalesce(F.sum(wt).over(w_before), F.lit(0)) + 1)
+    )
 
     # per-group totals — derived from the ranked table (not from df) so
-    # the materialized path never re-runs the input.
+    # the input never re-runs.
     counts = ranked.groupBy(*group_cols).agg(F.sum(wt).alias("_grp_cnt"))
     w_off = (
         Window.orderBy(*[F.col(c) for c in group_cols])

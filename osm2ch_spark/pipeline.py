@@ -1,9 +1,10 @@
-"""The osm2ch pipeline as one lazy DataFrame DAG.
+"""The osm2ch pipeline as one DataFrame DAG with eager barriers.
 
 Stage map (reference file:line → here):
   use counts      osm_loader.go:204-221  → node_use_count (A1)
   way splitting   osm_loader.go:223-273  → split_ways_to_edges (W1, Arrow UDF)
-  vertex filter   osm_loader.go:275-283  → filter_vertices_used (F4)
+  vertex filter   osm_loader.go:275-283  → the use_count > 1 test in
+                                           split_ways_to_edges (F4)
   edge expansion  osm_loader.go:285-343  → expand_edges (J3 + F5/F6 + ID2)
   "no" pass       osm_loader.go:348-389  → apply_no_restrictions (J4)
   "only" pass     osm_loader.go:390-432  → apply_only_restrictions (J5)
@@ -36,7 +37,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from osm2ch_spark import geom
+from osm2ch_spark import geom, workerenv
 from osm2ch_spark.operators.ids import with_sequential_id
 from osm2ch_spark.session import shuffle_partitions
 from osm2ch_spark.sources import parse as P
@@ -79,7 +80,6 @@ def split_ways_to_edges(
     nodes: DataFrame,
     use_counts: DataFrame,
     strict: bool = False,
-    materialize: bool = False,
 ) -> DataFrame:
     """W1 + ID1 — osm_loader.go:223-273.
 
@@ -154,7 +154,8 @@ def split_ways_to_edges(
             #   2. ONE haversine over every consecutive flat pair (cross-
             #      way pairs are never read back)
             #   3. segment ends = flat positions with use_count>1 that are
-            #      not a way's first node (osm_loader.go:240-244)
+            #      not a way's first node (osm_loader.go:240-244; the
+            #      use_count>1 test is F4, osm_loader.go:275-283)
             #   4. per-segment left-to-right cost sums via column-wise
             #      accumulation over a (segments × max_len) padded matrix —
             #      bit-identical to the Go loop order (x+0.0 == x exactly,
@@ -304,22 +305,12 @@ def split_ways_to_edges(
     # (repo, path, seq, seg, dir) order).
     segments = segments.withColumn("_idb", F.floor(F.col("seq") / 256))
     out = with_sequential_id(
-        segments, ["repo", "path", "_idb"], ["seq", "seg_index", "direction"],
-        "edge_id", materialize=materialize,
+        segments, ["repo", "path", "_idb"], ["seq", "seg_index", "direction"], "edge_id"
     )
     return out.drop("_idb")
 
 
-def filter_vertices_used(nodes: DataFrame, use_counts: DataFrame) -> DataFrame:
-    """F4 — osm_loader.go:275-283: keep nodes with use_count > 1."""
-    return (
-        nodes.join(use_counts, "node_id", "inner")
-        .filter(F.col("use_count") > 1)
-        .select("node_id", "lon", "lat", "use_count")
-    )
-
-
-def expand_edges(edges: DataFrame, materialize: bool = False) -> DataFrame:
+def expand_edges(edges: DataFrame) -> DataFrame:
     """J3 + F5 + F6 + ID2 — osm_loader.go:285-343 (pre-splice).
 
     Decide with small rows, explode late (optimization guide §8): the
@@ -347,9 +338,9 @@ def expand_edges(edges: DataFrame, materialize: bool = False) -> DataFrame:
 
     edges is consumed twice (array side and edge side) — the caller is
     expected to pass a materialized table so the upstream work runs
-    once.  With ``materialize=True`` the joined edge-level table (arrays
-    attached, filters applied, ranks assigned) is eagerly checkpointed;
-    consumers re-run only the broadcast probe + explode per action.
+    once.  The joined edge-level table (arrays attached, filters applied,
+    ranks assigned) is eagerly checkpointed; consumers re-run only the
+    broadcast probe + explode per action.
     """
     # candidate struct: dst edge id FIRST so array_sort orders by it
     # (ids are unique — later fields never break ties)
@@ -420,9 +411,7 @@ def expand_edges(edges: DataFrame, materialize: bool = False) -> DataFrame:
     # dst_edge_id) order because edge ids are globally sequential
     j = j.withColumn("_idb", F.floor(F.col("src_edge_id") / 2048))
     j = j.withColumn("_n", F.size("_cands"))
-    ranked = with_sequential_id(
-        j, ["_idb"], ["src_edge_id"], "_base", weight="_n", materialize=materialize
-    )
+    ranked = with_sequential_id(j, ["_idb"], ["src_edge_id"], "_base", weight="_n")
     out = (
         ranked.select(
             F.col("src_edge_id"),
@@ -497,12 +486,6 @@ def apply_only_restrictions(expanded: DataFrame, restrictions: DataFrame, seen: 
     )
     return expanded.join(rules, cond, "left_anti")
 
-
-EXPANDED_GEOM_FIELDS = [
-    StructField("geom_lons", ArrayType(DoubleType()), False),
-    StructField("geom_lats", ArrayType(DoubleType()), False),
-    StructField("geom_wkt", StringType(), False),
-]
 
 _PARTS_SCHEMA = StructType(
     [
@@ -592,8 +575,7 @@ def edge_geom_parts(edges: DataFrame) -> DataFrame:
     )
 
 
-def splice_geometry(expanded: DataFrame, edges: DataFrame,
-                    materialize: bool = False) -> DataFrame:
+def splice_geometry(expanded: DataFrame, edges: DataFrame) -> DataFrame:
     """G6 + G7 — osm_loader.go:315-320,337: expanded-edge geometry =
     [from-middle] ++ from.Geom[i+1:] ++ to.Geom[:j+1] ++ [to-middle].
 
@@ -602,16 +584,13 @@ def splice_geometry(expanded: DataFrame, edges: DataFrame,
     no Python touches the big table.  The constituent-edge geometries are
     re-joined here (kept out of the expansion shuffle on purpose).
 
-    The parts table feeds both the src and dst side of the splice join;
-    with ``materialize=True`` it is eagerly local-checkpointed so the
-    midpoint Arrow pass runs once and its blocks are freed with the
-    DataFrame (a persist here leaked cache lifetime and made the two
-    branches race on cache-block locks on first use; exchange reuse
-    misses because the branches prune different columns)."""
-    p = edge_geom_parts(edges)
-    if materialize:
-        from osm2ch_spark.workerenv import materialize_df
-        p = materialize_df(p)
+    The parts table feeds both the src and dst side of the splice join,
+    so it is eagerly local-checkpointed: the midpoint Arrow pass runs
+    once and its blocks are freed with the DataFrame (a persist here
+    leaked cache lifetime and made the two branches race on cache-block
+    locks on first use; exchange reuse misses because the branches prune
+    different columns)."""
+    p = workerenv.materialize_df(edge_geom_parts(edges))
     tail_len = F.greatest(F.lit(0), F.size("geom_lons") - F.col("bi") - 1)
     src = p.select(
         F.col("edge_id").alias("src_edge_id"),
@@ -645,8 +624,7 @@ def splice_geometry(expanded: DataFrame, edges: DataFrame,
     )
 
 
-def build_expanded(source: DataFrame, entity: str = P.DEFAULT_ENTITY,
-                   tag_whitelist: list[str] | None = None,
+def build_expanded(source: DataFrame, tag_whitelist: list[str] | None = None,
                    strict: bool = True) -> DataFrame:
     """Full pipeline: source table → final expanded-edge DataFrame.
 
@@ -680,10 +658,8 @@ def build_expanded(source: DataFrame, entity: str = P.DEFAULT_ENTITY,
     # the checkpoint pins it (the hash key is unique per line — even
     # balance at any partition count).
     n_part = shuffle_partitions(source.sparkSession)
-    from osm2ch_spark.workerenv import materialize_df
-
-    slim = materialize_df(
-        P.slim_records(records, entity).repartition(
+    slim = workerenv.materialize_df(
+        P.slim_records(records).repartition(
             n_part, F.col("repo"), F.col("path"), F.col("seq")
         )
     )
@@ -693,17 +669,16 @@ def build_expanded(source: DataFrame, entity: str = P.DEFAULT_ENTITY,
     # membership probe rides the counts aggregation (same node_id keys)
     nodes = P.scan_nodes_slim(slim, counts)
     # edges feeds the expansion twice (e1/e2) and the splice geometry
-    # join; materialize=True checkpoints the ranked split output — the
+    # join; with_sequential_id checkpoints the ranked split output — the
     # split UDF runs once.
-    edges = split_ways_to_edges(ways, nodes, counts, strict=strict,
-                                materialize=True)
+    edges = split_ways_to_edges(ways, nodes, counts, strict=strict)
     # the numbered pair table feeds the two anti-join probes and the
-    # splice; materialize=True runs the self-join once.
-    expanded = expand_edges(edges, materialize=True)
+    # splice; its ranked table is checkpointed — the self-join runs once.
+    expanded = expand_edges(edges)
     seen = ways_seen(ways)
     expanded = apply_no_restrictions(expanded, restrictions, seen)
     expanded = apply_only_restrictions(expanded, restrictions, seen)
-    expanded = splice_geometry(expanded, edges, materialize=True)
+    expanded = splice_geometry(expanded, edges)
     return expanded.select(
         "expanded_id",
         F.col("src_edge_id").alias("source_vertex"),
@@ -723,7 +698,9 @@ def build_expanded(source: DataFrame, entity: str = P.DEFAULT_ENTITY,
 
 
 def parse_source(source: DataFrame) -> DataFrame:
-    """Parse + cache hint: the three scans share one parsed-records CTE."""
+    """The parse layer's entry: a named hook (tracers wrap it) around
+    ``parse_records``.  The three scans share the parse through the slim
+    barrier in ``build_expanded``, not through any cache."""
     return P.parse_records(source)
 
 

@@ -2,10 +2,10 @@
 
 All knobs that matter at 100 TB are set here once: AQE (runtime join
 re-planning + skew-join splitting), a broadcast threshold sized for
-dimension tables, Arrow for every pandas-UDF boundary, and shuffle
-partitions parameterized by environment so the same code runs on
-``local[8]`` / ``local[32]`` in the sandbox and on a 1000-executor
-cluster via ``spark-submit --py-files``.
+dimension tables, Arrow for every pandas-UDF boundary, and cores, heap
+and shuffle partitions sized from the host (or the environment), so the
+same code runs on a ``local[N]`` session of any size and on a
+1000-executor cluster via ``spark-submit --py-files``.
 """
 
 from __future__ import annotations
@@ -104,18 +104,12 @@ def get_spark(
 ) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
-    # pyarrow's default jemalloc pool madvise-purges aggressively; with
-    # many concurrent Python workers the resulting kernel-side page churn
-    # (zone lock + memcg accounting) burned ~1.6s of SYSTEM time per
-    # Arrow batch at 32-way — measured 39s -> 26s wall on the flagship
-    # pipeline just from switching workers to the plain system allocator.
-    # Set before the JVM starts so the Python worker daemon inherits it;
-    # executorEnv carries it to real multi-executor clusters.
+    # Python workers use the plain system allocator, not pyarrow's
+    # jemalloc pool, whose aggressive madvise purges cost kernel time per
+    # Arrow batch (BENCH/perf_notes_r03.md).  Set before the JVM starts so
+    # the worker daemon inherits it; executorEnv carries it to clusters.
     os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
-    # Retain worker heap between Arrow batches: this host's minor page
-    # faults cost ~100 µs (lazily provisioned VM pages), so transient
-    # mmap/munmap of large numpy/Arrow buffers burned ~3 s of SYSTEM
-    # time per UDF batch and did not shrink with cores (workerenv.py).
+    # Retain worker heap between Arrow batches (workerenv.py).
     from osm2ch_spark.workerenv import MALLOC_ENV
 
     for k, v in MALLOC_ENV.items():
@@ -160,55 +154,30 @@ def get_spark(
         .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_",
                 os.environ["MALLOC_TRIM_THRESHOLD_"])
         .config("spark.executorEnv.PYTHONMALLOC", os.environ["PYTHONMALLOC"])
-        # Shuffle-file deletion runs synchronously with the GC-triggered
-        # ContextCleaner instead of on its async thread: the bench harness
-        # forces System.gc() between reps, and an async delete racing a
-        # still-draining stage produced mid-run FileNotFoundException on
-        # shuffle data files (3 worker losses in one degraded-window
-        # scaling run).  Blocking deletes close that window at a small
-        # (not zero) steady-state cost: ContextCleaner's weak refs can be
-        # enqueued by ANY GC and it also runs a periodic GC, so long-lived
-        # sessions serialize shuffle deletes on the cleaner thread too —
-        # scope via extra_conf if production cleaner latency ever matters.
+        # Shuffle files are deleted synchronously by the ContextCleaner:
+        # an async delete racing a still-draining stage produced mid-run
+        # FileNotFoundException on shuffle data files
+        # (BENCH/perf_notes_r05.md).
         .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
         # Shuffle files AND DISK_ONLY checkpoint blocks live in
-        # spark.local.dir; point it at the fastest local storage
-        # available (guide §2.1: "local disk bandwidth for shuffle files
-        # can be the tighter limit ... check both").  This sandbox's
-        # root disk writes at ~135 MB/s while /dev/shm streams at
-        # ~1.4 GB/s, and the engine moves GBs of shuffle + barrier
-        # blocks per query — interleaved A/B on headline CC
-        # (BENCH/ab_localdir_r6.json): tmpfs 48.6/48.8 s vs disk
-        # 69.5/102.6 s in the two clean rounds.  Every byte is still
-        # recomputed from the parquet inputs each run — this changes
-        # WHERE scratch bytes go, not what is computed.  On a real
-        # cluster set OSM2CH_LOCAL_DIR to the NVMe scratch array (RAM-
-        # backed dirs trade memory for I/O and need headroom, hence the
-        # 32 GB free-space guard before tmpfs is chosen by default).
+        # spark.local.dir, placed on the fastest local storage
+        # (_default_local_dir; A/B in BENCH/ab_localdir_r6.json).
         .config("spark.local.dir", _default_local_dir())
         # Timestamps in parquet testdata are µs; keep them stable.
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        # local mode: the driver JVM hosts all executor threads — size it
-        # for (cpus × per-task hash maps + cached shards); must be set
-        # before the JVM starts.  Pre-sizing the heap (-Xms == -Xmx) and
-        # ParallelGC remove multi-second GC/heap-growth stalls observed
-        # under 32-thread shuffle+window load in this sandbox.
+        # local mode: the driver JVM hosts all executor threads; the heap
+        # is pre-sized (-Xms == -Xmx) with ParallelGC to avoid GC/heap-
+        # growth stalls (BENCH/ab_gc_collector.json).  Must be set before
+        # the JVM starts.
         .config("spark.driver.memory", mem)
         .config(
             "spark.driver.extraJavaOptions",
             os.environ.get(
                 "SPARK_DRIVER_JAVA_OPTS",
-                # This VM provisions first-touch memory at ~250 MB/s
-                # through the hypervisor.  Round 3 fought that with
-                # -XX:+AlwaysPreTouch (4 KB faults cost ~100 µs → ~26 s/GB
-                # faulted mid-run, a 3× slowdown on the 127M-edge
-                # PageRank), but at an 80 g heap the pretouch itself now
-                # burns 5+ minutes of pure kernel time per JVM launch.
-                # Transparent huge pages cut the first-touch cost ~6×
-                # (measured 4.2 s/GB), cheap enough to fault LAZILY: the
-                # untimed warmup touches the pages a workload actually
-                # needs and startup stays instant — no pretouch.
+                # Transparent huge pages make first-touch page faults
+                # cheap enough to fault the heap lazily (no pretouch;
+                # BENCH/perf_notes_r04.md).
                 f"-Xms{mem} -XX:+UseParallelGC -XX:+UseTransparentHugePages",
             ),
         )

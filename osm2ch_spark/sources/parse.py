@@ -1,11 +1,12 @@
 """Parse stage: source table → ways / nodes / restrictions DataFrames.
 
 Reference: the three pbf scan passes of ``/root/reference/osm_loader.go``
-(ways :27-73, nodes :80-103, restrictions :110-202) become one lazy parse
+(ways :27-73, nodes :80-103, restrictions :110-202) become one parse
 of the ``content`` column (``from_json``, vectorized JVM-side — no Python)
-plus three filtered projections.  Catalyst dedups the parse via common
-subexpression / cached CTE; lazy evaluation replays only needed branches
-(the Spark analogue of the reference's three file ``Seek``s).
+plus three filtered projections.  The parse runs once: ``build_expanded``
+checkpoints the ``slim_records`` projection (one ``materialize_df``
+barrier) and all three scans read that table — the Spark analogue of the
+reference's three file ``Seek``s.
 
 Explicit StructType everywhere — schema inference would break the
 deterministic ID / sha256 parity contract (SURVEY.md §1.2).
@@ -84,19 +85,18 @@ def oneway_col(tags: Column) -> Column:
     return F.coalesce(tags.getItem("oneway").isin("yes", "1"), F.lit(False))
 
 
-def slim_records(records: DataFrame, entity: str = DEFAULT_ENTITY) -> DataFrame:
+def slim_records(records: DataFrame) -> DataFrame:
     """Parsed records projected down to EXACTLY what the pipeline reads —
     the tags MAP (the widest, slowest column) is reduced to three scalars
-    before any exchange.
+    (the ``DEFAULT_ENTITY`` tag, oneway, restriction) before any exchange.
 
-    ``build_expanded`` puts ONE hash exchange on top of this projection
-    and feeds all three scans from it: the JSON parse (the reference's
-    three file ``Seek``s, osm_loader.go:27/80/110) then runs ONCE, its
-    output lives in shuffle files (disk-backed, no executor memory
-    pinned), and every consumer stage reads those — AQE stage reuse
-    materializes the exchange exactly once.  The previous design ran
-    from_json once per scan (3×) and persisted downstream tables, whose
-    concurrent first-use made AQE stage jobs race on cache-block locks.
+    ``build_expanded`` repartitions this projection and checkpoints it
+    (its slim ``materialize_df`` barrier), then feeds all three scans
+    from that table: the JSON parse (the reference's three file
+    ``Seek``s, osm_loader.go:27/80/110) runs ONCE and its output lives in
+    DISK_ONLY blocks.  Running from_json once per scan (3×) and
+    persisting downstream tables made concurrent AQE stage jobs race on
+    cache-block locks.
     """
     return records.select(
         "repo",
@@ -107,7 +107,7 @@ def slim_records(records: DataFrame, entity: str = DEFAULT_ENTITY) -> DataFrame:
         F.col("rec.lon").alias("lon"),
         F.col("rec.lat").alias("lat"),
         F.col("rec.nodes").alias("nodes"),
-        F.col("rec.tags").getItem(entity).alias("entity_tag"),
+        F.col("rec.tags").getItem(DEFAULT_ENTITY).alias("entity_tag"),
         oneway_col(F.col("rec.tags")).alias("oneway"),
         F.col("rec.tags").getItem("restriction").alias("restriction"),
         F.col("rec.members").alias("members"),

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from osm2ch_spark import pipeline
+from osm2ch_spark import pipeline, workerenv
 from osm2ch_spark.sources import parse as P
 
 EARTH_R = "6370.986884258304"
@@ -51,11 +51,16 @@ def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # front; consumer stages scan the materialized RDD lock-free, and the
 # blocks are freed by the context cleaner once the entry is dropped
 # (reset_world / app eviction) — no cache-manager lifetime leak.
+#
+# Each builder returns an already-materialized table: the ways builder
+# checkpoints with materialize_df, while edges and expanded are cheap
+# layers over the ranked-table barrier inside with_sequential_id
+# (checkpointing them again would re-write the same table only to save
+# each consumer the broadcast offsets probe).
 _MEMO: dict = {}
 
 
-def _memo(spark: SparkSession, sf_dir: str, key: str, build,
-          materialize: bool = True) -> DataFrame:
+def _memo(spark: SparkSession, sf_dir: str, key: str, build) -> DataFrame:
     app = spark.sparkContext.applicationId
     # evict entries of stopped sessions: a process that cycles get_spark()
     # (tests/tools) would otherwise pin dead sessions' DataFrames forever
@@ -63,17 +68,7 @@ def _memo(spark: SparkSession, sf_dir: str, key: str, build,
         del _MEMO[k]
     k = (app, sf_dir, key)
     if k not in _MEMO:
-        from osm2ch_spark.workerenv import materialize_df
-
-        df = build()
-        # materialize=False: the builder's output is already a cheap
-        # layer over an eager checkpoint it created internally (the
-        # ranked-table barrier inside with_sequential_id) — a second
-        # full-width checkpoint here re-wrote the same 10^6-row table
-        # just to skip a broadcast-probe per consumer (guide §2.4:
-        # remove passes outright).  Consumers re-run only the offsets
-        # aggregate (metadata-scale) and the broadcast probe per action.
-        _MEMO[k] = materialize_df(df) if materialize else df
+        _MEMO[k] = build()
     return _MEMO[k]
 
 
@@ -182,30 +177,32 @@ def tpch_ways(spark, sf_dir) -> DataFrame:
     )
 
 
-def tpch_edges(spark, sf_dir) -> DataFrame:
-    """Real pipeline W1+ID1 over the projected world.
+def _ways(spark, sf_dir) -> DataFrame:
+    """tpch_ways, checkpointed and memoized per session+sf: it feeds
+    three subtrees (use counts, the split join, ways_seen) and rebuilding
+    it repeats the lineitem ROW_NUMBER window + collect_list aggregation."""
+    return _memo(spark, sf_dir, "ways",
+                 lambda: workerenv.materialize_df(tpch_ways(spark, sf_dir)))
 
-    ways is persisted (memoized per session+sf): it feeds three subtrees
-    (use counts, the split join, ways_seen in callers) and rebuilding it
-    repeats the lineitem ROW_NUMBER window + collect_list aggregation."""
-    ways = _memo(spark, sf_dir, "ways", lambda: tpch_ways(spark, sf_dir))
+
+def _edges(spark, sf_dir) -> DataFrame:
+    """tpch_edges, memoized per session+sf."""
+    return _memo(spark, sf_dir, "edges", lambda: tpch_edges(spark, sf_dir))
+
+
+def tpch_edges(spark, sf_dir) -> DataFrame:
+    """Real pipeline W1+ID1 over the projected world."""
+    ways = _ways(spark, sf_dir)
     nodes = tpch_nodes(spark, sf_dir)
     counts = pipeline.node_use_count(ways)
-    return pipeline.split_ways_to_edges(ways, nodes, counts, materialize=True)
+    return pipeline.split_ways_to_edges(ways, nodes, counts)
 
 
 def tpch_expanded(spark, sf_dir) -> DataFrame:
     """Real pipeline J3+ID2 (pre-restriction, pre-splice), memoized per
-    session+sf over the memoized edges.  materialize=False on both:
-    split_ways_to_edges / expand_edges each barrier their ranked table
-    internally (see _memo)."""
-    edges = _memo(spark, sf_dir, "edges",
-                  lambda: tpch_edges(spark, sf_dir), materialize=False)
-    return _memo(
-        spark, sf_dir, "expanded",
-        lambda: pipeline.expand_edges(edges, materialize=True),
-        materialize=False,
-    )
+    session+sf over the memoized edges."""
+    edges = _edges(spark, sf_dir)
+    return _memo(spark, sf_dir, "expanded", lambda: pipeline.expand_edges(edges))
 
 
 def tpch_rules(expanded: DataFrame) -> DataFrame:
@@ -238,11 +235,10 @@ def tpch_rules(expanded: DataFrame) -> DataFrame:
 
 def tpch_final_expanded(spark, sf_dir) -> DataFrame:
     """Expansion + both restriction passes (J4 then J5)."""
-    ways = tpch_ways(spark, sf_dir)
     # expanded feeds three subtrees (base + rule derivation + anti-joins)
     expanded = tpch_expanded(spark, sf_dir)
     rules = tpch_rules(expanded)
-    seen = pipeline.ways_seen(ways)
+    seen = pipeline.ways_seen(_ways(spark, sf_dir))
     out = pipeline.apply_no_restrictions(expanded, rules, seen)
     return pipeline.apply_only_restrictions(out, rules, seen)
 
@@ -251,15 +247,8 @@ def tpch_spliced(spark, sf_dir) -> DataFrame:
     """Full pipeline INCLUDING the geometry splice (G6+G7) — the complete
     reference output row (cmd/osm2ch/main.go:139-150) over the projected
     world."""
-    ways = tpch_ways(spark, sf_dir)
-    edges = _memo(spark, sf_dir, "edges",
-                  lambda: tpch_edges(spark, sf_dir), materialize=False)
-    expanded = tpch_expanded(spark, sf_dir)
-    rules = tpch_rules(expanded)
-    seen = pipeline.ways_seen(ways)
-    out = pipeline.apply_no_restrictions(expanded, rules, seen)
-    out = pipeline.apply_only_restrictions(out, rules, seen)
-    return pipeline.splice_geometry(out, edges, materialize=True)
+    return pipeline.splice_geometry(tpch_final_expanded(spark, sf_dir),
+                                    _edges(spark, sf_dir))
 
 
 def tpch_edge_graph(spark, sf_dir) -> DataFrame:

@@ -139,3 +139,47 @@ def test_bench_defaults_from_host():
     cpus, keys, default = json.loads(r.stdout.splitlines()[-1])
     assert cpus == len(os.sched_getaffinity(0))
     assert keys == default
+
+
+def test_cli_strict_missing_node(tmp_path):
+    """The CLI's strict mode (the default) fails fast on a way-node
+    reference absent from the node scan (osm_loader.go:216-218): exit 1,
+    one clean ``ERROR:`` line naming the node, and no edges CSV.
+    ``--permissive`` proceeds: exit 0 and a header-only edges CSV."""
+    import os
+    import subprocess
+    import sys
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from osm2ch_spark import fixtures, sinks
+
+    records = [
+        fixtures.node(1, 37.0, 55.0),
+        fixtures.way(1, [1, 2], fixtures.HW),  # node 2 absent
+    ]
+    row = fixtures.records_to_row(records)
+    names = [f.name for f in fixtures.SOURCE_SCHEMA.fields]
+    src = str(tmp_path / "source.parquet")
+    pq.write_table(pa.table({n: [v] for n, v in zip(names, row)}), src)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join([repo] + paths),
+           "SPARK_DRIVER_MEMORY": "2g"}
+    out = tmp_path / "graph.csv"
+
+    def cli(*flags):
+        return subprocess.run(
+            [sys.executable, "-m", "osm2ch_spark", "--source", src, "--out", str(out), *flags],
+            cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300)
+
+    r = cli()
+    assert r.returncode == 1, r.stderr[-2000:]
+    errors = [l for l in r.stderr.splitlines() if l.startswith("ERROR:")]
+    assert errors and "node 2" in errors[0], r.stderr[-2000:]
+    assert not out.exists()
+
+    r = cli("--permissive")
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert out.read_text() == sinks.EDGES_HEADER + "\n"

@@ -100,8 +100,7 @@ def test_multi_file_order(spark):
     ]
 
 
-@pytest.mark.parametrize("materialize", [False, True])
-def test_with_sequential_id_weighted(spark, materialize):
+def test_with_sequential_id_weighted(spark):
     """Each row's id is its group offset + the weight sum of the earlier
     rows of its group + 1, i.e. a prefix sum over the (group, key) order;
     a weight-1 column numbers exactly like weight=None (1..N)."""
@@ -123,7 +122,7 @@ def test_with_sequential_id_weighted(spark, materialize):
 
     def ids(weight):
         out = with_sequential_id(df.withColumn("one", F.lit(1)), ["g"], ["k"], "id",
-                                 weight=weight, materialize=materialize)
+                                 weight=weight)
         return {(r["g"], r["k"]): r["id"] for r in out.collect()}
 
     assert ids("w") == expected

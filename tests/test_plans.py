@@ -41,37 +41,32 @@ def test_restriction_antijoin_broadcasts(spark):
     assert "BroadcastHashJoin" in p and "LeftAnti" in p
 
 
-def _lazy_pipeline(spark, names):
-    """The full pipeline WITHOUT the eager materialization barriers —
-    exposes every operator in one lazy plan for auditing."""
-    from osm2ch_spark.sources import parse as P
+def _barrier_plans(spark, monkeypatch, names) -> list[str]:
+    """Run ``pipeline.build_expanded`` with ``workerenv.materialize_df``
+    wrapped to record the plan of every table it checkpoints; returns
+    those plans plus the plan of the returned DataFrame.  Each barrier
+    plan holds the operators between the previous barriers and this one,
+    so together they cover every operator the pipeline runs."""
+    from osm2ch_spark import workerenv
 
-    src = fixtures.micrograph_source(spark, names)
-    records = pipeline.parse_source(src)
-    slim = P.slim_records(records)
-    ways = P.scan_ways_slim(slim)
-    restrictions = P.scan_restrictions_slim(slim)
-    counts = pipeline.node_use_count(ways)
-    nodes = P.scan_nodes_slim(slim, counts)
-    edges = pipeline.split_ways_to_edges(ways, nodes, counts)
-    expanded = pipeline.expand_edges(edges)
-    seen = pipeline.ways_seen(ways)
-    expanded = pipeline.apply_no_restrictions(expanded, restrictions, seen)
-    expanded = pipeline.apply_only_restrictions(expanded, restrictions, seen)
-    return pipeline.splice_geometry(expanded, edges)
+    plans = []
+    barrier = workerenv.materialize_df
+
+    def recording(df):
+        plans.append(plan_of(df))
+        return barrier(df)
+
+    monkeypatch.setattr(workerenv, "materialize_df", recording)
+    out = pipeline.build_expanded(fixtures.micrograph_source(spark, names))
+    return plans + [plan_of(out)]
 
 
-def test_no_row_python_udfs(spark):
+def test_no_row_python_udfs(spark, monkeypatch):
     """All Python is Arrow-batched (MapInPandas); BatchEvalPython (row
-    pickling) must never appear in the pipeline plan.  Audited on the
-    lazy construction (build_expanded materializes the Python passes
-    eagerly, so its returned plan tops out at RDD scans)."""
-    p = plan_of(_lazy_pipeline(spark, ["t_junction"]))
-    assert "BatchEvalPython" not in p
-    assert "MapInPandas" in p or "mapInPandas" in p.lower()
-    # the materialized flagship plan is Python-free end to end
-    src = fixtures.micrograph_source(spark, ["t_junction"])
-    assert "BatchEvalPython" not in plan_of(pipeline.build_expanded(src))
+    pickling) must never appear in any plan the pipeline executes."""
+    plans = _barrier_plans(spark, monkeypatch, ["t_junction"])
+    assert not [p for p in plans if "BatchEvalPython" in p]
+    assert any("MapInPandas" in p for p in plans)
 
 
 def test_use_count_partial_aggregation(spark):
@@ -101,16 +96,16 @@ def test_whole_stage_codegen_present(spark):
     assert "partial_sum" in executed
 
 
-def test_splice_is_jvm_side(spark):
+def test_splice_is_jvm_side(spark, monkeypatch):
     """G7: the geometry splice over the EXPANDED table must be pure JVM
     (slice/concat) — Python appears as exactly two FUNCTIONS, both on
     edge-scale inputs (the W1 split and the per-edge midpoint pass),
-    never on the expanded table.  (Audited on the lazy construction; the
-    materialization barriers run each pass exactly once — asserted by
+    never on the expanded table.  (Audited on the plans at the
+    materialization barriers; each pass runs exactly once — asserted by
     test_shared_exchanges_run_python_once.)"""
     import re
 
-    p = plan_of(_lazy_pipeline(spark, ["t_junction"]))
+    p = "\n".join(_barrier_plans(spark, monkeypatch, ["t_junction"]))
     funcs = set()
     in_mip = False
     for line in p.splitlines():
