@@ -2,24 +2,26 @@
 
 Stage map (reference file:line → here):
   use counts      osm_loader.go:204-221  → node_use_count (A1)
-  way splitting   osm_loader.go:223-273  → split_ways_to_edges (W1, Arrow UDF)
+  way splitting   osm_loader.go:223-273  → split_ways_to_edges (W1, Arrow UDF;
+                                           also G6 + the WKT fragments)
   vertex filter   osm_loader.go:275-283  → the use_count > 1 test in
                                            split_ways_to_edges (F4)
   edge expansion  osm_loader.go:285-343  → expand_edges (J3 + F5/F6 + ID2)
   "no" pass       osm_loader.go:348-389  → apply_no_restrictions (J4)
   "only" pass     osm_loader.go:390-432  → apply_only_restrictions (J5)
-  geometry splice osm_loader.go:315-320  → splice_geometry (G6/G7, Arrow UDF)
+  geometry splice osm_loader.go:315-320  → splice_geometry (G7, JVM-side)
 
 Geometry is carried as two parallel ARRAY<DOUBLE> columns (geom_lons,
-geom_lats) — Arrow-friendly, zero-copy into numpy inside the two
-grouped UDFs; struct/WKT forms exist only at sinks.
+geom_lats) — Arrow-friendly, zero-copy into numpy inside the one
+Arrow pass (W1); the WKT fragments it also emits are joined into
+LINESTRINGs by the splice.
 
 Expanded-edge IDs are assigned BEFORE restriction deletion
 (osm_loader.go:313-314 vs :348-432) so final IDs keep gaps — parity
-requires numbering first, filtering second.  The expensive Python-side
-geometry splice runs AFTER the anti-joins (deleted rows never pay it);
-this reordering is observation-equivalent because the splice affects
-neither IDs nor the deletion predicates.
+requires numbering first, filtering second.  The geometry splice runs
+AFTER the anti-joins (deleted rows never pay it); this reordering is
+observation-equivalent because the splice affects neither IDs nor the
+deletion predicates.
 """
 
 from __future__ import annotations
@@ -71,8 +73,26 @@ EDGE_SCHEMA = StructType(
         StructField("cost_km", DoubleType(), False),
         StructField("geom_lons", ArrayType(DoubleType()), False),
         StructField("geom_lats", ArrayType(DoubleType()), False),
+        StructField("bi", LongType(), False),
+        StructField("mid_lon", DoubleType(), False),
+        StructField("mid_lat", DoubleType(), False),
+        StructField("src_str", StringType(), False),
+        StructField("dst_str", StringType(), False),
     ]
 )
+
+
+def _way_offsets(pdf):
+    """Flat row offsets of the ways in a batch sorted by (repo, path,
+    seq, pos): ``[0, <key changes>..., len(pdf)]``, one entry per way
+    plus the end."""
+    seq = pdf["seq"].to_numpy(dtype=np.int64)
+    repo = pdf["repo"].to_numpy()
+    path = pdf["path"].to_numpy()
+    change = np.flatnonzero(
+        (seq[1:] != seq[:-1]) | (path[1:] != path[:-1]) | (repo[1:] != repo[:-1])
+    )
+    return np.concatenate([[0], change + 1, [len(pdf)]])
 
 
 def split_ways_to_edges(
@@ -89,6 +109,17 @@ def split_ways_to_edges(
     was_oneway=False), restarting accumulation at each split node, exactly
     as the reference loop does.  Edge IDs are 1-based sequential in
     (scan order, split order, direction) via two-phase numbering.
+
+    The same pass computes each edge's splice parts (G6, the Python half
+    of G7), so no second Python pass re-ships the geometry:
+      bi       — index before the middle (geom.find_middle_point)
+      mid_*    — the middle point
+      src_str  — "mid, geom[bi+1:]" formatted  (this edge as FROM side)
+      dst_str  — "geom[:bi+1], mid" formatted  (this edge as TO side)
+    WKT points are formatted with Python's %.6f, the correctly-rounded
+    conversion Go's fmt uses; Java's format_string rounds the SHORTEST
+    repr HALF_UP, which can differ on raw input coordinates
+    (converter_wkt.go:9-15).
 
     ``strict=True`` enforces the reference's fail-fast on a way-node
     reference absent from the node scan (osm_loader.go:216-218) INSIDE
@@ -129,28 +160,15 @@ def split_ways_to_edges(
         batches = traced("split", batches)
 
         def empty():
-            return pd.DataFrame(
-                {
-                    "way_id": np.zeros(0, np.int64),
-                    "repo": pd.Series([], dtype=object),
-                    "path": pd.Series([], dtype=object),
-                    "seq": np.zeros(0, np.int64),
-                    "seg_index": np.zeros(0, np.int64),
-                    "direction": np.zeros(0, np.int64),
-                    "source_node": np.zeros(0, np.int64),
-                    "target_node": np.zeros(0, np.int64),
-                    "was_oneway": np.zeros(0, bool),
-                    "cost_km": np.zeros(0, np.float64),
-                    "geom_lons": pd.Series([], dtype=object),
-                    "geom_lats": pd.Series([], dtype=object),
-                }
-            )
+            # object dtype: Arrow cannot build a list column from the
+            # float64 a bare [] defaults to
+            return pd.DataFrame({f.name: pd.Series([], dtype=object) for f in EDGE_SCHEMA.fields})
 
-        def process(pdf):
+        def process(pdf, offsets):
             # Fully vectorized segmentation (no per-node Python) over FLAT
             # sorted way-node rows:
-            #   1. way boundaries = (repo, path, seq) key changes — the
-            #      rows arrive partition-sorted, so each way is one run
+            #   1. way boundaries = ``offsets`` (_way_offsets) — the rows
+            #      arrive partition-sorted, so each way is one run
             #   2. ONE haversine over every consecutive flat pair (cross-
             #      way pairs are never read back)
             #   3. segment ends = flat positions with use_count>1 that are
@@ -160,13 +178,11 @@ def split_ways_to_edges(
             #      accumulation over a (segments × max_len) padded matrix —
             #      bit-identical to the Go loop order (x+0.0 == x exactly,
             #      and haversines are non-negative so -0.0 never appears)
+            #   5. the splice parts of every output line (G6 + WKT)
             flat_nids = pdf["node_id"].to_numpy(dtype=np.int64)
             flat_lons = pdf["lon"].to_numpy(dtype=np.float64)
             flat_lats = pdf["lat"].to_numpy(dtype=np.float64)
             flat_ucnt = pdf["use_count"].to_numpy(dtype=np.int64)
-            seq_all = pdf["seq"].to_numpy(dtype=np.int64)
-            repo_all = pdf["repo"].to_numpy()
-            path_all = pdf["path"].to_numpy()
             if strict and np.isnan(flat_lons).any():
                 bad = flat_nids[np.isnan(flat_lons)]
                 raise ValueError(
@@ -181,21 +197,12 @@ def split_ways_to_edges(
                 )
             else:
                 all_d = np.zeros(0)
-            change = (
-                np.flatnonzero(
-                    (seq_all[1:] != seq_all[:-1])
-                    | (path_all[1:] != path_all[:-1])
-                    | (repo_all[1:] != repo_all[:-1])
-                )
-                + 1
-            )
-            offsets = np.concatenate([[0], change, [len(pdf)]])  # len = W+1
             way_first = offsets[:-1]
             is_start = np.zeros(len(flat_nids), dtype=bool)
             is_start[way_first] = True
             ends = np.flatnonzero((flat_ucnt > 1) & ~is_start)
             if len(ends) == 0:
-                return None
+                return empty()
             # way index of each segment end; segment start = previous end
             # within the same way, else the way's first node
             way_of = np.searchsorted(offsets, ends, side="right") - 1
@@ -234,36 +241,60 @@ def split_ways_to_edges(
             seg_first = way_first[way_of]  # first flat row of each seg's way
             way_ids = pdf["way_id"].to_numpy(dtype=np.int64)[seg_first]
             oneway = pdf["oneway"].to_numpy(dtype=bool)[seg_first]
-            repo = repo_all[seg_first]
-            path = path_all[seg_first]
-            seq = seq_all[seg_first]
+            repo = pdf["repo"].to_numpy()[seg_first]
+            path = pdf["path"].to_numpy()[seg_first]
+            seq = pdf["seq"].to_numpy(dtype=np.int64)[seg_first]
             src = flat_nids[starts]
             tgt = flat_nids[ends]
-            g_lons = [flat_lons[s : e + 1] for s, e in zip(starts, ends)]
-            g_lats = [flat_lats[s : e + 1] for s, e in zip(starts, ends)]
 
-            # reverse rows for two-way ways (osm_loader.go:255-268); output
-            # order is irrelevant — IDs are assigned by sort keys downstream
+            # output lines: forward rows, then the reversed rows of two-way
+            # ways (osm_loader.go:255-268); output order is irrelevant —
+            # IDs are assigned by sort keys downstream.  pt = the flat row
+            # of every output point, line by line.
             rev = ~oneway
-            out = pd.DataFrame(
+            R = int(rev.sum())
+            lens = np.concatenate([seg_lens, seg_lens[rev]]) + 1
+            line_off = np.concatenate([[0], np.cumsum(lens)])
+            step = np.repeat(np.concatenate([np.ones(S, np.int64), -np.ones(R, np.int64)]), lens)
+            k = np.arange(line_off[-1]) - np.repeat(line_off[:-1], lens)
+            pt = np.repeat(np.concatenate([starts, ends[rev]]), lens) + step * k
+            g_lons, g_lats = flat_lons[pt], flat_lats[pt]
+            bi, mlon, mlat = geom.find_middle_point_many(g_lons, g_lats, line_off)
+
+            # WKT fragments from one '%.6f' string per way-node (plain
+            # Python formatting: np.char.mod measured 4x slower); a
+            # reversed line reads the same strings back to front
+            pts = ["%.6f %.6f" % ab for ab in zip(flat_lons.tolist(), flat_lats.tolist())]
+            mid = ["%.6f %.6f" % ab for ab in zip(mlon.tolist(), mlat.tolist())]
+            fs, fe, fb = starts.tolist(), ends.tolist(), bi[:S].tolist()
+            rs, re_, rb = starts[rev].tolist(), ends[rev].tolist(), bi[S:].tolist()
+            src_str = [",".join([m] + pts[s + b + 1 : e + 1]) for s, e, b, m in zip(fs, fe, fb, mid)]
+            src_str += [",".join([m] + pts[s : e - b][::-1]) for s, e, b, m in zip(rs, re_, rb, mid[S:])]
+            dst_str = [",".join(pts[s : s + b + 1] + [m]) for s, b, m in zip(fs, fb, mid)]
+            dst_str += [",".join(pts[e - b : e + 1][::-1] + [m]) for e, b, m in zip(re_, rb, mid[S:])]
+
+            bounds = list(zip(line_off[:-1].tolist(), line_off[1:].tolist()))
+            return pd.DataFrame(
                 {
                     "way_id": np.concatenate([way_ids, way_ids[rev]]),
                     "repo": np.concatenate([repo, repo[rev]]),
                     "path": np.concatenate([path, path[rev]]),
                     "seq": np.concatenate([seq, seq[rev]]),
                     "seg_index": np.concatenate([seg_index, seg_index[rev]]),
-                    "direction": np.concatenate(
-                        [np.zeros(S, np.int64), np.ones(int(rev.sum()), np.int64)]
-                    ),
+                    "direction": np.concatenate([np.zeros(S, np.int64), np.ones(R, np.int64)]),
                     "source_node": np.concatenate([src, tgt[rev]]),
                     "target_node": np.concatenate([tgt, src[rev]]),
-                    "was_oneway": np.concatenate([oneway, np.zeros(int(rev.sum()), bool)]),
+                    "was_oneway": np.concatenate([oneway, np.zeros(R, bool)]),
                     "cost_km": np.concatenate([cost, cost[rev]]),
-                    "geom_lons": g_lons + [a[::-1] for a, r in zip(g_lons, rev) if r],
-                    "geom_lats": g_lats + [a[::-1] for a, r in zip(g_lats, rev) if r],
+                    "geom_lons": [g_lons[a:b] for a, b in bounds],
+                    "geom_lats": [g_lats[a:b] for a, b in bounds],
+                    "bi": bi,
+                    "mid_lon": mlon,
+                    "mid_lat": mlat,
+                    "src_str": src_str,
+                    "dst_str": dst_str,
                 }
             )
-            return out
 
         # Arrow slices a partition into ~10k-row batches with no respect
         # for way boundaries; carry the trailing (possibly incomplete) way
@@ -271,32 +302,17 @@ def split_ways_to_edges(
         # so a way is always a contiguous run within one partition.
         carry = None
         for pdf in batches:
-            if carry is not None and len(carry):
+            if carry is not None:
                 pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
             if len(pdf) == 0:
                 continue
-            seq_all = pdf["seq"].to_numpy(dtype=np.int64)
-            repo_all = pdf["repo"].to_numpy()
-            path_all = pdf["path"].to_numpy()
-            change = (
-                np.flatnonzero(
-                    (seq_all[1:] != seq_all[:-1])
-                    | (path_all[1:] != path_all[:-1])
-                    | (repo_all[1:] != repo_all[:-1])
-                )
-                + 1
-            )
-            if len(change) == 0:
-                carry = pdf  # the whole batch is one (unfinished) way
-                continue
-            cut = int(change[-1])
+            offsets = _way_offsets(pdf)
+            cut = int(offsets[-2])  # first row of the last way
             carry = pdf.iloc[cut:]
-            out = process(pdf.iloc[:cut].reset_index(drop=True))
-            yield out if out is not None else empty()
-        if carry is not None and len(carry):
-            out = process(carry.reset_index(drop=True))
-            yield out if out is not None else empty()
+            if cut:
+                yield process(pdf.iloc[:cut].reset_index(drop=True), offsets[:-1])
+        if carry is not None:  # one way, the partition's last
+            yield process(carry.reset_index(drop=True), np.array([0, len(carry)]))
 
     segments = flat.mapInPandas(split, EDGE_SCHEMA)
     # _idb buckets the per-file group so numbering stays parallel even
@@ -487,112 +503,19 @@ def apply_only_restrictions(expanded: DataFrame, restrictions: DataFrame, seen: 
     return expanded.join(rules, cond, "left_anti")
 
 
-_PARTS_SCHEMA = StructType(
-    [
-        StructField("edge_id", LongType(), False),
-        StructField("geom_lons", ArrayType(DoubleType()), False),
-        StructField("geom_lats", ArrayType(DoubleType()), False),
-        StructField("bi", LongType(), False),
-        StructField("mid_lon", DoubleType(), False),
-        StructField("mid_lat", DoubleType(), False),
-        StructField("src_str", StringType(), False),
-        StructField("dst_str", StringType(), False),
-    ]
-)
-
-
-def edge_geom_parts(edges: DataFrame) -> DataFrame:
-    """Per-EDGE midpoint + pre-formatted WKT fragments (G6, the Python
-    half of G7).
-
-    The midpoint walk runs once per distinct edge, not once per expanded
-    pair — an edge with out-degree k previously paid k midpoint walks.
-    One Arrow pass, fully vectorized (find_middle_point_many); the only
-    per-edge Python is the join of pre-formatted point strings.  WKT
-    points are formatted HERE with Python's Go-parity %.6f: Java's
-    format_string rounds the SHORTEST repr HALF_UP, which can differ from
-    correct rounding of the true double (converter_wkt.go:9-15).
-
-    Output: the edge geometry passed through plus
-      bi       — index before the middle (find_middle_point)
-      mid_*    — the middle point
-      src_str  — "mid, geom[bi+1:]" formatted  (this edge as FROM side)
-      dst_str  — "geom[:bi+1], mid" formatted  (this edge as TO side)
-    """
-
-    def parts(batches):
-        import pandas as pd
-
-        from osm2ch_spark.udftrace import traced
-        batches = traced("parts", batches)
-
-        for pdf in batches:
-            n_rows = len(pdf)
-            if n_rows == 0:
-                yield pd.DataFrame({f.name: [] for f in _PARTS_SCHEMA.fields})
-                continue
-            lens = pdf["geom_lons"].map(len).to_numpy(dtype=np.int64)
-            offsets = np.concatenate([[0], np.cumsum(lens)])
-            if offsets[-1] > 0:
-                flat_lons = np.concatenate(
-                    [np.asarray(x, dtype=np.float64) for x in pdf["geom_lons"]]
-                )
-                flat_lats = np.concatenate(
-                    [np.asarray(x, dtype=np.float64) for x in pdf["geom_lats"]]
-                )
-            else:
-                flat_lons = np.zeros(0)
-                flat_lats = np.zeros(0)
-            bi, mlon, mlat = geom.find_middle_point_many(flat_lons, flat_lats, offsets)
-            # one '%.6f' pass over every point — the same correctly-
-            # rounded conversion as Go's fmt %f (np.char.mod was measured
-            # 4x slower than plain Python formatting here)
-            pts = ["%.6f %.6f" % ab for ab in zip(flat_lons, flat_lats)]
-            mid_s = ["%.6f %.6f" % ab for ab in zip(mlon, mlat)]
-            src_str = [
-                ",".join([m] + pts[o + b + 1 : o + n])
-                for m, o, b, n in zip(mid_s, offsets[:-1], bi, lens)
-            ]
-            dst_str = [
-                ",".join(pts[o : o + b + 1] + [m])
-                for m, o, b in zip(mid_s, offsets[:-1], bi)
-            ]
-            yield pd.DataFrame(
-                {
-                    "edge_id": pdf["edge_id"],
-                    "geom_lons": pdf["geom_lons"],
-                    "geom_lats": pdf["geom_lats"],
-                    "bi": bi,
-                    "mid_lon": mlon,
-                    "mid_lat": mlat,
-                    "src_str": src_str,
-                    "dst_str": dst_str,
-                }
-            )
-
-    return edges.select("edge_id", "geom_lons", "geom_lats").mapInPandas(
-        parts, _PARTS_SCHEMA
-    )
-
-
 def splice_geometry(expanded: DataFrame, edges: DataFrame) -> DataFrame:
     """G6 + G7 — osm_loader.go:315-320,337: expanded-edge geometry =
     [from-middle] ++ from.Geom[i+1:] ++ to.Geom[:j+1] ++ [to-middle].
 
-    The midpoint work is hoisted to the per-EDGE side (edge_geom_parts);
-    the per-EXPANDED-row splice is pure JVM array/string concatenation —
-    no Python touches the big table.  The constituent-edge geometries are
-    re-joined here (kept out of the expansion shuffle on purpose).
-
-    The parts table feeds both the src and dst side of the splice join,
-    so it is eagerly local-checkpointed: the midpoint Arrow pass runs
-    once and its blocks are freed with the DataFrame (a persist here
-    leaked cache lifetime and made the two branches race on cache-block
-    locks on first use; exchange reuse misses because the branches prune
-    different columns)."""
-    p = workerenv.materialize_df(edge_geom_parts(edges))
+    The midpoint and the WKT fragments come with each edge from the W1
+    split (split_ways_to_edges); the per-EXPANDED-row splice is pure JVM
+    array/string concatenation — no Python touches the big table.  The
+    constituent-edge geometries are re-joined here (kept out of the
+    expansion shuffle on purpose); ``edges`` is the table the ID1
+    barrier materialized, so both sides scan it without re-running the
+    split."""
     tail_len = F.greatest(F.lit(0), F.size("geom_lons") - F.col("bi") - 1)
-    src = p.select(
+    src = edges.select(
         F.col("edge_id").alias("src_edge_id"),
         F.concat(
             F.array(F.col("mid_lon")), F.slice("geom_lons", F.col("bi") + 2, tail_len)
@@ -602,7 +525,7 @@ def splice_geometry(expanded: DataFrame, edges: DataFrame) -> DataFrame:
         ).alias("_s_lats"),
         F.col("src_str").alias("_s_str"),
     )
-    dst = p.select(
+    dst = edges.select(
         F.col("edge_id").alias("dst_edge_id"),
         F.concat(
             F.slice("geom_lons", 1, F.col("bi") + 1), F.array(F.col("mid_lon"))
@@ -638,7 +561,7 @@ def build_expanded(source: DataFrame, tag_whitelist: list[str] | None = None,
     the W1 node join (left join + NaN raise inside the Arrow pass) — no
     extra job beyond the pipeline's own materialization barriers.  Note
     build_expanded eagerly materializes its fan-out barriers (slim /
-    split / expand / splice), so Spark jobs run during this call and a
+    split / expand), so Spark jobs run during this call and a
     strict violation raises HERE, not on the caller's first action
     (cli.py relies on this).
     """

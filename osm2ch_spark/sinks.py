@@ -10,8 +10,8 @@ the JVM via format_string — Java rounds HALF_UP where Go rounds
 half-to-even, which can differ only when the double sits EXACTLY on a
 half boundary at the 6th decimal; weights are sums of haversines (never
 exact halves), so the JVM path is byte-safe for weight.  WKT points ARE
-raw input coordinates (could be exact halves), so WKT is formatted
-Python-side in splice_geometry.
+raw input coordinates (could be exact halves), so WKT point strings are
+formatted Python-side by the W1 split (pipeline.split_ways_to_edges).
 """
 
 from __future__ import annotations
@@ -145,22 +145,19 @@ def vertices_rows(expanded: DataFrame) -> DataFrame:
     )
     ev = src_ev.unionAll(dst_ev)
     order = F.struct("expanded_id", "side")
-    first_seen = ev.groupBy("vertex_id").agg(F.min(order).alias("first_seen"))
-    geo = (
-        ev.filter(F.col("npts") >= 2)
-        .groupBy("vertex_id")
-        .agg(F.min_by(F.struct("lon", "lat"), order).alias("p"))
+    # min_by skips null orderings: a row failing F7 never supplies the
+    # geometry, and a vertex with no passing row gets null → (0, 0)
+    v = ev.groupBy("vertex_id").agg(
+        F.min(order).alias("first_seen"),
+        F.min_by(F.struct("lon", "lat"), F.when(F.col("npts") >= 2, order)).alias("p"),
     )
-    return (
-        first_seen.join(geo, "vertex_id", "left")
-        .select(
-            "vertex_id",
-            F.lit(0).alias("order_pos"),
-            F.lit(0).alias("importance"),
-            F.coalesce(F.col("p.lon"), F.lit(0.0)).alias("lon"),
-            F.coalesce(F.col("p.lat"), F.lit(0.0)).alias("lat"),
-            "first_seen",
-        )
+    return v.select(
+        "vertex_id",
+        F.lit(0).alias("order_pos"),
+        F.lit(0).alias("importance"),
+        F.coalesce(F.col("p.lon"), F.lit(0.0)).alias("lon"),
+        F.coalesce(F.col("p.lat"), F.lit(0.0)).alias("lat"),
+        "first_seen",
     )
 
 

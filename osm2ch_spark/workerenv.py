@@ -16,19 +16,7 @@ retained brk heap instead of transient mmaps and never trims it back;
 the first real batch then warms the heap and later batches run
 fault-free.
 
-Worker start-up itself belongs to the worker daemon (``pydaemon.py``,
-set by ``get_spark`` for local masters).  Before the first fork it
-imports numpy, pandas, pyarrow, pyspark's Arrow serializers and the
-engine modules UDF bodies use (geom, gomath, udftrace, pipeline,
-sinks), then ``gc.freeze()``s them: workers share those pages
-copy-on-write, and the ``gc.collect()`` pyspark runs in a worker after
-each task no longer writes to them (Python-worker PSS on ``etl_grid``
-~650 → ~410 MB).  It also stops a per-task cost: pyspark's
-``importlib.invalidate_caches()`` re-read the whole directory of
-``pyspark.zip`` once per cached zipimporter (17 of them, ~27k entries)
-at the start of every task on CPython < 3.13, 0.2–0.5 s before the
-first batch; the daemon re-reads an archive only when its mtime or size
-changed.
+Worker start-up (preload, gc.freeze, zip invalidation) is ``pydaemon.py``.
 """
 
 from __future__ import annotations

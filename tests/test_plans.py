@@ -6,7 +6,6 @@ import contextlib
 import io
 
 import pytest
-from pyspark.sql import functions as F
 
 from osm2ch_spark import fixtures, pipeline
 from osm2ch_spark import tpch_world as W
@@ -98,10 +97,10 @@ def test_whole_stage_codegen_present(spark):
 
 def test_splice_is_jvm_side(spark, monkeypatch):
     """G7: the geometry splice over the EXPANDED table must be pure JVM
-    (slice/concat) — Python appears as exactly two FUNCTIONS, both on
-    edge-scale inputs (the W1 split and the per-edge midpoint pass),
-    never on the expanded table.  (Audited on the plans at the
-    materialization barriers; each pass runs exactly once — asserted by
+    (slice/concat) — Python appears as exactly one FUNCTION, the W1
+    split over way-node rows (it also emits each edge's midpoint and WKT
+    fragments), never on the expanded table.  (Audited on the plans at the
+    materialization barriers; the pass runs exactly once — asserted by
     test_shared_exchanges_run_python_once.)"""
     import re
 
@@ -117,7 +116,7 @@ def test_splice_is_jvm_side(spark, monkeypatch):
             m = re.match(r"Arguments: (\w+)\(", line.strip())
             if m:
                 funcs.add(m.group(1))
-    assert funcs == {"split", "parts"}, f"unexpected Python passes: {funcs}"
+    assert funcs == {"split"}, f"unexpected Python passes: {funcs}"
     assert "BatchEvalPython" not in p
 
 
@@ -193,28 +192,39 @@ def test_sequential_id_offsets_broadcast(spark, build):
     assert "BroadcastHashJoin" in p and "SortMergeJoin" not in p
 
 
-def test_pagerank_iteration_join_not_smj(spark):
+def test_pagerank_iteration_join_not_smj(spark, monkeypatch):
     """Per-iteration rank updates must not sort-merge-join: SMJ re-sorts
-    the cached adjacency and the rank table every iteration."""
-    from osm2ch_spark.graph.adjacency import build_adjacency, vertices_table
+    the cached adjacency and the rank table every iteration.  Audits the
+    plans of the real loop at its lineage cuts (every rank table passes
+    ``localcheckpoint``)."""
+    import importlib
 
+    # the package re-exports the function under the module's name
+    pr = importlib.import_module("osm2ch_spark.graph.pagerank")
+    plans = []
+    cut = pr.localcheckpoint
+
+    def recording(df, *args, **kwargs):
+        plans.append(plan_of(df))
+        return cut(df, *args, **kwargs)
+
+    monkeypatch.setattr(pr, "localcheckpoint", recording)
     edges = spark.createDataFrame(
         [(i % 97, (i * 7) % 97, 1.0, False) for i in range(1000)],
         "source_vertex long, target_vertex long, weight double, one_way boolean",
     )
-    adj = build_adjacency(edges, num_buckets=8)
-    verts = vertices_table(edges)
-    ranks = verts.select("vertex", "has_out", F.lit(0.01).alias("rank"))
-    contribs = (
-        adj.join(
-            ranks.select("vertex", "rank").hint("shuffle_hash"),
-            adj.source_vertex == F.col("vertex"),
-        )
-        .select(F.explode("neighbors").alias("tgt"), (F.col("rank") / F.col("out_degree")).alias("c"))
-        .groupBy("tgt").agg(F.sum("c").alias("contrib"))
-    )
-    # same construction as pagerank.pagerank's update join
-    new_ranks = verts.join(
-        contribs.hint("shuffle_hash"), verts.vertex == contribs.tgt, "left"
-    )
-    assert "SortMergeJoin" not in plan_of(new_ranks)
+    # At this size the planner would pick hash joins on size alone; a
+    # 1-byte threshold rules out size-based broadcast and shuffled-hash
+    # choices, as sides of similar size do at scale, so only the loop's
+    # own hints can keep the sort-merge join out.
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    threshold = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        assert pr.pagerank(edges, max_iter=2).count() == 97
+    finally:
+        spark.conf.set(key, threshold)
+    # the initial ranks, then one rank update per iteration run (this
+    # regular graph converges after the first)
+    assert len(plans) >= 2 and all("Join" in p for p in plans[1:])
+    assert not [p for p in plans if "SortMergeJoin" in p]
