@@ -172,6 +172,14 @@ def micrographs() -> dict[str, list]:
         way(1, [801, 802, 803], HW1),
         way(2, [803, 801], HW1),
     ]
+    # a 700-node two-way way crossed at its 650th node: one 649-distance
+    # segment whose spacing shrinks after 50 nodes, so its midpoint sits
+    # early and the spliced lines keep 600+ points
+    g["long_segment"] = [
+        node(1000 + i, round(37.69 + 0.001 * min(i, 50) + 0.00001 * max(i - 50, 0), 7), 55.81)
+        for i in range(700)
+    ] + [node(1700, 37.74599, 55.809), node(1701, 37.74599, 55.811),
+         way(1, list(range(1000, 1700)), HW), way(2, [1700, 1649, 1701], HW)]
     # non-highway + non-whitelisted tags (filter tests)
     g["tag_filters"] = [
         node(901, 37.6800, 55.7900),

@@ -1,12 +1,14 @@
 """Geometry kernel — numpy ports of the reference's scalar geo-math.
 
-Every function reproduces the exact semantics of
-``/root/reference/geomath.go`` (G1–G11 in SURVEY.md §2.7) including the
+Every function reproduces the exact semantics of the reference's
+``geomath.go`` (G1–G11 in SURVEY.md §2.7) including the
 nonstandard Earth radius (geomath.go:9) and edge cases of
 ``findMiddlePoint`` (geomath.go:143-161).  Lines are numpy arrays of shape
 (n, 2) ordered ``(lon, lat)`` — Arrow-friendly and vectorizable inside
-pandas UDFs.  No Spark imports here: this module is pure numpy so the same
-code runs on executors inside Arrow batches and on the driver in tests.
+pandas UDFs; ``running_sums`` is the one place that sums ragged runs (the
+W1 split's costs and midpoints), the scalar walks are its oracles.  No
+Spark imports here: this module is pure numpy so the same code runs on
+executors inside Arrow batches and on the driver in tests.
 """
 
 from __future__ import annotations
@@ -148,102 +150,75 @@ def find_middle_point(line: np.ndarray):
     return idx, result
 
 
+def running_sums(values, starts, lens):
+    """Left-to-right running sum of every run ``values[s:s+n]``.
+
+    Runs (``starts``, ``lens``) must not overlap; the result has the
+    layout of ``values`` (0.0 outside every run).  Each run accumulates
+    ``acc + v`` in the Go ``c += v`` loop order, so every partial sum is
+    bit-identical to the scalar walk.  One numpy step per position over
+    the runs still that long (longest first): O(len(values)) memory.
+    """
+    values = np.asarray(values, dtype=np.float64)
+    lens = np.asarray(lens, dtype=np.int64)
+    out = np.zeros_like(values)
+    order = np.argsort(-lens, kind="stable")
+    s = np.asarray(starts, dtype=np.int64)[order]
+    L = int(lens.max(initial=0))
+    # runs longer than j: a prefix of the longest-first order
+    active = len(lens) - np.cumsum(np.bincount(lens, minlength=L))[:L]
+    acc = np.zeros(len(s), dtype=np.float64)
+    for j in range(L):
+        m = active[j]
+        p = s[:m] + j
+        acc[:m] += values[p]
+        out[p] = acc[:m]
+    return out
+
+
 def find_middle_point_many(flat_lons, flat_lats, offsets):
     """Vectorized G6 over a ragged batch of lines.
 
     ``flat_lons``/``flat_lats``: all lines' points concatenated;
     ``offsets``: (n_lines+1) prefix offsets.  Returns
     ``(idx, mid_lon, mid_lat)`` arrays, bit-identical per line to
-    :func:`find_middle_point` (same left-to-right float accumulation via
-    column-wise sums over a padded matrix; padding zeros are exact
-    no-ops, and a padded column can never satisfy ``half <= cl and
-    half > ol`` because there ``ol == cl``).
+    :func:`find_middle_point`: the running planar lengths ``cl`` come
+    from :func:`running_sums` (the Go accumulation order), ``ol`` is the
+    previous ``cl`` within the line, ``half <= cl and half > ol`` is
+    tested on every segment at once and the last hit per line wins.
+    Lines without a hit keep the Go zero value ``(0, 0.0, 0.0)``.
     """
-    flat_lons = np.asarray(flat_lons, dtype=np.float64)
-    flat_lats = np.asarray(flat_lats, dtype=np.float64)
+    x = np.asarray(flat_lons, dtype=np.float64)
+    y = np.asarray(flat_lats, dtype=np.float64)
     offsets = np.asarray(offsets, dtype=np.int64)
     E = len(offsets) - 1
     idx_out = np.zeros(E, dtype=np.int64)
     mlon = np.zeros(E, dtype=np.float64)
     mlat = np.zeros(E, dtype=np.float64)
-    if E == 0 or len(flat_lons) == 0:
-        return idx_out, mlon, mlat
-    lens = np.diff(offsets)
     # planar segment lengths over flat consecutive pairs; cross-line
     # pairs are computed but never read back
-    if len(flat_lons) > 1:
-        dx = flat_lons[1:] - flat_lons[:-1]
-        dy = flat_lats[1:] - flat_lats[:-1]
-        seg_all = np.sqrt(dx * dx + dy * dy)
-    else:
-        seg_all = np.zeros(0)
-
-    # fast path: single-segment lines (the dominant shape once ways are
-    # split at every intersection).  The matrix path reduces to k=0,
-    # frac=(t/2)/t which is EXACTLY 0.5 in IEEE (t/2 is exact, and
-    # round((t/2)/t)=0.5), so 0.5*x0+0.5*x1 reproduces
-    # (1-frac)*x0+frac*x1 bit-for-bit; t<=0 / NaN leave the zero default
-    # exactly as the matrix path's empty `valid` row does.  The guard is
-    # on t/2 and finiteness, matching the matrix condition
-    # `half <= cl and half > ol` in the degenerate corners too: a
-    # subnormal t whose half underflows to 0 fails `half > ol` there
-    # (ol == 0), and t == inf takes the inf/inf frac branch → NaN
-    # midpoint, reproduced explicitly below.
-    two = np.flatnonzero(lens == 2)
-    if len(two):
-        t = seg_all[offsets[two]]
-        g = two[((t / 2.0) > 0) & np.isfinite(t)]
-        inf_g = two[np.isinf(t)]
-        mlon[inf_g] = np.nan
-        mlat[inf_g] = np.nan
-        og = offsets[g]
-        mlon[g] = 0.5 * flat_lons[og] + 0.5 * flat_lons[og + 1]
-        mlat[g] = 0.5 * flat_lats[og] + 0.5 * flat_lats[og + 1]
-
-    MAXL = 4096
-    act = np.flatnonzero((lens >= 3) & (lens - 1 <= MAXL))
-    for r in np.flatnonzero(lens - 1 > MAXL):  # rare huge lines: scalar path
-        o, n = offsets[r], lens[r]
-        i, (x, y) = find_middle_point(
-            np.column_stack([flat_lons[o : o + n], flat_lats[o : o + n]])
-        )
-        idx_out[r], mlon[r], mlat[r] = i, x, y
-    if len(act) == 0:
-        return idx_out, mlon, mlat
-
-    sl = (lens[act] - 1).astype(np.int64)  # segments per active line
-    R = len(act)
-    L = int(sl.max())
-    mat = np.zeros((R, L), dtype=np.float64)
-    row = np.repeat(np.arange(R), sl)
-    cum = np.concatenate([[0], np.cumsum(sl)])
-    within = np.arange(int(sl.sum())) - np.repeat(cum[:-1], sl)
-    mat[row, within] = seg_all[np.repeat(offsets[act], sl) + within]
-    # sequential left-to-right accumulation, vectorized across rows
-    clmat = np.empty((R, L), dtype=np.float64)
-    run = np.zeros(R, dtype=np.float64)
-    for j in range(L):
-        run = run + mat[:, j]
-        clmat[:, j] = run
-    total = run  # padding zeros keep the running sum exact
-    half = total / 2.0
-    ol = np.concatenate([np.zeros((R, 1)), clmat[:, :-1]], axis=1)
-    valid = (half[:, None] <= clmat) & (half[:, None] > ol)
-    has = valid.any(axis=1)
-    rows = np.flatnonzero(has)
-    if len(rows) == 0:
-        return idx_out, mlon, mlat
-    k = L - 1 - np.argmax(valid[rows, ::-1], axis=1)  # LAST satisfying seg
-    tmp = mat[rows, k]
-    half_sub = half[rows] - ol[rows, k]
-    frac = half_sub / tmp
-    p0 = offsets[act[rows]] + k
-    x0, x1 = flat_lons[p0], flat_lons[p0 + 1]
-    y0, y1 = flat_lats[p0], flat_lats[p0 + 1]
-    g = act[rows]
-    idx_out[g] = k
-    mlon[g] = (1.0 - frac) * x0 + frac * x1
-    mlat[g] = (1.0 - frac) * y0 + frac * y1
+    dx = x[1:] - x[:-1]
+    dy = y[1:] - y[:-1]
+    seg = np.sqrt(dx * dx + dy * dy)
+    starts = offsets[:-1]
+    nseg = np.maximum(np.diff(offsets) - 1, 0)
+    cl = running_sums(seg, starts, nseg)
+    half = np.zeros(E, dtype=np.float64)
+    has = nseg > 0
+    half[has] = cl[starts[has] + nseg[has] - 1] / 2.0
+    # every segment of every line: its line and its flat position
+    line = np.repeat(np.arange(E), nseg)
+    pos = np.arange(len(line)) + np.repeat(starts - (np.cumsum(nseg) - nseg), nseg)
+    c = cl[pos]
+    o = np.where(pos == starts[line], 0.0, cl[pos - 1])
+    hit = np.flatnonzero((half[line] <= c) & (half[line] > o))[::-1]
+    g, k = np.unique(line[hit], return_index=True)  # the last hit wins
+    h = hit[k]
+    p = pos[h]
+    frac = (half[g] - o[h]) / seg[p]
+    idx_out[g] = p - starts[g]
+    mlon[g] = (1.0 - frac) * x[p] + frac * x[p + 1]
+    mlat[g] = (1.0 - frac) * y[p] + frac * y[p + 1]
     return idx_out, mlon, mlat
 
 

@@ -46,10 +46,9 @@ def label_propagation(
         best = counted.groupBy("vertex").agg(
             F.max_by("label", F.struct(F.col("c"), (-F.col("label")).alias("nl"))).alias("new_label")
         )
-        new_labels = (
-            labels.join(best, "vertex", "left")
-            .select("vertex", F.coalesce("new_label", "label").alias("label"))
-        )
+        # every vertex is some u of the symmetric pair table, so it has a
+        # neighbor and a row in best: no join back to labels needed
+        new_labels = best.select("vertex", F.col("new_label").alias("label"))
         # eager=False: the sync aggregate below materializes it
         new_labels = localcheckpoint(new_labels, StorageLevel.MEMORY_AND_DISK, eager=False)
         # one sync job: changed labels AND the row count for the lineage

@@ -174,10 +174,8 @@ def split_ways_to_edges(
             #   3. segment ends = flat positions with use_count>1 that are
             #      not a way's first node (osm_loader.go:240-244; the
             #      use_count>1 test is F4, osm_loader.go:275-283)
-            #   4. per-segment left-to-right cost sums via column-wise
-            #      accumulation over a (segments × max_len) padded matrix —
-            #      bit-identical to the Go loop order (x+0.0 == x exactly,
-            #      and haversines are non-negative so -0.0 never appears)
+            #   4. per-segment left-to-right cost sums (geom.running_sums,
+            #      the Go loop order: bit-identical, no length cap)
             #   5. the splice parts of every output line (G6 + WKT)
             flat_nids = pdf["node_id"].to_numpy(dtype=np.int64)
             flat_lons = pdf["lon"].to_numpy(dtype=np.float64)
@@ -191,12 +189,9 @@ def split_ways_to_edges(
                     "osm_loader.go:216-218); pass strict=False to proceed "
                     "on clipped inputs"
                 )
-            if len(flat_lons) > 1:
-                all_d = geom.great_circle_distance(
-                    flat_lons[:-1], flat_lats[:-1], flat_lons[1:], flat_lats[1:]
-                )
-            else:
-                all_d = np.zeros(0)
+            all_d = geom.great_circle_distance(
+                flat_lons[:-1], flat_lats[:-1], flat_lons[1:], flat_lats[1:]
+            )
             way_first = offsets[:-1]
             is_start = np.zeros(len(flat_nids), dtype=bool)
             is_start[way_first] = True
@@ -217,26 +212,7 @@ def split_ways_to_edges(
             # starts[k] .. ends[k]-1 of all_d)
             seg_lens = ends - starts
             S = len(ends)
-            cost = np.zeros(S, dtype=np.float64)
-            long_rows = np.flatnonzero(seg_lens > 512)
-            short = seg_lens <= 512
-            if short.any():
-                sl = seg_lens[short]
-                L = int(sl.max())
-                mat = np.zeros((int(short.sum()), L), dtype=np.float64)
-                row = np.repeat(np.arange(len(sl)), sl)
-                cum = np.concatenate([[0], np.cumsum(sl)])
-                within = np.arange(int(sl.sum())) - np.repeat(cum[:-1], sl)
-                mat[row, within] = all_d[np.repeat(starts[short], sl) + within]
-                acc = np.zeros(len(sl), dtype=np.float64)
-                for j in range(L):
-                    acc = acc + mat[:, j]
-                cost[short] = acc
-            for k in long_rows:  # rare giant segments: exact sequential sum
-                c = 0.0
-                for v in all_d[starts[k] : ends[k]]:
-                    c += v
-                cost[k] = c
+            cost = geom.running_sums(all_d, starts, seg_lens)[ends - 1]
 
             seg_first = way_first[way_of]  # first flat row of each seg's way
             way_ids = pdf["way_id"].to_numpy(dtype=np.int64)[seg_first]

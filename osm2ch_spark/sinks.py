@@ -10,32 +10,15 @@ the JVM via format_string — Java rounds HALF_UP where Go rounds
 half-to-even, which can differ only when the double sits EXACTLY on a
 half boundary at the 6th decimal; weights are sums of haversines (never
 exact halves), so the JVM path is byte-safe for weight.  WKT points ARE
-raw input coordinates (could be exact halves), so WKT point strings are
-formatted Python-side by the W1 split (pipeline.split_ways_to_edges).
+raw input coordinates (could be exact halves), so every WKT point string
+(LINESTRING and vertex POINT) is formatted Python-side by the W1 split
+(pipeline.split_ways_to_edges); the sinks only cut and join them.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
-
-
-# DataType instance, not a DDL string: the string form is parsed at import
-# time and needs an active SparkSession (breaks pytest collection).
-@pandas_udf(StringType())
-def _point_wkt6(lon: pd.Series, lat: pd.Series) -> pd.Series:
-    """Go-parity POINT WKT: Python-side %.6f (correctly-rounded; Java's
-    format_string rounds the shortest repr HALF_UP, which can diverge on
-    raw half-boundary coordinates) — Arrow-vectorized, no per-row Python."""
-    s = np.char.add(
-        np.char.add(np.char.mod("POINT(%.6f", lon.to_numpy(np.float64)), " "),
-        np.char.mod("%.6f)", lat.to_numpy(np.float64)),
-    )
-    return pd.Series(s)
 
 
 def _geojson_linestring_col(lons, lats):
@@ -125,7 +108,9 @@ def vertices_rows(expanded: DataFrame) -> DataFrame:
     order_pos / importance come from the external CH library in the
     reference (out of scope per the north rule) → constant 0.
 
-    Output: (vertex_id, order_pos, importance, lon, lat, first_seen).
+    ``pt`` is that point's ``"%.6f %.6f"`` text, cut out of ``geom_wkt``.
+
+    Output: (vertex_id, order_pos, importance, lon, lat, pt, first_seen).
     """
     src_ev = expanded.select(
         F.col("source_vertex").alias("vertex_id"),
@@ -133,6 +118,7 @@ def vertices_rows(expanded: DataFrame) -> DataFrame:
         F.lit(0).alias("side"),
         F.element_at("geom_lons", 1).alias("lon"),
         F.element_at("geom_lats", 1).alias("lat"),
+        F.substring_index(F.substring_index("geom_wkt", ",", 1), "(", -1).alias("pt"),
         F.size("geom_lons").alias("npts"),
     )
     dst_ev = expanded.select(
@@ -141,6 +127,7 @@ def vertices_rows(expanded: DataFrame) -> DataFrame:
         F.lit(1).alias("side"),
         F.element_at("geom_lons", -1).alias("lon"),
         F.element_at("geom_lats", -1).alias("lat"),
+        F.substring_index(F.substring_index("geom_wkt", ",", -1), ")", 1).alias("pt"),
         F.size("geom_lons").alias("npts"),
     )
     ev = src_ev.unionAll(dst_ev)
@@ -149,7 +136,7 @@ def vertices_rows(expanded: DataFrame) -> DataFrame:
     # geometry, and a vertex with no passing row gets null → (0, 0)
     v = ev.groupBy("vertex_id").agg(
         F.min(order).alias("first_seen"),
-        F.min_by(F.struct("lon", "lat"), F.when(F.col("npts") >= 2, order)).alias("p"),
+        F.min_by(F.struct("lon", "lat", "pt"), F.when(F.col("npts") >= 2, order)).alias("p"),
     )
     return v.select(
         "vertex_id",
@@ -157,21 +144,22 @@ def vertices_rows(expanded: DataFrame) -> DataFrame:
         F.lit(0).alias("importance"),
         F.coalesce(F.col("p.lon"), F.lit(0.0)).alias("lon"),
         F.coalesce(F.col("p.lat"), F.lit(0.0)).alias("lat"),
+        F.coalesce(F.col("p.pt"), F.lit("0.000000 0.000000")).alias("pt"),
         "first_seen",
     )
 
 
 def vertices_csv_rows(expanded: DataFrame, geom_format: str = "wkt") -> DataFrame:
-    """(first_seen, csv_row) — the POINT WKT is formatted Python-side
-    (Arrow-vectorized _point_wkt6): vertex coords are RAW input values
-    that can sit on a %.6f half boundary where Java's shortest-repr
-    HALF_UP diverges from Go's correctly-rounded conversion, unlike the
-    trig-derived weights.  ``geom_format="geojson"`` mirrors -geomf."""
+    """(first_seen, csv_row) — the POINT WKT wraps the ``pt`` string the
+    W1 split formatted with Go-parity %.6f (vertex coords are RAW input
+    values that can sit on a %.6f half boundary where Java's shortest-
+    repr HALF_UP diverges from Go's correctly-rounded conversion), so no
+    Python runs here.  ``geom_format="geojson"`` mirrors -geomf."""
     if geom_format not in ("wkt", "geojson"):
         raise ValueError(f"geom_format must be wkt|geojson, got {geom_format!r}")
     v = vertices_rows(expanded)
     geom_col = (
-        _point_wkt6(F.col("lon"), F.col("lat"))
+        F.concat(F.lit("POINT("), F.col("pt"), F.lit(")"))
         if geom_format == "wkt"
         else _geojson_point_col(F.col("lon"), F.col("lat"))
     )

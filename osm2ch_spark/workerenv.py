@@ -1,12 +1,14 @@
 """Python-worker memory hygiene for fault-expensive hosts.
 
-This sandbox VM provisions pages lazily through the hypervisor: a minor
-page fault costs ~100 µs (measured via udftrace rusage deltas — 18k
-faults/batch ≈ 3 s of SYSTEM time per split-UDF batch), which is why
-``-XX:+AlwaysPreTouch`` is load-bearing on the JVM side.  Python workers
-have the same problem: every Arrow batch allocates tens of MB of numpy
-temporaries and Arrow buffers, and if the allocator returns those pages
-to the kernel between batches, every batch re-faults them — a cost that
+On hosts that provision pages lazily through a hypervisor a minor page
+fault can cost ~100 µs (measured via udftrace rusage deltas — 18k
+faults/batch ≈ 3 s of SYSTEM time per split-UDF batch).  The JVM side
+faults its heap lazily without pretouch: ``session.py`` starts it with
+transparent huge pages, which make first touch cheap
+(BENCH/perf_notes_r04.md §7).  Python workers have no such cover:
+every Arrow batch allocates tens of MB of numpy temporaries and Arrow
+buffers, and if the allocator returns those pages to the kernel
+between batches, every batch re-faults them — a cost that
 does NOT shrink with more cores (fault handling contends), i.e. a direct
 scaling killer.
 

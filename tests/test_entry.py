@@ -43,8 +43,9 @@ def test_registry_shape():
      "embedding_cosine_topk", "pagerank", "geom_way_scalars"],
 )
 def test_query_matches_oracle(spark, ducks, name):
+    import os
     import sys
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
     from check_correctness import compare
 
     qs, os_ = E.queries(), E.oracle_sql()

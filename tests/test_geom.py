@@ -129,11 +129,11 @@ def test_find_middle_point_many_parity():
         np.array([[37.5, 55.5]]),              # single point
         np.array([[37.5, 55.5], [37.5, 55.5]]),  # zero length
         np.array([[0.0, 0.0], [1.0, 0.0], [2.0, 0.0]]),  # exact tie at half
-        # degenerate lens==2 corners for the fast path's bit-parity claim:
+        # degenerate two-point corners:
         np.array([[0.0, 0.0], [5e-324, 0.0]]),   # subnormal t: t/2 underflows
         np.array([[0.0, 0.0], [1e308, 1e308]]),  # t overflows to inf → NaN mid
     ]
-    for n in (2, 3, 5, 17, 130):
+    for n in (2, 3, 5, 17, 130, 600, 5000):
         for _ in range(5):
             lines.append(rng.uniform(-90, 90, size=(n, 2)))
     flat = np.concatenate([l.reshape(-1, 2) for l in lines])
@@ -150,3 +150,23 @@ def test_find_middle_point_many_parity():
         assert same_bits(mlon[i], sx) and same_bits(mlat[i], sy), (
             f"line {i}: midpoint bits differ"
         )
+
+
+def test_find_middle_point_many_memory_is_linear():
+    """One long line in a batch of short ones must not pad the batch to
+    its length: 2,000 three-point lines plus one 4,000-point line stay
+    far below a (lines x longest line) matrix (~200 MB)."""
+    import tracemalloc
+
+    rng = np.random.default_rng(3)
+    lines = [rng.uniform(37, 38, size=(3, 2)) for _ in range(2000)]
+    lines.append(rng.uniform(37, 38, size=(4000, 2)))
+    flat = np.concatenate(lines)
+    offsets = np.concatenate([[0], np.cumsum([len(l) for l in lines])])
+    tracemalloc.start()
+    try:
+        geom.find_middle_point_many(flat[:, 0], flat[:, 1], offsets)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 16 * 2**20, f"peak {peak / 2**20:.1f} MB"

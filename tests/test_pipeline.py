@@ -151,9 +151,11 @@ def ref_vertices_csv(exp_rows):
     return out
 
 
-@pytest.mark.parametrize("name", ["t_junction", "split_shared_node", "zero_length_line"])
+@pytest.mark.parametrize(
+    "name", ["t_junction", "split_shared_node", "zero_length_line", "long_segment"]
+)
 def test_vertices_csv_parity(spark, name):
-    """S5 sink incl. the Python-side %.6f POINT formatting (sinks._point_wkt6)."""
+    """S5 sink incl. the %.6f POINT text the W1 split formats."""
     records = fixtures.micrographs()[name]
     exp_rows = ref_vertices_csv(ref_expanded(records))
     src = fixtures.source_df(spark, [fixtures.records_to_row(records)])

@@ -7,7 +7,7 @@ import io
 
 import pytest
 
-from osm2ch_spark import fixtures, pipeline
+from osm2ch_spark import fixtures, pipeline, sinks
 from osm2ch_spark import tpch_world as W
 
 SF = "/root/testdata/sf0.001"
@@ -43,9 +43,10 @@ def test_restriction_antijoin_broadcasts(spark):
 def _barrier_plans(spark, monkeypatch, names) -> list[str]:
     """Run ``pipeline.build_expanded`` with ``workerenv.materialize_df``
     wrapped to record the plan of every table it checkpoints; returns
-    those plans plus the plan of the returned DataFrame.  Each barrier
-    plan holds the operators between the previous barriers and this one,
-    so together they cover every operator the pipeline runs."""
+    those plans plus the plans of the returned DataFrame and of the two
+    CSV sinks over it.  Each barrier plan holds the operators between the
+    previous barriers and this one, so together they cover every operator
+    the ETL runs."""
     from osm2ch_spark import workerenv
 
     plans = []
@@ -57,7 +58,8 @@ def _barrier_plans(spark, monkeypatch, names) -> list[str]:
 
     monkeypatch.setattr(workerenv, "materialize_df", recording)
     out = pipeline.build_expanded(fixtures.micrograph_source(spark, names))
-    return plans + [plan_of(out)]
+    return plans + [plan_of(out), plan_of(sinks.edges_csv_rows(out)),
+                    plan_of(sinks.vertices_csv_rows(out))]
 
 
 def test_no_row_python_udfs(spark, monkeypatch):
@@ -96,11 +98,12 @@ def test_whole_stage_codegen_present(spark):
 
 
 def test_splice_is_jvm_side(spark, monkeypatch):
-    """G7: the geometry splice over the EXPANDED table must be pure JVM
-    (slice/concat) — Python appears as exactly one FUNCTION, the W1
-    split over way-node rows (it also emits each edge's midpoint and WKT
-    fragments), never on the expanded table.  (Audited on the plans at the
-    materialization barriers; the pass runs exactly once — asserted by
+    """G7: the geometry splice over the EXPANDED table and both CSV sinks
+    must be pure JVM (slice/concat/substring) — Python appears in the
+    whole ETL as exactly one FUNCTION, the W1 split over way-node rows
+    (it also emits each edge's midpoint and WKT fragments), never on the
+    expanded table.  (Audited on the plans at the materialization
+    barriers and the sinks; the pass runs exactly once — asserted by
     test_shared_exchanges_run_python_once.)"""
     import re
 
@@ -117,7 +120,7 @@ def test_splice_is_jvm_side(spark, monkeypatch):
             if m:
                 funcs.add(m.group(1))
     assert funcs == {"split"}, f"unexpected Python passes: {funcs}"
-    assert "BatchEvalPython" not in p
+    assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
 
 
 def test_shared_exchanges_run_python_once():
