@@ -55,9 +55,20 @@ class CheckpointManager:
             "partition_rows": self._partition_rows(path),
             "checkpoint_path": path,
         }
-        with open(self._lineage_path(), "a") as f:
-            f.write(json.dumps(meta, sort_keys=True) + "\n")
+        self._append_lineage(json.dumps(meta, sort_keys=True) + "\n")
         return df.sparkSession.read.parquet(path)
+
+    def _append_lineage(self, line: str) -> None:
+        """Append one lineage row.  A torn last line (a crash mid-append
+        leaves it unterminated) is cut off first: appended straight after
+        it, the new row would share its line and be skipped by
+        ``latest()``."""
+        with open(self._lineage_path(), "a+b") as f:
+            f.seek(0)
+            data = f.read()
+            if data and not data.endswith(b"\n"):
+                f.truncate(data.rfind(b"\n") + 1)
+            f.write(line.encode())
 
     @staticmethod
     def _partition_rows(path: str) -> list[dict]:

@@ -1,9 +1,11 @@
 """Python worker daemon for local sessions (``spark.python.daemon.module``).
 
-Spark starts one daemon per executor and forks the Python workers that
-run UDF tasks from it.  ``session.get_spark`` points local masters at this
-module, which prepares the process once and then hands off to
-``pyspark.daemon.manager()``:
+Spark starts one daemon per executor and worker environment, and forks
+the Python workers that run UDF and RDD tasks from it; ``get_spark``
+turns simplified UDF tracebacks off so SQL and RDD tasks share one
+environment, hence one daemon and its warm workers.  It points local
+masters at this module, which prepares the process once and then hands
+off to ``pyspark.daemon.manager()``:
 
 * **Preload.**  numpy, pandas, pyarrow, the Arrow serializers and every
   engine module a UDF body references are imported before the first

@@ -50,21 +50,72 @@ def shuffle_partitions(spark) -> int:
     return int(value) if value.isdigit() else spark.sparkContext.defaultParallelism
 
 
+# /dev/shm takes the scratch space only with this much free on it, and
+# only when that is at most half of the memory this process may use:
+# tmpfs pages are RAM, charged to the cgroup of the process that writes
+# them, so a shuffle that fills them competes with the heap and the
+# workers.
+_SHM_MIN_FREE = 32 * 1024**3
+_SHM = "/dev/shm"
+
+
+def _meminfo_bytes(field: str) -> int | None:
+    """One ``/proc/meminfo`` field (e.g. ``"MemTotal"``) in bytes, or
+    None when it cannot be read."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith(field + ":"):
+                    return int(line.split()[1]) * 1024
+    except OSError:
+        pass
+    return None
+
+
+def _cgroup_limit_bytes() -> int | None:
+    """This process's cgroup memory limit in bytes, or None when it has
+    none or it cannot be read."""
+    limits = []
+    for path in ("/sys/fs/cgroup/memory.max",  # cgroup v2; "max" = no limit
+                 "/sys/fs/cgroup/memory/memory.limit_in_bytes"):  # cgroup v1
+        try:
+            with open(path) as f:
+                v = f.read().strip()
+        except OSError:
+            continue
+        if v.isdigit():
+            limits.append(int(v))
+    return min(limits, default=None)
+
+
+def _memory_bytes(field: str) -> int | None:
+    """A ``/proc/meminfo`` field or the cgroup limit, whichever is lower;
+    None when neither can be read."""
+    known = [b for b in (_meminfo_bytes(field), _cgroup_limit_bytes()) if b is not None]
+    return min(known, default=None)
+
+
 def _default_local_dir() -> str:
     """Scratch-space placement for shuffle files and DISK_ONLY blocks.
 
     Priority: $OSM2CH_LOCAL_DIR (cluster operators point this at their
-    NVMe scratch array) > a RAM-backed dir when /dev/shm is writable
-    with ≥32 GB free (this sandbox's virtual disk is the I/O floor
-    otherwise) > Spark's own default (java.io.tmpdir)."""
+    NVMe scratch array) > a RAM-backed dir when /dev/shm is writable,
+    has ≥32 GB free and those 32 GB are at most half of MemTotal or of
+    the cgroup limit, whichever is lower (a virtual disk is the I/O
+    floor otherwise) > Spark's own default (java.io.tmpdir).  The guard
+    is checked once, at session start; nothing bounds what a run then
+    writes there.  A run whose shuffle and checkpoint blocks outgrow the
+    tmpfs fails mid-run with ENOSPC ("No space left on device"); point
+    $OSM2CH_LOCAL_DIR at a disk with room to get past it."""
     override = os.environ.get("OSM2CH_LOCAL_DIR")
     if override:
         return override
-    shm = "/dev/shm"
     try:
-        st = os.statvfs(shm)
-        if st.f_bavail * st.f_frsize >= 32 * 1024**3 and os.access(shm, os.W_OK):
-            path = os.path.join(shm, "osm2ch-spark-local")
+        st = os.statvfs(_SHM)
+        if (st.f_bavail * st.f_frsize >= _SHM_MIN_FREE
+                and 2 * _SHM_MIN_FREE <= (_memory_bytes("MemTotal") or 0)
+                and os.access(_SHM, os.W_OK)):
+            path = os.path.join(_SHM, "osm2ch-spark-local")
             os.makedirs(path, exist_ok=True)
             return path
     except OSError:
@@ -77,22 +128,7 @@ def _default_driver_memory() -> str:
     or the cgroup memory limit, whichever is lower — capped at 48 GB and
     at least 1 GB, so a default session starts on whatever host it gets
     (the heap is pre-sized with -Xms below)."""
-    avail = []
-    try:
-        with open("/proc/meminfo") as f:
-            avail += [int(l.split()[1]) * 1024 for l in f if l.startswith("MemAvailable:")]
-    except OSError:
-        pass
-    for path in ("/sys/fs/cgroup/memory.max",  # cgroup v2; "max" = no limit
-                 "/sys/fs/cgroup/memory/memory.limit_in_bytes"):  # cgroup v1
-        try:
-            with open(path) as f:
-                v = f.read().strip()
-        except OSError:
-            continue
-        if v.isdigit():
-            avail.append(int(v))
-    half_mb = min(avail, default=96 * 1024**3) // 2 // 1024**2
+    half_mb = (_memory_bytes("MemAvailable") or 96 * 1024**3) // 2 // 1024**2
     return f"{max(1024, min(48 * 1024, half_mb))}m"
 
 
@@ -135,6 +171,21 @@ def get_spark(
         # Arrow on every JVM<->Python boundary (grouped-map UDFs W1/J3).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        # One Python worker pool per session.  Spark keys its worker
+        # daemons by the worker environment, and with simplified
+        # tracebacks on (the default) only SQL UDF runners add
+        # SPARK_SIMPLIFIED_TRACEBACK to it, so once a session has run any
+        # RDD Python job its first mapInPandas starts a second pydaemon
+        # and cold workers of its own (BENCH/ab_one_pool.json; the CLI
+        # runs no RDD job, so it starts one pool either way).  Off, both
+        # fork from one warm daemon; worker errors then carry the full
+        # traceback, which the CLI still reduces to one ERROR: line.
+        .config("spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled", "false")
+        # No per-call call-site capture: with it on, every DataFrame and
+        # Column call walks the Python stack, tries `import ipykernel`
+        # and makes two extra py4j round trips: ~2 ms of driver time per
+        # call, and a pass makes hundreds of calls.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Dimension tables (restrictions, tag whitelists) broadcast freely.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Prefer shuffled-hash over sort-merge: every join in this engine

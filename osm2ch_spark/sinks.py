@@ -97,7 +97,7 @@ def edges_csv_rows(expanded: DataFrame, units: str = "km",
     )
 
 
-def vertices_rows(expanded: DataFrame) -> DataFrame:
+def vertices_rows(expanded: DataFrame, geom_format: str = "wkt") -> DataFrame:
     """S5/A2 — cmd/osm2ch/main.go:132-137,165-187.
 
     Vertex set = every source/target of every expanded edge, ordered by
@@ -108,67 +108,66 @@ def vertices_rows(expanded: DataFrame) -> DataFrame:
     order_pos / importance come from the external CH library in the
     reference (out of scope per the north rule) → constant 0.
 
-    ``pt`` is that point's ``"%.6f %.6f"`` text, cut out of ``geom_wkt``.
+    Only what ``geom_format`` writes rides the vertex aggregate: for
+    ``"wkt"`` the point's ``"%.6f %.6f"`` text, cut out of ``geom_wkt``
+    (the W1 split formatted it with Go-parity %.6f: vertex coords are
+    RAW input values that can sit on a %.6f half boundary where Java's
+    shortest-repr HALF_UP diverges from Go's correctly-rounded
+    conversion); for ``"geojson"`` (-geomf) the ``lon``/``lat`` doubles.
 
-    Output: (vertex_id, order_pos, importance, lon, lat, pt, first_seen).
+    Output: (vertex_id, order_pos, importance, geom, first_seen).
     """
-    src_ev = expanded.select(
-        F.col("source_vertex").alias("vertex_id"),
-        F.col("expanded_id"),
-        F.lit(0).alias("side"),
-        F.element_at("geom_lons", 1).alias("lon"),
-        F.element_at("geom_lats", 1).alias("lat"),
-        F.substring_index(F.substring_index("geom_wkt", ",", 1), "(", -1).alias("pt"),
-        F.size("geom_lons").alias("npts"),
-    )
-    dst_ev = expanded.select(
-        F.col("target_vertex").alias("vertex_id"),
-        F.col("expanded_id"),
-        F.lit(1).alias("side"),
-        F.element_at("geom_lons", -1).alias("lon"),
-        F.element_at("geom_lats", -1).alias("lat"),
-        F.substring_index(F.substring_index("geom_wkt", ",", -1), ")", 1).alias("pt"),
-        F.size("geom_lons").alias("npts"),
-    )
-    ev = src_ev.unionAll(dst_ev)
+    if geom_format == "wkt":
+        src_p = F.substring_index(F.substring_index("geom_wkt", ",", 1), "(", -1)
+        dst_p = F.substring_index(F.substring_index("geom_wkt", ",", -1), ")", 1)
+
+        def geom(p):
+            return F.concat(F.lit("POINT("), F.coalesce(p, F.lit("0.000000 0.000000")), F.lit(")"))
+    elif geom_format == "geojson":
+        src_p = F.struct(F.element_at("geom_lons", 1).alias("lon"),
+                         F.element_at("geom_lats", 1).alias("lat"))
+        dst_p = F.struct(F.element_at("geom_lons", -1).alias("lon"),
+                         F.element_at("geom_lats", -1).alias("lat"))
+
+        def geom(p):
+            return _geojson_point_col(F.coalesce(p["lon"], F.lit(0.0)),
+                                      F.coalesce(p["lat"], F.lit(0.0)))
+    else:
+        raise ValueError(f"geom_format must be wkt|geojson, got {geom_format!r}")
+
+    ev = expanded.select(
+        F.col("source_vertex").alias("vertex_id"), "expanded_id", F.lit(0).alias("side"),
+        src_p.alias("p"), F.size("geom_lons").alias("npts"),
+    ).unionAll(expanded.select(
+        F.col("target_vertex").alias("vertex_id"), "expanded_id", F.lit(1).alias("side"),
+        dst_p.alias("p"), F.size("geom_lons").alias("npts"),
+    ))
     order = F.struct("expanded_id", "side")
     # min_by skips null orderings: a row failing F7 never supplies the
     # geometry, and a vertex with no passing row gets null → (0, 0)
     v = ev.groupBy("vertex_id").agg(
         F.min(order).alias("first_seen"),
-        F.min_by(F.struct("lon", "lat", "pt"), F.when(F.col("npts") >= 2, order)).alias("p"),
+        F.min_by("p", F.when(F.col("npts") >= 2, order)).alias("p"),
     )
     return v.select(
         "vertex_id",
         F.lit(0).alias("order_pos"),
         F.lit(0).alias("importance"),
-        F.coalesce(F.col("p.lon"), F.lit(0.0)).alias("lon"),
-        F.coalesce(F.col("p.lat"), F.lit(0.0)).alias("lat"),
-        F.coalesce(F.col("p.pt"), F.lit("0.000000 0.000000")).alias("pt"),
+        geom(F.col("p")).alias("geom"),
         "first_seen",
     )
 
 
 def vertices_csv_rows(expanded: DataFrame, geom_format: str = "wkt") -> DataFrame:
-    """(first_seen, csv_row) — the POINT WKT wraps the ``pt`` string the
-    W1 split formatted with Go-parity %.6f (vertex coords are RAW input
-    values that can sit on a %.6f half boundary where Java's shortest-
-    repr HALF_UP diverges from Go's correctly-rounded conversion), so no
+    """(first_seen, csv_row) in the reference layout, JVM-side: no
     Python runs here.  ``geom_format="geojson"`` mirrors -geomf."""
-    if geom_format not in ("wkt", "geojson"):
-        raise ValueError(f"geom_format must be wkt|geojson, got {geom_format!r}")
-    v = vertices_rows(expanded)
-    geom_col = (
-        F.concat(F.lit("POINT("), F.col("pt"), F.lit(")"))
-        if geom_format == "wkt"
-        else _geojson_point_col(F.col("lon"), F.col("lat"))
-    )
+    v = vertices_rows(expanded, geom_format)
     row = F.concat_ws(
         ";",
         F.format_string("%d", "vertex_id"),
         F.format_string("%d", "order_pos"),
         F.format_string("%d", "importance"),
-        geom_col,
+        F.col("geom"),
     )
     return v.select(F.col("first_seen"), row.alias("csv_row"))
 

@@ -1,24 +1,15 @@
-"""Python-worker memory hygiene for fault-expensive hosts.
+"""Python-worker memory settings and the pipeline's one barrier.
 
-On hosts that provision pages lazily through a hypervisor a minor page
-fault can cost ~100 µs (measured via udftrace rusage deltas — 18k
-faults/batch ≈ 3 s of SYSTEM time per split-UDF batch).  The JVM side
-faults its heap lazily without pretouch: ``session.py`` starts it with
-transparent huge pages, which make first touch cheap
-(BENCH/perf_notes_r04.md §7).  Python workers have no such cover:
-every Arrow batch allocates tens of MB of numpy temporaries and Arrow
-buffers, and if the allocator returns those pages to the kernel
-between batches, every batch re-faults them — a cost that
-does NOT shrink with more cores (fault handling contends), i.e. a direct
-scaling killer.
-
-The fix: ``get_spark`` exports MALLOC_MMAP_THRESHOLD_/
-MALLOC_TRIM_THRESHOLD_ so glibc serves large allocations from the
-retained brk heap instead of transient mmaps and never trims it back;
-the first real batch then warms the heap and later batches run
-fault-free.
-
-Worker start-up (preload, gc.freeze, zip invalidation) is ``pydaemon.py``.
+``get_spark`` exports :data:`MALLOC_ENV` before the JVM starts (and as
+executorEnv), so every worker serves Arrow-batch numpy and Arrow buffers
+from a retained glibc heap: the first batch warms it and later batches
+run without page faults, which on a lazily provisioned host cost ~100 µs
+each and contend across cores (BENCH/perf_notes_r03.md §2,
+BENCH/perf_notes_r04.md §2).  :func:`materialize_df` is the pipeline's
+materialization barrier (BENCH/ab_pipe_ckpt_level.json).  Worker
+start-up -- preload, freeze, zip invalidation, one daemon per session --
+is ``pydaemon.py`` (BENCH/ab_pydaemon_perfbench.json,
+BENCH/ab_one_pool.json).
 """
 
 from __future__ import annotations

@@ -198,6 +198,25 @@ def test_resume_skips_torn_lineage_tail(spark, tmp_path, graphs):
     assert it == 4 and state.count() > 0
 
 
+def test_commit_after_torn_lineage_tail_is_latest(spark, tmp_path):
+    """The first commit after a crash cuts the torn tail off before it
+    appends, so resume picks up the new row, not the one before it."""
+    import json
+
+    from osm2ch_spark.graph.checkpoint import CheckpointManager
+
+    mgr = CheckpointManager(str(tmp_path / "torn"), "pagerank", every=2)
+    state = spark.range(3).withColumnRenamed("id", "vertex")
+    mgr.commit(state, 4, delta=0.5, rows=3)
+    with open(mgr._lineage_path(), "a") as f:
+        f.write('{"algorithm": "pagerank", "iteration": 6, "rows"')  # torn
+    mgr.commit(state, 6, delta=0.25, rows=3)
+    meta = mgr.latest()
+    assert meta["iteration"] == 6 and meta["delta"] == 0.25
+    with open(mgr._lineage_path()) as f:
+        assert [json.loads(line)["iteration"] for line in f] == [4, 6]
+
+
 def test_partition_rows_tolerates_nonlocal_path():
     from osm2ch_spark.graph.checkpoint import CheckpointManager
 

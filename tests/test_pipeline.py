@@ -164,6 +164,11 @@ def test_vertices_csv_parity(spark, name):
     assert got_rows == exp_rows
 
 
+def test_vertices_rows_rejects_unknown_format():
+    with pytest.raises(ValueError, match="wkt|geojson"):
+        sinks.vertices_rows(None, geom_format="kml")
+
+
 def test_geojson_edges_sink(spark):
     """-geomf geojson parity (converter_geojson.go:10-21): parsed-value
     equality with the expanded geometry and with the Python converter."""
