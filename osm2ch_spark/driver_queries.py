@@ -409,8 +409,7 @@ def q_anti_join_no(spark, sf):
     """J4 — delete (from,to) matches of no_* rules (osm_loader.go:348-389)."""
     expanded = W.tpch_expanded(spark, sf)
     rules = W.tpch_rules(expanded)
-    seen = pipeline.ways_seen(W.tpch_ways(spark, sf))
-    return pipeline.apply_no_restrictions(expanded, rules, seen).select(
+    return pipeline.apply_no_restrictions(expanded, rules, W.tpch_ways(spark, sf)).select(
         "expanded_id", "source_way", "target_way"
     )
 

@@ -180,6 +180,36 @@ def micrographs() -> dict[str, list]:
         for i in range(700)
     ] + [node(1700, 37.74599, 55.809), node(1701, 37.74599, 55.811),
          way(1, list(range(1000, 1700)), HW), way(2, [1700, 1649, 1701], HW)]
+    # the junction and an interior node are repeated after the ways with
+    # other coordinates: the first record of each id wins
+    g["duplicate_node"] = [
+        node(1101, 37.7000, 55.8200),
+        node(1102, 37.7010, 55.8205),
+        node(1103, 37.7020, 55.8210),  # the junction
+        node(1104, 37.7030, 55.8205),
+        way(1, [1101, 1102, 1103], HW),
+        way(2, [1103, 1104], HW),
+        node(1103, 37.7025, 55.8215),
+        node(1102, 37.7015, 55.8195),
+    ]
+    # an only_* rule whose `to` way is a footway (not kept): the rule is
+    # skipped, so no continuation from way 1 at the via node is deleted
+    g["only_to_filtered_way"] = [
+        node(1201, 37.7100, 55.8300),
+        node(1202, 37.7110, 55.8305),  # via
+        node(1203, 37.7120, 55.8310),
+        node(1204, 37.7110, 55.8315),
+        node(1205, 37.7120, 55.8295),
+        way(1, [1201, 1202], HW),
+        way(2, [1202, 1203], HW),
+        way(3, [1202, 1204], {"highway": "footway"}),
+        way(4, [1202, 1205], HW),
+        relation(
+            9006,
+            {"restriction": "only_straight_on"},
+            [member("way", 1, "from"), member("node", 1202, "via"), member("way", 3, "to")],
+        ),
+    ]
     # non-highway + non-whitelisted tags (filter tests)
     g["tag_filters"] = [
         node(901, 37.6800, 55.7900),

@@ -1,14 +1,19 @@
 """The osm2ch pipeline as one DataFrame DAG with eager barriers.
 
 Stage map (reference file:line → here):
-  use counts      osm_loader.go:204-221  → node_use_count (A1)
+  node scan       osm_loader.go:80-103   → the node window of
+                                           split_ways_to_edges (J1 + the
+                                           first-wins node lookup)
+  use counts      osm_loader.go:204-221  → the same window (A1; the
+                                           standalone node_use_count
+                                           shares its endpoint weight)
   way splitting   osm_loader.go:223-273  → split_ways_to_edges (W1, Arrow UDF;
                                            also G6 + the WKT fragments)
   vertex filter   osm_loader.go:275-283  → the use_count > 1 test in
                                            split_ways_to_edges (F4)
   edge expansion  osm_loader.go:285-343  → expand_edges (J3 + F5/F6 + ID2)
-  "no" pass       osm_loader.go:348-389  → apply_no_restrictions (J4)
-  "only" pass     osm_loader.go:390-432  → apply_only_restrictions (J5)
+  "no" pass       osm_loader.go:348-389  → apply_restrictions (J4)
+  "only" pass     osm_loader.go:390-432  → apply_restrictions (J5)
   geometry splice osm_loader.go:315-320  → splice_geometry (G7, JVM-side)
 
 Geometry is carried as two parallel ARRAY<DOUBLE> columns (geom_lons,
@@ -27,7 +32,7 @@ deletion predicates.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -49,14 +54,22 @@ NO_TYPES = ("no_left_turn", "no_right_turn", "no_straight_on")
 ONLY_TYPES = ("only_left_turn", "only_right_turn", "only_straight_on")
 
 
+def _way_node_rows(ways: DataFrame, *cols: str) -> DataFrame:
+    """One row per way-node reference: the way's ``cols``, ``pos``,
+    ``node_id`` and ``_w``, the node's A1 use weight from this reference
+    (osm_loader.go:209-215: 2 at either end of the way, 1 inside)."""
+    wn = ways.select(*cols, F.size("nodes").alias("_n"), F.posexplode("nodes").alias("pos", "node_id"))
+    end = (F.col("pos") == 0) | (F.col("pos") == F.col("_n") - 1)
+    return wn.withColumn("_w", F.when(end, F.lit(2)).otherwise(F.lit(1))).drop("_n")
+
+
 def node_use_count(ways: DataFrame) -> DataFrame:
     """A1 — osm_loader.go:204-221: endpoints +2, interior +1, summed per
-    node over all kept ways.  Output (node_id, use_count)."""
-    wn = ways.select(F.col("way_id"), F.size("nodes").alias("n"), F.posexplode("nodes").alias("pos", "node_id"))
-    w = wn.withColumn(
-        "w", F.when((F.col("pos") == 0) | (F.col("pos") == F.col("n") - 1), F.lit(2)).otherwise(F.lit(1))
-    )
-    return w.groupBy("node_id").agg(F.sum("w").cast("long").alias("use_count"))
+    node over all kept ways.  Output (node_id, use_count).  The pipeline
+    computes the same sum inside the W1 node window
+    (split_ways_to_edges); this standalone aggregate serves callers that
+    want the counts alone."""
+    return _way_node_rows(ways).groupBy("node_id").agg(F.sum("_w").cast("long").alias("use_count"))
 
 
 EDGE_SCHEMA = StructType(
@@ -95,20 +108,28 @@ def _way_offsets(pdf):
     return np.concatenate([[0], change + 1, [len(pdf)]])
 
 
-def split_ways_to_edges(
-    ways: DataFrame,
-    nodes: DataFrame,
-    use_counts: DataFrame,
-    strict: bool = False,
-) -> DataFrame:
-    """W1 + ID1 — osm_loader.go:223-273.
+def split_ways_to_edges(ways: DataFrame, nodes: DataFrame, strict: bool = False) -> DataFrame:
+    """J1 + A1 + W1 + ID1 — osm_loader.go:80-103, :204-221, :223-273.
 
-    One shuffle (the re-group by way) + one Arrow batch pass; all per-row
-    math is numpy (haversine cumsum).  Emits forward edge then — for
-    two-way ways — the reverse edge (reversed geometry, same cost,
-    was_oneway=False), restarting accumulation at each split node, exactly
-    as the reference loop does.  Edge IDs are 1-based sequential in
-    (scan order, split order, direction) via two-phase numbering.
+    ``nodes`` holds the raw node records (node_id, lon, lat, scan_key):
+    duplicates allowed, ``scan_key`` any orderable column giving the scan
+    order.  One exchange by node_id feeds the split's node side: the
+    way-node rows (each carrying its A1 weight) and the node records are
+    unioned, hash-partitioned on node_id once, and one window per node
+    computes ``use_count`` (the sum of the weights) and the coordinates
+    of the FIRST record in scan_key order (osm_loader.go:91-98).  No
+    node-side table is broadcast or joined: a planet's node set never
+    has to fit one executor.  The price: node records that no kept way
+    references (buildings, landuse: most of a real extract's) ride the
+    exchange and the window sort too, where a broadcast semi-join used
+    to drop them first (BENCH/ab_node_exchange.json,
+    ``unreferenced_nodes``).  Then one more shuffle (the re-group by way)
+    and one Arrow batch pass; all per-row math is numpy (haversine
+    cumsum).  Emits forward edge then — for two-way ways — the reverse
+    edge (reversed geometry, same cost, was_oneway=False), restarting
+    accumulation at each split node, exactly as the reference loop does.
+    Edge IDs are 1-based sequential in (scan order, split order,
+    direction) via two-phase numbering.
 
     The same pass computes each edge's splice parts (G6, the Python half
     of G7), so no second Python pass re-ships the geometry:
@@ -121,24 +142,35 @@ def split_ways_to_edges(
     repr HALF_UP, which can differ on raw input coordinates
     (converter_wkt.go:9-15).
 
-    ``strict=True`` enforces the reference's fail-fast on a way-node
-    reference absent from the node scan (osm_loader.go:216-218) INSIDE
-    this pass, for free: the node join becomes a left join and the Arrow
-    pass raises on the resulting NaN coordinate — no separate validation
-    job.  ``strict=False`` keeps the permissive inner join (missing nodes
-    silently shorten the way, for pre-clipped extracts).
+    A way node with no node record gets null coordinates from the window.
+    ``strict=True`` enforces the reference's fail-fast on such a
+    reference (osm_loader.go:216-218) INSIDE the Arrow pass, which raises
+    on the NaN coordinate — no separate validation job.  ``strict=False``
+    drops those rows (missing nodes silently shorten the way, for
+    pre-clipped extracts).
     """
-    node_join_type = "left" if strict else "inner"
-    wn = ways.select(
-        "way_id", "oneway", "repo", "path", "seq", F.posexplode("nodes").alias("pos", "node_id")
-    )
+    n_part = shuffle_partitions(ways.sparkSession)
+    per_way = ("way_id", "oneway", "repo", "path", "seq")
+    wn = _way_node_rows(ways, *per_way)
+    recs = nodes.select("node_id", F.struct("lon", "lat").alias("_xy"), "scan_key")
+    by_node = Window.partitionBy("node_id")
+    # the explicit-N repartition satisfies the window's distribution (no
+    # second exchange); node records carry a null _w, way-node rows a
+    # null scan_key, so each aggregate reads only its own side
     wn = (
-        wn.join(nodes, "node_id", node_join_type)
-        .join(use_counts, "node_id", "left")
+        wn.unionByName(recs, allowMissingColumns=True)
+        .repartition(n_part, F.col("node_id"))
         .select(
-            "way_id", "oneway", "repo", "path", "seq", "pos",
-            "node_id", "lon", "lat", F.coalesce("use_count", F.lit(0)).alias("use_count"),
+            *per_way, "pos", "node_id", "_w",
+            F.sum("_w").over(by_node).alias("use_count"),
+            F.min_by("_xy", "scan_key").over(by_node).alias("_xy"),
         )
+        .filter(F.col("_w").isNotNull())
+    )
+    if not strict:
+        wn = wn.filter(F.col("_xy").isNotNull())
+    wn = wn.select(
+        *per_way, "pos", "node_id", F.col("_xy.lon").alias("lon"), F.col("_xy.lat").alias("lat"), "use_count"
     )
     # Re-group each way's rows CONTIGUOUSLY via repartition + partition-
     # local sort, NOT collect_list(struct)+array_sort: the struct-list
@@ -148,7 +180,6 @@ def split_ways_to_edges(
     # allocation-free.  (repo, path, seq) is the way's identity; pos
     # orders its nodes; the Arrow pass re-derives the way boundaries from
     # key changes and carries split ways across batch edges.
-    n_part = shuffle_partitions(ways.sparkSession)
     flat = wn.repartition(
         n_part, F.col("repo"), F.col("path"), F.col("seq")
     ).sortWithinPartitions("repo", "path", "seq", "pos")
@@ -432,51 +463,54 @@ def expand_edges(edges: DataFrame) -> DataFrame:
     return out
 
 
-def ways_seen(ways: DataFrame) -> DataFrame:
-    """waysSeen — osm_loader.go:229-232: every kept way id."""
-    return ways.select("way_id").distinct()
+def apply_restrictions(expanded: DataFrame, restrictions: DataFrame, ways: DataFrame) -> DataFrame:
+    """J4 + J5 — osm_loader.go:348-432: delete the expanded edges that a
+    no_* or only_* restriction forbids, both families in ONE anti-join on
+    ``source_way == from_id``:
+      no_*   — the row's target_way == to (the via node is NOT checked —
+               a reference quirk we reproduce);
+      only_* — the row's target_way != to and src_target_node == via
+               (only the mandated continuation survives).
+    Deleting a row when either family matches is what the reference's
+    two passes leave, since a deleted row can never match again.
 
-
-def _valid_rules(restrictions: DataFrame, seen: DataFrame, types) -> DataFrame:
-    """Shared member-shape + waysSeen gating of J4/J5
-    (osm_loader.go:354-371 and :396-413)."""
-    r = restrictions.filter(
-        F.col("rtype").isin(list(types))
+    Member-shape gates as at osm_loader.go:354-371 and :396-413.  The
+    waysSeen gate on ``from`` is implied by the equi key (every expanded
+    row's source_way is a kept way); the gate on ``to`` is a semi-join
+    against ``ways`` — it matters for only_* rules, whose residual would
+    otherwise delete every continuation from ``from`` at ``via``."""
+    rules = restrictions.filter(
+        F.col("rtype").isin(list(NO_TYPES + ONLY_TYPES))
         & (F.col("from_type") == "way")
         & (F.col("to_type") == "way")
         & (F.col("via_type") == "node")
+    ).join(ways.select(F.col("way_id").alias("to_id")), "to_id", "left_semi")
+    rules = rules.select(
+        F.col("from_id").alias("r_from"),
+        F.col("to_id").alias("r_to"),
+        F.col("via_id").alias("r_via"),
+        F.col("rtype").isin(list(NO_TYPES)).alias("r_no"),
     )
-    r = r.join(seen.withColumnRenamed("way_id", "from_id"), "from_id", "left_semi")
-    r = r.join(seen.withColumnRenamed("way_id", "to_id"), "to_id", "left_semi")
-    return r
-
-
-def apply_no_restrictions(expanded: DataFrame, restrictions: DataFrame, seen: DataFrame) -> DataFrame:
-    """J4 — osm_loader.go:348-389: delete expanded edges whose
-    (source_way, target_way) matches a no_* rule.  Via node NOT checked —
-    a reference quirk we reproduce.  Broadcast anti-join (rules tiny)."""
-    rules = _valid_rules(restrictions, seen, NO_TYPES).select(
-        F.col("from_id").alias("source_way"), F.col("to_id").alias("target_way")
+    forbids = F.when(F.col("r_no"), F.col("target_way") == F.col("r_to")).otherwise(
+        (F.col("target_way") != F.col("r_to")) & (F.col("src_target_node") == F.col("r_via"))
     )
     # no broadcast hint: real restriction tables are tiny and Catalyst
     # broadcasts them on its own; a forced hint breaks down when a caller
     # passes a large rules table (AQE then picks shuffled hash join)
-    return expanded.join(rules, ["source_way", "target_way"], "left_anti")
+    return expanded.join(rules, (F.col("source_way") == F.col("r_from")) & forbids, "left_anti")
 
 
-def apply_only_restrictions(expanded: DataFrame, restrictions: DataFrame, seen: DataFrame) -> DataFrame:
-    """J5 — osm_loader.go:390-432: for only_* rules keep just the mandated
-    continuation: delete rows with source_way==from AND target_way!=to AND
-    src_target_node==via."""
-    rules = _valid_rules(restrictions, seen, ONLY_TYPES).select(
-        F.col("from_id").alias("r_from"), F.col("to_id").alias("r_to"), F.col("via_id").alias("r_via")
-    )
-    cond = (
-        (F.col("source_way") == F.col("r_from"))
-        & (F.col("target_way") != F.col("r_to"))
-        & (F.col("src_target_node") == F.col("r_via"))
-    )
-    return expanded.join(rules, cond, "left_anti")
+def apply_no_restrictions(expanded: DataFrame, restrictions: DataFrame, ways: DataFrame) -> DataFrame:
+    """J4 alone — osm_loader.go:348-389: apply_restrictions over the
+    no_* rules (the ``anti_join_no_restrictions`` driver query)."""
+    return apply_restrictions(expanded, restrictions.filter(F.col("rtype").isin(list(NO_TYPES))), ways)
+
+
+def apply_only_restrictions(expanded: DataFrame, restrictions: DataFrame, ways: DataFrame) -> DataFrame:
+    """J5 alone — osm_loader.go:390-432: apply_restrictions over the
+    only_* rules.  The pipeline no longer calls it; perfbench/spans.py
+    still wraps it by name."""
+    return apply_restrictions(expanded, restrictions.filter(F.col("rtype").isin(list(ONLY_TYPES))), ways)
 
 
 def splice_geometry(expanded: DataFrame, edges: DataFrame) -> DataFrame:
@@ -534,8 +568,9 @@ def build_expanded(source: DataFrame, tag_whitelist: list[str] | None = None,
     ``strict=True`` mirrors the reference's fail-fast contract: a way
     node absent from the node scan is a hard error (osm_loader.go:216-218)
     rather than a silently shorter geometry.  The check is folded into
-    the W1 node join (left join + NaN raise inside the Arrow pass) — no
-    extra job beyond the pipeline's own materialization barriers.  Note
+    the W1 node window (null coordinates + NaN raise inside the Arrow
+    pass) — no extra job beyond the pipeline's own materialization
+    barriers.  Note
     build_expanded eagerly materializes its fan-out barriers (slim /
     split / expand), so Spark jobs run during this call and a
     strict violation raises HERE, not on the caller's first action
@@ -564,19 +599,16 @@ def build_expanded(source: DataFrame, tag_whitelist: list[str] | None = None,
     )
     ways = P.scan_ways_slim(slim, tag_whitelist)
     restrictions = P.scan_restrictions_slim(slim)
-    counts = node_use_count(ways)
-    # membership probe rides the counts aggregation (same node_id keys)
-    nodes = P.scan_nodes_slim(slim, counts)
-    # edges feeds the expansion twice (e1/e2) and the splice geometry
-    # join; with_sequential_id checkpoints the ranked split output — the
-    # split UDF runs once.
-    edges = split_ways_to_edges(ways, nodes, counts, strict=strict)
-    # the numbered pair table feeds the two anti-join probes and the
+    # raw node records with their scan-order key: the split's one node_id
+    # exchange does the use counts, the membership probe and the
+    # first-wins dedup in one window.  edges feeds the expansion twice
+    # (e1/e2) and the splice geometry join; with_sequential_id
+    # checkpoints the ranked split output — the split UDF runs once.
+    edges = split_ways_to_edges(ways, P.scan_nodes_slim(slim), strict=strict)
+    # the numbered pair table feeds the restriction anti-join and the
     # splice; its ranked table is checkpointed — the self-join runs once.
     expanded = expand_edges(edges)
-    seen = ways_seen(ways)
-    expanded = apply_no_restrictions(expanded, restrictions, seen)
-    expanded = apply_only_restrictions(expanded, restrictions, seen)
+    expanded = apply_restrictions(expanded, restrictions, ways)
     expanded = splice_geometry(expanded, edges)
     return expanded.select(
         "expanded_id",

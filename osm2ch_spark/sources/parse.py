@@ -15,12 +15,14 @@ Every record carries the order key ``(repo, path, seq)`` (seq = line
 number within the file, FIXTURES.md §1) which drives the reference's
 scan-order semantics: sequential edge IDs (osm_loader.go:228), first-wins
 node dedup (osm_loader.go:91-98), first-wins restriction dedup
-(osm_loader.go:195-197).
+(osm_loader.go:195-197).  The restriction dedup happens here; the node
+dedup happens in the W1 node window (``pipeline.split_ways_to_edges``),
+so ``scan_nodes_slim`` hands over every node record with its order key.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -128,31 +130,17 @@ def scan_ways_slim(slim: DataFrame, tag_whitelist: list[str] | None = None) -> D
     )
 
 
-def scan_nodes_slim(slim: DataFrame, use_counts: DataFrame) -> DataFrame:
-    """S2 + J1 — osm_loader.go:80-103, over ``slim_records`` output.
+def scan_nodes_slim(slim: DataFrame) -> DataFrame:
+    """S2 — osm_loader.go:80-103, over ``slim_records`` output: every node
+    record, duplicates included, with its scan-order key.  Output:
+    (node_id, lon, lat, scan_key = struct(repo, path, seq)).
 
-    Keep only nodes referenced by kept ways: the membership probe (the
-    hash-set probe at osm_loader.go:91) joins against the per-node use
-    counts (A1 — every counted node is by construction referenced by a
-    kept way), so it lands co-partitioned with the counts aggregation.
-    Duplicate node ids resolve first-wins in (repo, path, seq) scan order
-    (osm_loader.go:91-98).  Output: (node_id, lon, lat).
-
-    First-wins is a row_number window, not min_by(struct, struct): the
-    struct-buffered aggregate runs as SortAggregate with one pair of
-    object buffers per group — profiled as the pipeline's worst GC stage
-    (190 s of GC in a 105 s run) — while WindowExec ranks UnsafeRows with
-    no per-group objects.  (repo, path, seq) is unique per record, so the
-    rank-1 row is deterministic."""
-    n = slim.filter(F.col("rec_type") == "node").select(
-        F.col("rec_id").alias("node_id"), "lon", "lat", "repo", "path", "seq"
-    )
-    n = n.join(use_counts.select("node_id"), "node_id", "left_semi")
-    w = Window.partitionBy("node_id").orderBy("repo", "path", "seq")
-    return (
-        n.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("node_id", "lon", "lat")
+    The membership probe (osm_loader.go:91) and the first-wins dedup of
+    duplicate ids (osm_loader.go:91-98) run in the W1 node window
+    (``pipeline.split_ways_to_edges``), which shares one node_id exchange
+    with the use counts: the first record in scan_key order wins."""
+    return slim.filter(F.col("rec_type") == "node").select(
+        F.col("rec_id").alias("node_id"), "lon", "lat", F.struct("repo", "path", "seq").alias("scan_key")
     )
 
 
@@ -172,36 +160,34 @@ def scan_restrictions_slim(slim: DataFrame) -> DataFrame:
     )
     # F3 — exactly 3 members (osm_loader.go:128-131)
     r = r.filter(F.size("members") == 3)
-    m = r.select(
-        F.col("rec_id").alias("rel_id"),
+
+    def role_slot(role: str, out: str):
+        # last member with this role wins: a per-row array lookup, no
+        # explode and no shuffle
+        return F.try_element_at(
+            F.filter("members", lambda m: m["role"] == role), F.lit(-1)
+        ).alias(out)
+
+    piv = r.select(
         F.col("restriction").alias("rtype"),
         "repo",
         "path",
         "seq",
-        F.posexplode("members").alias("mpos", "m"),
-    )
-
-    def role_slot(role: str, out: str):
-        # last member with this role wins → max_by member position
-        return F.max_by(
-            F.when(F.col("m.role") == role, F.struct(F.col("m.ref").alias("id"), F.col("m.type").alias("t"))),
-            F.when(F.col("m.role") == role, F.col("mpos")),
-        ).alias(out)
-
-    piv = m.groupBy("rel_id", "rtype", "repo", "path", "seq").agg(
-        role_slot("from", "from_c"), role_slot("to", "to_c"), role_slot("via", "via_c")
+        role_slot("from", "from_c"),
+        role_slot("to", "to_c"),
+        role_slot("via", "via_c"),
     )
     piv = piv.select(
         "rtype",
         "repo",
         "path",
         "seq",
-        F.coalesce(F.col("from_c.id"), F.lit(-1)).alias("from_id"),
-        F.coalesce(F.col("from_c.t"), F.lit("")).alias("from_type"),
-        F.coalesce(F.col("to_c.id"), F.lit(-1)).alias("to_id"),
-        F.coalesce(F.col("to_c.t"), F.lit("")).alias("to_type"),
-        F.coalesce(F.col("via_c.id"), F.lit(-1)).alias("via_id"),
-        F.coalesce(F.col("via_c.t"), F.lit("")).alias("via_type"),
+        F.coalesce(F.col("from_c.ref"), F.lit(-1)).alias("from_id"),
+        F.coalesce(F.col("from_c.type"), F.lit("")).alias("from_type"),
+        F.coalesce(F.col("to_c.ref"), F.lit(-1)).alias("to_id"),
+        F.coalesce(F.col("to_c.type"), F.lit("")).alias("to_type"),
+        F.coalesce(F.col("via_c.ref"), F.lit(-1)).alias("via_id"),
+        F.coalesce(F.col("via_c.type"), F.lit("")).alias("via_type"),
     )
     # P3 — first (from,to) wins per rtype in scan order
     return (

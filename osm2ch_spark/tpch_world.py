@@ -179,7 +179,7 @@ def tpch_ways(spark, sf_dir) -> DataFrame:
 
 def _ways(spark, sf_dir) -> DataFrame:
     """tpch_ways, checkpointed and memoized per session+sf: it feeds
-    three subtrees (use counts, the split join, ways_seen) and rebuilding
+    two subtrees (the split, the restrictions' to-way gate) and rebuilding
     it repeats the lineitem ROW_NUMBER window + collect_list aggregation."""
     return _memo(spark, sf_dir, "ways",
                  lambda: workerenv.materialize_df(tpch_ways(spark, sf_dir)))
@@ -191,11 +191,10 @@ def _edges(spark, sf_dir) -> DataFrame:
 
 
 def tpch_edges(spark, sf_dir) -> DataFrame:
-    """Real pipeline W1+ID1 over the projected world."""
-    ways = _ways(spark, sf_dir)
-    nodes = tpch_nodes(spark, sf_dir)
-    counts = pipeline.node_use_count(ways)
-    return pipeline.split_ways_to_edges(ways, nodes, counts)
+    """Real pipeline W1+ID1 over the projected world.  Part keys are
+    unique, so the node id serves as the first-wins scan key."""
+    nodes = tpch_nodes(spark, sf_dir).withColumn("scan_key", F.col("node_id"))
+    return pipeline.split_ways_to_edges(_ways(spark, sf_dir), nodes)
 
 
 def tpch_expanded(spark, sf_dir) -> DataFrame:
@@ -234,13 +233,11 @@ def tpch_rules(expanded: DataFrame) -> DataFrame:
 
 
 def tpch_final_expanded(spark, sf_dir) -> DataFrame:
-    """Expansion + both restriction passes (J4 then J5)."""
+    """Expansion + the one restriction anti-join (J4 + J5)."""
     # expanded feeds three subtrees (base + rule derivation + anti-joins)
     expanded = tpch_expanded(spark, sf_dir)
     rules = tpch_rules(expanded)
-    seen = pipeline.ways_seen(_ways(spark, sf_dir))
-    out = pipeline.apply_no_restrictions(expanded, rules, seen)
-    return pipeline.apply_only_restrictions(out, rules, seen)
+    return pipeline.apply_restrictions(expanded, rules, _ways(spark, sf_dir))
 
 
 def tpch_spliced(spark, sf_dir) -> DataFrame:

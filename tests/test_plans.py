@@ -35,8 +35,7 @@ def test_restriction_antijoin_broadcasts(spark):
     edges = W.tpch_edges(spark, SF)
     expanded = pipeline.expand_edges(edges)
     rules = W.tpch_rules(expanded)
-    seen = pipeline.ways_seen(W.tpch_ways(spark, SF))
-    p = plan_of(pipeline.apply_no_restrictions(expanded, rules, seen))
+    p = plan_of(pipeline.apply_restrictions(expanded, rules, W.tpch_ways(spark, SF)))
     assert "BroadcastHashJoin" in p and "LeftAnti" in p
 
 
@@ -60,6 +59,43 @@ def _barrier_plans(spark, monkeypatch, names) -> list[str]:
     out = pipeline.build_expanded(fixtures.micrograph_source(spark, names))
     return plans + [plan_of(out), plan_of(sinks.edges_csv_rows(out)),
                     plan_of(sinks.vertices_csv_rows(out))]
+
+
+def test_split_node_side_is_one_exchange(spark, monkeypatch):
+    """The W1/ID1 barrier reads the node side (A1 use counts, J1
+    membership, first-wins coordinates) through ONE hash exchange on
+    node_id feeding one window, and broadcasts nothing: a node table
+    that does not fit one executor turns every broadcast into another
+    shuffle of the way-node table."""
+    plans = _barrier_plans(spark, monkeypatch, ["duplicate_node"])
+    split = [p for p in plans if "MapInPandas" in p]
+    assert len(split) == 1
+    assert split[0].count("hashpartitioning(node_id") == 1, split[0]
+    assert "BroadcastExchange" not in split[0]
+
+
+def test_etl_job_budget(spark, tmp_path):
+    """Spark jobs of build_expanded plus both CSV sinks on one fixture:
+    at benchmark sizes a pass is bound by per-job latency, so a change
+    that adds jobs to the ETL must show up here.  This plan runs 51 or 52
+    jobs (AQE re-plans and broadcasts vary by one run to run); the node
+    side with three broadcasts and a separate use-count aggregate ran 64.
+    The bound, 56, leaves 4 jobs of headroom for such run-to-run jobs and
+    sits 8 below the old plan's count."""
+    sc = spark.sparkContext
+    group = "etl-job-budget"
+    src = fixtures.micrograph_source(spark, ["only_straight_on"])
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = pipeline.build_expanded(src)
+        sinks.write_csv(sinks.edges_csv_rows(out), "expanded_id",
+                        str(tmp_path / "e.csv"), sinks.EDGES_HEADER)
+        sinks.write_csv(sinks.vertices_csv_rows(out), "first_seen",
+                        str(tmp_path / "v.csv"), sinks.VERTICES_HEADER)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= 56, jobs
 
 
 def test_no_row_python_udfs(spark, monkeypatch):
