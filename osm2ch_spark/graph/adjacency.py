@@ -5,8 +5,8 @@ chunked neighbor-list shards:
 
   (source_vertex BIGINT, chunk INT, neighbors ARRAY<BIGINT>, out_degree BIGINT)
 
-- The shards are hash-partitioned by ``source_vertex`` into
-  ``num_buckets`` partitions, so every PageRank iteration's
+- The shards are hash-partitioned by ``source_vertex`` into the
+  session's shuffle partitions, so every PageRank iteration's
   rank⋈adjacency join finds the persisted side already co-located and
   shuffles only the (small) rank side.
 - Hub vertices (motorway junctions) produce huge neighbor lists; lists
@@ -24,8 +24,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from osm2ch_spark.session import shuffle_partitions
 
-def build_adjacency(edges: DataFrame, num_buckets: int = 32, max_chunk: int = 4096) -> DataFrame:
+
+def build_adjacency(edges: DataFrame, max_chunk: int = 4096) -> DataFrame:
     """Group the edge table into chunked adjacency shards (layout above)."""
     adj = (
         edges.groupBy("source_vertex")
@@ -44,7 +46,7 @@ def build_adjacency(edges: DataFrame, num_buckets: int = 32, max_chunk: int = 40
     # partition by the JOIN KEY: the persisted scan then satisfies the
     # per-iteration rank⋈adjacency distribution requirement, so
     # iterations reshuffle only the small rank side.
-    return adj.repartition(num_buckets, "source_vertex")
+    return adj.repartition(shuffle_partitions(edges.sparkSession), "source_vertex")
 
 
 def vertices_table(edges: DataFrame) -> DataFrame:

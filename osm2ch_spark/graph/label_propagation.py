@@ -6,8 +6,10 @@ label (deterministic — the async/random variants are not reproducible
 and therefore untestable against an oracle).  Stops when no label
 changed or max_iter.
 
-Per round: edges ⋈ labels (on neighbor side) → count per (vertex,
-label) → max_by((count, -label)) — all partial-aggregated, skew-safe.
+Per round: edges ⋈ labels (on neighbor side) ∪ own labels → count per
+(vertex, label) → max_by((count, -label)), own label kept as ``old`` —
+all partial-aggregated, skew-safe.  Sync: ONE aggregate over the new
+state counts the changed labels.
 """
 
 from __future__ import annotations
@@ -38,31 +40,31 @@ def label_propagation(
                                StorageLevel.MEMORY_AND_DISK)
 
     def step(labels: DataFrame):
-        nbr_labels = e.join(
+        # every vertex also hears itself (own = 1) so its row carries the
+        # label it replaces.  c counts neighbors only: an own-only group
+        # has c = 0, and every vertex is some u of the symmetric pair
+        # table, so it has a neighbor group with c >= 1 that outvotes it
+        heard = e.join(
             labels.select(F.col("vertex").alias("v"), "label"), "v", "inner"
-        ).select(F.col("u").alias("vertex"), "label")
-        counted = nbr_labels.groupBy("vertex", "label").agg(F.count(F.lit(1)).alias("c"))
-        # most frequent, tie → min label: max_by over (c, -label)
-        best = counted.groupBy("vertex").agg(
-            F.max_by("label", F.struct(F.col("c"), (-F.col("label")).alias("nl"))).alias("new_label")
+        ).select(F.col("u").alias("vertex"), "label", F.lit(0).alias("own"))
+        heard = heard.unionAll(labels.select("vertex", "label", F.lit(1).alias("own")))
+        counted = heard.groupBy("vertex", "label").agg(
+            (F.count(F.lit(1)) - F.sum("own")).alias("c"), F.max("own").alias("own")
         )
-        # every vertex is some u of the symmetric pair table, so it has a
-        # neighbor and a row in best: no join back to labels needed
-        new_labels = best.select("vertex", F.col("new_label").alias("label"))
+        # most frequent, tie → min label: max_by over (c, -label)
+        new_labels = counted.groupBy("vertex").agg(
+            F.max_by("label", F.struct(F.col("c"), (-F.col("label")).alias("nl"))).alias("label"),
+            F.max_by("label", F.col("own")).alias("old"),
+        )
         # eager=False: the sync aggregate below materializes it
         new_labels = localcheckpoint(new_labels, StorageLevel.MEMORY_AND_DISK, eager=False)
-        # one sync job: changed labels AND the row count for the lineage
-        # (both tables hold exactly one row per vertex)
-        sync = (
-            new_labels.alias("n")
-            .join(labels.select("vertex", F.col("label").alias("old")), "vertex")
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.count(F.when(F.col("label") != F.col("old"), 1)).alias("changed"),
-            )
-            .collect()[0]
-        )
-        return new_labels, float(sync["changed"]), sync["rows"], sync["changed"] == 0
+        # one sync job: the row count for the lineage AND the changed labels
+        sync = new_labels.agg(
+            F.count(F.lit(1)).alias("rows"),
+            F.count(F.when(F.col("label") != F.col("old"), 1)).alias("changed"),
+        ).collect()[0]
+        return (new_labels.select("vertex", "label"), float(sync["changed"]), sync["rows"],
+                sync["changed"] == 0)
 
     return iterate(e.sparkSession, "label_propagation", init, lambda labels: step, max_iter,
                    checkpoint_dir, checkpoint_every, resume)

@@ -18,6 +18,11 @@ starting state (fresh or resumed), sets up the algorithm's own carry
 (PageRank's dangling mass, CC's edge-set signature) and returns the step:
 ``step(state) -> (state, delta, rows, converged)``, where ``rows`` is the
 state's row count for the lineage row.
+
+Each step ends in ONE aggregate over its new state (delta, rows, carry),
+never in a join of the new state against the old: the state may carry
+the value it replaces (PageRank's and LPA's ``old``), which the step
+strips before returning, so a commit holds only the algorithm's columns.
 """
 
 from __future__ import annotations

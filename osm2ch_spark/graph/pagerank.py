@@ -5,11 +5,13 @@ personalization, dangling mass redistributed uniformly, convergence when
 L1 delta ≤ n·tol.  Per-vertex scores sum to 1.
 
 Per iteration (one lazy plan + one driver sync):
-  contribs: ranks ⋈ adjacency (broadcast/shuffled hash by source_vertex,
+  contribs: ranks ⋈ adjacency (shuffled hash by source_vertex,
             co-located with the cached shards) → explode(neighbors)
-            → groupBy(target).sum — map-side partial agg bounds hub-skew.
-  update:   (1-d)/n + d·(contrib + dangling_mass/n)
-  sync:     ONE aggregate job computes L1 delta AND next dangling mass.
+            ∪ (vertex, 0, old=rank) → groupBy(target): sum, max(old) —
+            map-side partial agg bounds hub-skew.
+  update:   verts ⋈ contribs: (1-d)/n + d·(contrib + dangling_mass/n)
+  sync:     ONE aggregate over the new checkpoint: L1 delta (rank vs
+            the carried old) AND next dangling mass, for every tol.
 
 Lineage growth is cut every iteration with localCheckpoint; the loop
 itself (resume, commit every ``checkpoint_every`` iterations, stop) is
@@ -25,7 +27,6 @@ from pyspark.sql import functions as F
 from osm2ch_spark.graph.adjacency import build_adjacency, vertices_table
 from osm2ch_spark.graph.checkpoint import localcheckpoint
 from osm2ch_spark.graph.loop import iterate
-from osm2ch_spark.session import shuffle_partitions
 
 
 def pagerank(
@@ -44,7 +45,7 @@ def pagerank(
     n = verts.count()
     if n == 0:
         return spark.createDataFrame([], "vertex long, rank double")
-    adj = build_adjacency(edges, num_buckets=shuffle_partitions(spark)).persist()
+    adj = build_adjacency(edges).persist()
     base = (1.0 - damping) / n
 
     def init() -> DataFrame:
@@ -70,55 +71,41 @@ def pagerank(
                 .select(
                     F.explode("neighbors").alias("tgt"),
                     (F.col("rank") / F.col("out_degree")).alias("c"),
+                    F.lit(None).cast("double").alias("old"),
                 )
+                .unionAll(ranks.select(
+                    F.col("vertex").alias("tgt"), F.lit(0.0).alias("c"), F.col("rank").alias("old")
+                ))
                 .groupBy("tgt")
-                .agg(F.sum("c").alias("contrib"))
+                .agg(F.sum("c").alias("contrib"), F.max("old").alias("old"))
             )
+            # Joins the persisted verts, not the state: a localCheckpoint
+            # reads back as Scan ExistingRDD with no known partitioning,
+            # so joining the state would shuffle it again every iteration.
             # shuffle_hash hint: verts and contribs have similar sizes, so
             # the planner's "much smaller side" rule falls back to a
             # sort-merge join that re-SORTS both 14M-row sides every
             # iteration; a shuffled hash join streams them instead.
-            new_ranks = (
-                verts.join(contribs.hint("shuffle_hash"), verts.vertex == contribs.tgt, "left")
-                .select(
-                    "vertex",
-                    "has_out",
-                    (
-                        F.lit(base)
-                        + F.lit(damping)
-                        * (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.lit(dangling / n))
-                    ).alias("rank"),
-                )
+            new_ranks = verts.join(
+                contribs.hint("shuffle_hash"), verts.vertex == contribs.tgt, "inner"
+            ).select(
+                "vertex",
+                "has_out",
+                (F.lit(base) + F.lit(damping) * (F.col("contrib") + F.lit(dangling / n))).alias("rank"),
+                "old",
             )
-            # eager=False: the dangling/delta sync right below is the first
-            # action and materializes the checkpoint — one job per iteration
+            # eager=False: the sync right below is the first action and
+            # materializes the checkpoint
             new_ranks = localcheckpoint(new_ranks, StorageLevel.MEMORY_AND_DISK, eager=False)
-
-            if tol > 0.0:
-                # one sync job: L1 delta + next dangling mass
-                stats = (
-                    new_ranks.alias("n")
-                    .join(
-                        ranks.select("vertex", F.col("rank").alias("old")).hint("shuffle_hash").alias("o"),
-                        "vertex",
-                    )
-                    .agg(
-                        F.sum(F.abs(F.col("rank") - F.col("old"))).alias("delta"),
-                        F.sum(F.when(~F.col("has_out"), F.col("rank")).otherwise(0.0)).alias("dang"),
-                    )
-                    .collect()[0]
-                )
-                delta = stats["delta"] or 0.0
-                dangling = stats["dang"] or 0.0
-                return new_ranks, float(delta), n, delta <= n * tol
-            # fixed-iteration mode: no convergence sync needed — the
-            # checkpoint materialization is the only action; dangling mass
-            # comes from a one-row agg over the (cached) new ranks.  The
-            # lineage row records delta -1.0 (not measured).
-            dangling = (
-                new_ranks.filter(~F.col("has_out")).agg(F.sum("rank")).collect()[0][0] or 0.0
-            )
-            return new_ranks, -1.0, n, False
+            # one sync job: L1 delta + next dangling mass
+            stats = new_ranks.agg(
+                F.sum(F.abs(F.col("rank") - F.col("old"))).alias("delta"),
+                F.sum(F.when(~F.col("has_out"), F.col("rank")).otherwise(0.0)).alias("dang"),
+            ).collect()[0]
+            delta = stats["delta"] or 0.0
+            dangling = stats["dang"] or 0.0
+            return (new_ranks.select("vertex", "has_out", "rank"), float(delta), n,
+                    tol > 0.0 and delta <= n * tol)
 
         return step
 

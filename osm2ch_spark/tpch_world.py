@@ -180,7 +180,8 @@ def tpch_ways(spark, sf_dir) -> DataFrame:
 def _ways(spark, sf_dir) -> DataFrame:
     """tpch_ways, checkpointed and memoized per session+sf: it feeds
     two subtrees (the split, the restrictions' to-way gate) and rebuilding
-    it repeats the lineitem ROW_NUMBER window + collect_list aggregation."""
+    it repeats the lineitem collect_list aggregation and the sort of each
+    way's packed (linenumber, partkey) longs."""
     return _memo(spark, sf_dir, "ways",
                  lambda: workerenv.materialize_df(tpch_ways(spark, sf_dir)))
 

@@ -121,7 +121,7 @@ def test_triangles_skewed_hub(spark):
 def test_adjacency_chunking(spark):
     # a hub with 10 out-edges, chunk size 4 → 3 chunks, degree preserved
     edges = edge_df(spark, [(1, t) for t in range(2, 12)])
-    adj = build_adjacency(edges, num_buckets=4, max_chunk=4).collect()
+    adj = build_adjacency(edges, max_chunk=4).collect()
     hub = [r for r in adj if r["source_vertex"] == 1]
     assert len(hub) == 3
     assert all(r["out_degree"] == 10 for r in hub)
@@ -147,12 +147,22 @@ def test_pagerank_resume(spark, tmp_path, graphs):
     assert np.allclose(g, r, atol=1e-12)
 
 
+# the committed state holds only the algorithm's own columns: a value a
+# step carries for its sync never reaches the parquet state, so every
+# commit resumes under any version of the step
+STATE_COLUMNS = {
+    "pagerank": ["vertex", "has_out", "rank"],
+    "connected_components": ["u", "v"],
+    "label_propagation": ["vertex", "label"],
+}
+
+
 @pytest.mark.parametrize("algo", [pagerank, connected_components, label_propagation],
                          ids=lambda f: f.__name__)
 def test_lineage_rows(spark, tmp_path, graphs, algo):
     """One commit rule for every loop: commit iff the iteration is a
     multiple of checkpoint_every — neither convergence nor max_iter
-    forces a commit."""
+    forces a commit.  Each commit writes the state's own columns only."""
     import json
     import os
 
@@ -175,6 +185,30 @@ def test_lineage_rows(spark, tmp_path, graphs, algo):
         # parquet part with its row count, summing to the state total
         assert m["partition_rows"], "per-partition lineage missing"
         assert sum(p["rows"] for p in m["partition_rows"]) == m["rows"]
+        assert spark.read.parquet(m["checkpoint_path"]).columns == STATE_COLUMNS[algo.__name__]
+
+
+def test_pagerank_fixed_iteration_lineage_delta(spark, tmp_path, graphs):
+    """tol=0 runs exactly max_iter iterations and still measures each
+    one: every lineage delta is the L1 distance between consecutive
+    committed states (the first against the uniform 1/n start)."""
+    import json
+    import os
+
+    ck = str(tmp_path / "ck_delta")
+    pagerank(edge_df(spark, graphs["multi_component"]), max_iter=4, tol=0.0,
+             checkpoint_dir=ck, checkpoint_every=1)
+    lineage = [json.loads(l) for l in open(os.path.join(ck, "pagerank", "lineage.json"))
+               if l.strip()]
+    assert [m["iteration"] for m in lineage] == [1, 2, 3, 4]
+    prev = None
+    for m in lineage:
+        state = {r["vertex"]: r["rank"] for r in spark.read.parquet(m["checkpoint_path"]).collect()}
+        if prev is None:
+            prev = dict.fromkeys(state, 1.0 / len(state))
+        l1 = sum(abs(state[v] - prev[v]) for v in state)
+        assert m["delta"] > 0.0 and np.isclose(m["delta"], l1, rtol=1e-9, atol=1e-15), (m, l1)
+        prev = state
 
 
 def test_resume_skips_torn_lineage_tail(spark, tmp_path, graphs):

@@ -98,6 +98,35 @@ def test_etl_job_budget(spark, tmp_path):
     assert jobs <= 56, jobs
 
 
+def test_graph_loop_job_budget(spark):
+    """Spark jobs of PageRank to convergence and of three LPA rounds on
+    the multi_component graph.  Each iteration must end in one aggregate
+    over its new state: a step that joins its new state back against the
+    old one to get its delta adds jobs every iteration.  This shape runs
+    133 PageRank and 26 LPA jobs; the join-back steps ran 195 and 35.
+    Each bound leaves the same 4 jobs of headroom as the ETL budget for
+    AQE re-plans and broadcasts that vary run to run."""
+    from osm2ch_spark.graph import label_propagation, pagerank
+    from tests import graph_oracle as O
+
+    sc = spark.sparkContext
+    edges = spark.createDataFrame(
+        [(int(u), int(v), 1.0, False) for u, v in O.seeded_graph("multi_component")],
+        "source_vertex long, target_vertex long, weight double, one_way boolean",
+    )
+    jobs = {}
+    for name, run in [("pagerank", lambda: pagerank(edges, tol=1e-6).collect()),
+                      ("label_propagation", lambda: label_propagation(edges, max_iter=3).collect())]:
+        group = f"graph-job-budget-{name}"
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs["pagerank"] <= 137 and jobs["label_propagation"] <= 30, jobs
+
+
 def test_no_row_python_udfs(spark, monkeypatch):
     """All Python is Arrow-batched (MapInPandas); BatchEvalPython (row
     pickling) must never appear in any plan the pipeline executes."""
