@@ -95,32 +95,47 @@ class CheckpointManager:
                 )
         return out
 
-    def latest(self) -> dict | None:
-        """Most recent committed iteration's lineage row, or None.
+    def _lineage(self) -> list[dict]:
+        """The parseable lineage rows, oldest first.
 
         The lineage file is append-only with no fsync, so a crash
-        mid-append can leave a torn final line; unparseable tails are
-        skipped and resume falls back to the previous complete row."""
+        mid-append can leave a torn final line; unparseable lines are
+        skipped."""
         p = self._lineage_path() if self.root else None
         if not p or not os.path.exists(p):
-            return None
-        last = None
+            return []
+        rows = []
         with open(p) as f:
             for line in f:
-                line = line.strip()
-                if line:
-                    try:
-                        last = json.loads(line)
-                    except ValueError:
-                        continue
-        return last
+                try:
+                    rows.append(json.loads(line))
+                except ValueError:
+                    continue
+        return rows
+
+    def latest(self) -> dict | None:
+        """Most recent committed iteration's lineage row, or None."""
+        rows = self._lineage()
+        return rows[-1] if rows else None
 
     def resume(self, spark: SparkSession) -> tuple[DataFrame, int] | None:
-        """(state, iteration) of the latest committed checkpoint, or None."""
-        meta = self.latest()
-        if meta is None:
-            return None
-        return spark.read.parquet(meta["checkpoint_path"]), meta["iteration"]
+        """(state, iteration) of the latest committed checkpoint whose
+        state directory still matches its lineage row, or None.  The
+        check compares the parquet footers' per-file row counts with the
+        row's ``partition_rows`` (no Spark job): a missing directory, a
+        part file missing, added, unreadable or holding another row count
+        falls back to the previous row.  A row committed where the
+        footers could not be listed (a non-local root records no counts)
+        is taken as it is."""
+        for meta in reversed(self._lineage()):
+            recorded = meta.get("partition_rows")
+            try:
+                intact = not recorded or self._partition_rows(meta["checkpoint_path"]) == recorded
+            except (OSError, ValueError):  # a torn footer
+                intact = False
+            if intact:
+                return spark.read.parquet(meta["checkpoint_path"]), meta["iteration"]
+        return None
 
 
 def localcheckpoint(df: DataFrame, level: StorageLevel, eager: bool = True) -> DataFrame:

@@ -58,9 +58,9 @@ def triangles_df(edges: DataFrame) -> DataFrame:
     # the oriented table is only a few MB, so AQE coalesces its exchange
     # to ONE partition and the eager checkpoint would freeze that — the
     # entire wedge join then ran as a single 3.3 s task (profiled; the
-    # same serialization with_sequential_id guards against) — and
-    # hash(x) partitioning lets both wedge sides join partition-locally
-    # at full parallelism with no further exchange.
+    # same serialization the id barriers' explicit-N range exchanges
+    # guard against) — and hash(x) partitioning lets both wedge sides
+    # join partition-locally at full parallelism with no further exchange.
     n_part = shuffle_partitions(edges.sparkSession)
     oe = materialize_df(
         _oriented(canonical_edges(edges)).repartition(n_part, F.col("x"))

@@ -123,13 +123,20 @@ def split_ways_to_edges(ways: DataFrame, nodes: DataFrame, strict: bool = False)
     references (buildings, landuse: most of a real extract's) ride the
     exchange and the window sort too, where a broadcast semi-join used
     to drop them first (BENCH/ab_node_exchange.json,
-    ``unreferenced_nodes``).  Then one more shuffle (the re-group by way)
-    and one Arrow batch pass; all per-row math is numpy (haversine
-    cumsum).  Emits forward edge then — for two-way ways — the reverse
-    edge (reversed geometry, same cost, was_oneway=False), restarting
-    accumulation at each split node, exactly as the reference loop does.
-    Edge IDs are 1-based sequential in (scan order, split order,
-    direction) via two-phase numbering.
+    ``unreferenced_nodes``).  Then one more shuffle (the re-group by way,
+    range-partitioned on the way's scan position) and one Arrow batch
+    pass; all per-row math is numpy (haversine cumsum).  Emits forward
+    edge then — for two-way ways — the reverse edge (reversed geometry,
+    same cost, was_oneway=False), restarting accumulation at each split
+    node, exactly as the reference loop does.
+
+    ID1: the split output is sorted within each range partition by
+    (repo, path, seq, seg_index, direction) and checkpointed
+    (``workerenv.materialize_df``, Spark jobs run during this call), so
+    partition order is the reference's scan order and
+    :func:`with_sequential_id` numbers it 1..N as partition offset +
+    position.  The range sampling job reads the exchange's input, so the
+    split UDF still runs once.
 
     The same pass computes each edge's splice parts (G6, the Python half
     of G7), so no second Python pass re-ships the geometry:
@@ -179,9 +186,12 @@ def split_ways_to_edges(ways: DataFrame, nodes: DataFrame, strict: bool = False)
     # flagship — while the UnsafeRow sort stays codegen-compatible and
     # allocation-free.  (repo, path, seq) is the way's identity; pos
     # orders its nodes; the Arrow pass re-derives the way boundaries from
-    # key changes and carries split ways across batch edges.
-    flat = wn.repartition(
-        n_part, F.col("repo"), F.col("path"), F.col("seq")
+    # key changes and carries split ways across batch edges.  Range, not
+    # hash: partition p holds the scan-order range p (ID1, docstring).
+    # No explicit count: AQE merges adjacent ranges of a small input (a
+    # merged range is still a range), and the ID2 layout inherits it.
+    flat = wn.repartitionByRange(
+        F.col("repo"), F.col("path"), F.col("seq")
     ).sortWithinPartitions("repo", "path", "seq", "pos")
 
     def split(batches):
@@ -321,16 +331,14 @@ def split_ways_to_edges(ways: DataFrame, nodes: DataFrame, strict: bool = False)
         if carry is not None:  # one way, the partition's last
             yield process(carry.reset_index(drop=True), np.array([0, len(carry)]))
 
-    segments = flat.mapInPandas(split, EDGE_SCHEMA)
-    # _idb buckets the per-file group so numbering stays parallel even
-    # when one file dominates (order-aligned: floor(seq/256) is monotone
-    # in seq, so (repo, path, _idb) groups are contiguous in the global
-    # (repo, path, seq, seg, dir) order).
-    segments = segments.withColumn("_idb", F.floor(F.col("seq") / 256))
-    out = with_sequential_id(
-        segments, ["repo", "path", "_idb"], ["seq", "seg_index", "direction"], "edge_id"
+    # the split emits a batch's forward rows before its reversed ones;
+    # the partition-local sort restores the id order within each range
+    segments = workerenv.materialize_df(
+        flat.mapInPandas(split, EDGE_SCHEMA).sortWithinPartitions(
+            "repo", "path", "seq", "seg_index", "direction"
+        )
     )
-    return out.drop("_idb")
+    return with_sequential_id(segments, "edge_id")
 
 
 def expand_edges(edges: DataFrame) -> DataFrame:
@@ -343,16 +351,20 @@ def expand_edges(edges: DataFrame) -> DataFrame:
     then runs at EDGE granularity (N rows), F5 (self pair) and F6
     (exact-geometry U-turn, raw float equality) filter the array
     in-place, and the pair table only comes into existence in the final
-    ``posexplode`` — whose position IS the pair's rank among its source
-    edge's surviving continuations.  The previous shape joined first and
-    ranked the exploded pairs with a window, which shuffled AND sorted
-    the full pair table (avg-degree × more rows than this plan moves;
+    ``explode``, which emits a source edge's surviving continuations in
+    dst-edge order.  The previous shape joined first and ranked the
+    exploded pairs with a window, which shuffled AND sorted the full
+    pair table (avg-degree × more rows than this plan moves;
     measured 5.6–6.8 s of wall per headline query in the window sort
     stage alone at sf0.1).
 
-    IDs: expanded_id = the source edge's block start from
-    :func:`with_sequential_id` (weight = surviving continuations) + the
-    posexplode position.
+    ID2: ``edges`` must be the ID1 table, whose partitions are ordered
+    ranges of edge_id.  Each edge-level row is sent to its source edge's
+    ID1 partition (``repartitionById``: the range bounds are ID1's, fixed
+    before the explode, and no sampling job runs), sorted within the
+    partition by src_edge_id and checkpointed; its explode lists each
+    source edge's pairs in dst-edge order, so :func:`with_sequential_id`
+    numbers the pairs 1..M in (src_edge_id, dst_edge_id) order.
 
     Skew note: hub intersections make the per-node candidate arrays
     long, but a node's array length is bounded by node degree (not by
@@ -361,9 +373,9 @@ def expand_edges(edges: DataFrame) -> DataFrame:
 
     edges is consumed twice (array side and edge side) — the caller is
     expected to pass a materialized table so the upstream work runs
-    once.  The joined edge-level table (arrays attached, filters applied,
-    ranks assigned) is eagerly checkpointed; consumers re-run only the
-    broadcast probe + explode per action.
+    once.  The joined edge-level table (arrays attached, filters
+    applied) is eagerly checkpointed; consumers re-run only the explode
+    and the id projection per action.
     """
     # candidate struct: dst edge id FIRST so array_sort orders by it
     # (ids are unique — later fields never break ties)
@@ -385,6 +397,7 @@ def expand_edges(edges: DataFrame) -> DataFrame:
         ).alias("_cands")
     )
     e1 = edges.select(
+        F.spark_partition_id().alias("_p"),
         F.col("edge_id").alias("src_edge_id"),
         F.col("way_id").alias("source_way"),
         F.col("source_node").alias("src_source_node"),
@@ -414,7 +427,7 @@ def expand_edges(edges: DataFrame) -> DataFrame:
         ),
     ).drop("s_lon0", "s_lat0", "s_lon1", "s_lat1")
     # the four endpoint doubles exist only for the F6 filter above — strip
-    # them before the ranking exchange / checkpoint so the materialized
+    # them before the range exchange / checkpoint so the materialized
     # candidate arrays carry 5 fields instead of 9 (guide §2.3: project
     # before the exchange; the explode below never reads them either)
     j = j.withColumn(
@@ -430,37 +443,36 @@ def expand_edges(edges: DataFrame) -> DataFrame:
             ),
         ),
     )
-    # 2048-edge buckets: contiguous in the global (src_edge_id,
-    # dst_edge_id) order because edge ids are globally sequential
-    j = j.withColumn("_idb", F.floor(F.col("src_edge_id") / 2048))
-    j = j.withColumn("_n", F.size("_cands"))
-    ranked = with_sequential_id(j, ["_idb"], ["src_edge_id"], "_base", weight="_n")
-    out = (
-        ranked.select(
-            F.col("src_edge_id"),
-            "source_way",
-            "src_source_node",
-            "src_target_node",
-            "one_way",
-            "_base",
-            "src_cost",
-            F.posexplode("_cands").alias("_pos", "_c"),
-        )
-        .select(
-            (F.col("_base") + F.col("_pos")).alias("expanded_id"),
-            "src_edge_id",
-            "source_way",
-            "src_source_node",
-            "src_target_node",
-            "one_way",
-            F.col("_c.did").alias("dst_edge_id"),
-            F.col("_c.tway").alias("target_way"),
-            F.col("_c.dsn").alias("dst_source_node"),
-            F.col("_c.dtn").alias("dst_target_node"),
-            ((F.col("src_cost") + F.col("_c.dcost")) / F.lit(2.0)).alias("weight"),
-        )
+    # the ID2 layout (docstring): each pair row goes to the partition of
+    # its source edge in the ID1 table, so no range sampling re-runs this
+    # join (at sf0.1 that nearly doubled the barrier's task time); an
+    # empty ID1 table has no partitions, and then j has no rows
+    n_id1 = max(1, edges.rdd.getNumPartitions())
+    j = workerenv.materialize_df(
+        j.repartitionById(n_id1, "_p").sortWithinPartitions("src_edge_id")
     )
-    return out
+    pairs = j.select(
+        "src_edge_id",
+        "source_way",
+        "src_source_node",
+        "src_target_node",
+        "one_way",
+        "src_cost",
+        F.explode("_cands").alias("_c"),
+    )
+    return with_sequential_id(pairs, "expanded_id").select(
+        "expanded_id",
+        "src_edge_id",
+        "source_way",
+        "src_source_node",
+        "src_target_node",
+        "one_way",
+        F.col("_c.did").alias("dst_edge_id"),
+        F.col("_c.tway").alias("target_way"),
+        F.col("_c.dsn").alias("dst_source_node"),
+        F.col("_c.dtn").alias("dst_target_node"),
+        ((F.col("src_cost") + F.col("_c.dcost")) / F.lit(2.0)).alias("weight"),
+    )
 
 
 def apply_restrictions(expanded: DataFrame, restrictions: DataFrame, ways: DataFrame) -> DataFrame:
@@ -570,10 +582,10 @@ def build_expanded(source: DataFrame, tag_whitelist: list[str] | None = None,
     rather than a silently shorter geometry.  The check is folded into
     the W1 node window (null coordinates + NaN raise inside the Arrow
     pass) — no extra job beyond the pipeline's own materialization
-    barriers.  Note
-    build_expanded eagerly materializes its fan-out barriers (slim /
-    split / expand), so Spark jobs run during this call and a
-    strict violation raises HERE, not on the caller's first action
+    barriers.  Note build_expanded eagerly materializes its fan-out
+    barriers (slim / split / expand) and counts the rows of each id
+    table's partitions (ID1 / ID2), so Spark jobs run during this call
+    and a strict violation raises HERE, not on the caller's first action
     (cli.py relies on this).
     """
     records = parse_source(source)
@@ -602,11 +614,12 @@ def build_expanded(source: DataFrame, tag_whitelist: list[str] | None = None,
     # raw node records with their scan-order key: the split's one node_id
     # exchange does the use counts, the membership probe and the
     # first-wins dedup in one window.  edges feeds the expansion twice
-    # (e1/e2) and the splice geometry join; with_sequential_id
-    # checkpoints the ranked split output — the split UDF runs once.
+    # (e1/e2) and the splice geometry join; the split checkpoints its
+    # range-ordered output before numbering it — the split UDF runs once.
     edges = split_ways_to_edges(ways, P.scan_nodes_slim(slim), strict=strict)
     # the numbered pair table feeds the restriction anti-join and the
-    # splice; its ranked table is checkpointed — the self-join runs once.
+    # splice; its edge-level table is checkpointed — the self-join runs
+    # once, and each consumer re-runs only the explode and the ids.
     expanded = expand_edges(edges)
     expanded = apply_restrictions(expanded, restrictions, ways)
     expanded = splice_geometry(expanded, edges)

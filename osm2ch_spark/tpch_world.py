@@ -53,10 +53,11 @@ def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # (reset_world / app eviction) — no cache-manager lifetime leak.
 #
 # Each builder returns an already-materialized table: the ways builder
-# checkpoints with materialize_df, while edges and expanded are cheap
-# layers over the ranked-table barrier inside with_sequential_id
-# (checkpointing them again would re-write the same table only to save
-# each consumer the broadcast offsets probe).
+# checkpoints with materialize_df, while edges and expanded are one
+# projection (plus, for expanded, the explode) over the range-ordered
+# barrier inside split_ways_to_edges / expand_edges; the id is a literal
+# offset plus the row's position, so consumers pay no job or shuffle
+# for it, and checkpointing them again would only re-write the table.
 _MEMO: dict = {}
 
 

@@ -251,6 +251,46 @@ def test_commit_after_torn_lineage_tail_is_latest(spark, tmp_path):
         assert [json.loads(line)["iteration"] for line in f] == [4, 6]
 
 
+def test_resume_checks_state_against_lineage(spark, tmp_path, graphs):
+    """Resume checks each state directory against its lineage row's
+    partition_rows (parquet footers only): a part file replaced by one
+    with another row count, a deleted part file or a missing directory
+    makes resume fall back to the previous commit, and the resumed run
+    still ends in the uninterrupted result."""
+    import glob
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from osm2ch_spark.graph.checkpoint import CheckpointManager
+
+    df = edge_df(spark, graphs["multi_component"])
+    ck = str(tmp_path / "faulty")
+    pagerank(df, max_iter=4, tol=0.0, checkpoint_dir=ck, checkpoint_every=1)
+    mgr = CheckpointManager(ck, "pagerank")
+
+    def biggest_part(it):
+        parts = glob.glob(os.path.join(ck, "pagerank", f"iter={it}", "part-*.parquet"))
+        return max(parts, key=lambda f: pq.ParquetFile(f).metadata.num_rows)
+
+    victim = biggest_part(4)
+    table = pq.read_table(victim)
+    pq.write_table(table.slice(0, table.num_rows - 1), victim)
+    assert mgr.latest()["iteration"] == 4 and mgr.resume(spark)[1] == 3
+    os.remove(biggest_part(3))
+    assert mgr.resume(spark)[1] == 2
+    shutil.rmtree(os.path.join(ck, "pagerank", "iter=2"))
+    assert mgr.resume(spark)[1] == 1
+
+    full = {r["vertex"]: r["rank"] for r in pagerank(df, max_iter=6, tol=0.0).collect()}
+    resumed = {r["vertex"]: r["rank"] for r in pagerank(
+        df, max_iter=6, tol=0.0, checkpoint_dir=ck, checkpoint_every=1, resume=True).collect()}
+    assert resumed.keys() == full.keys()
+    assert np.allclose([resumed[v] for v in full], list(full.values()), atol=1e-12)
+    assert mgr.resume(spark)[1] == 6
+
+
 def test_partition_rows_tolerates_nonlocal_path():
     from osm2ch_spark.graph.checkpoint import CheckpointManager
 

@@ -100,34 +100,59 @@ def test_multi_file_order(spark):
     ]
 
 
-def test_with_sequential_id_weighted(spark):
-    """Each row's id is its group offset + the weight sum of the earlier
-    rows of its group + 1, i.e. a prefix sum over the (group, key) order;
-    a weight-1 column numbers exactly like weight=None (1..N)."""
+def test_no_ways_no_edges(spark):
+    """A source with node records and no ways numbers nothing: the ID1
+    table has no partitions, and the expansion still plans its layout."""
+    records = [r for r in fixtures.micrographs()["t_junction"] if r["type"] == "node"]
+    src = fixtures.source_df(spark, [fixtures.records_to_row(records)])
+    assert pipeline.build_expanded(src).count() == 0
+
+
+def test_with_sequential_id_over_range_barrier(spark):
+    """with_sequential_id numbers a range-ordered barrier 1..N in
+    partition order, also behind a posexplode: the ids equal a row_number
+    oracle over the (key, position) order whether the numbered table is
+    read whole, behind a downstream filter or behind a broadcast join.
+    The layout holds arrays that explode to nothing and one empty
+    partition.  The id projection is nondeterministic to Catalyst; a
+    filter or join pushed below it would renumber the surviving rows."""
     import random
 
     from pyspark.sql import functions as F
 
+    from osm2ch_spark import workerenv
     from osm2ch_spark.operators.ids import with_sequential_id
 
     rng = random.Random(7)
-    rows = [(g, k, rng.choice([0, 0, 1, 2, 5])) for g in (3, 1, 2, 0) for k in range(25)]
-    rng.shuffle(rows)
-    df = spark.createDataFrame(rows, "g long, k long, w int").repartition(5)
-    assert 0 in {w for _, _, w in rows}
-    expected, nxt = {}, 1
-    for g, k, w in sorted(rows):
-        expected[(g, k)] = nxt
-        nxt += w
+    # partition p holds keys [100p, 100p + 40) in shuffled order, each
+    # with 0-6 values; partition 2 holds no rows
+    parts = []
+    for p in range(5):
+        rows = [(100 * p + k, [rng.randrange(50) for _ in range(rng.choice([0, 0, 1, 3, 6]))])
+                for k in range(0 if p == 2 else 40)]
+        rng.shuffle(rows)
+        parts.append(rows)
+    assert any(not a for rows in parts for _, a in rows)
+    rdd = spark.sparkContext.parallelize(parts, len(parts)).flatMap(lambda rows: rows)
+    layout = workerenv.materialize_df(
+        spark.createDataFrame(rdd, "k long, a array<long>").sortWithinPartitions("k"))
+    assert layout.rdd.getNumPartitions() == 5
+    pairs = layout.select("k", F.posexplode("a").alias("pos", "v"))
+    out = with_sequential_id(pairs, "id")
 
-    def ids(weight):
-        out = with_sequential_id(df.withColumn("one", F.lit(1)), ["g"], ["k"], "id",
-                                 weight=weight)
-        return {(r["g"], r["k"]): r["id"] for r in out.collect()}
+    order = sorted((k, pos, v) for rows in parts for k, a in rows for pos, v in enumerate(a))
+    oracle = {(k, pos): i for i, (k, pos, _) in enumerate(order, start=1)}
 
-    assert ids("w") == expected
-    ranks = {gk: i for i, gk in enumerate(sorted(expected), start=1)}
-    assert ids("one") == ids(None) == ranks
+    def ids(df):
+        return {(r["k"], r["pos"]): r["id"] for r in df.collect()}
+
+    assert ids(out) == oracle
+    kept = {kp: i for (kp, i), (_, _, v) in zip(oracle.items(), order) if v % 3 == 0}
+    assert 0 < len(kept) < len(oracle)
+    assert ids(out.filter(F.col("v") % 3 == 0)) == kept
+    keys = spark.createDataFrame([(k,) for k in range(0, 500, 7)], "k long")
+    joined = {kp: i for kp, i in oracle.items() if kp[0] % 7 == 0}
+    assert joined and ids(out.join(F.broadcast(keys), "k")) == joined
 
 
 def ref_vertices_csv(exp_rows):
