@@ -65,32 +65,57 @@ def pick_distributed(n_rows: int, single_file: bool, distributed_sink: bool,
     return n_rows > threshold
 
 
+def error_line(exc: BaseException) -> str | None:
+    """The one-line message for a failure the CLI reports cleanly, or
+    None to let it raise.  Both causes surface wrapped in a Py4J/worker
+    traceback at materialization time:
+
+    - strict mode's missing way node, unwrapped back to the reference's
+      fail-fast message (osm_loader.go:216-218);
+    - a full scratch disk: shuffle files and checkpoint blocks live in
+      ``spark.local.dir``, which ``OSM2CH_LOCAL_DIR`` moves."""
+    msg = str(exc)
+    core = [l.strip() for l in msg.splitlines() if "missing from the node scan" in l]
+    if core:
+        return core[0] + " (pass --permissive to proceed on clipped extracts)"
+    if "No space left on device" in msg:
+        return ("no space left on device (spark.local.dir holds the shuffle files and "
+                "checkpoints: set OSM2CH_LOCAL_DIR to a directory on a disk with room)")
+    return None
+
+
 def main(argv=None) -> int:
     args = build_parser().parse_args(argv)
-    from osm2ch_spark import get_spark, pipeline, sinks
+    from osm2ch_spark import get_spark
 
     t0 = time.time()
     spark = get_spark(app_name="osm2ch_spark_cli", master=args.master)
+    try:
+        n_edges = _run(spark, args)
+    except Exception as e:  # noqa: BLE001 — surface known failures cleanly
+        line = error_line(e)
+        if line is None:
+            raise
+        print("ERROR: " + line, file=sys.stderr)
+        return 1
+    else:
+        print(f"Total expanded edges: {n_edges}")  # osm_loader.go:434
+        print(f"Elapsed: {time.time() - t0:.3f}s")
+        return 0
+    finally:
+        spark.stop()
+
+
+def _run(spark, args) -> int:
+    """Build the expanded-edge table and write both CSVs; returns the
+    number of expanded edges."""
+    from osm2ch_spark import pipeline, sinks
+
     src = spark.read.parquet(args.source)
     tags = [t for t in args.tags.split(",") if t]
-    try:
-        expanded = pipeline.build_expanded(
-            src, tag_whitelist=tags, strict=not args.permissive
-        )
-        expanded = expanded.persist()
-        n_edges = expanded.count()
-    except Exception as e:  # noqa: BLE001 — surface the strict contract cleanly
-        # strict mode raises inside the split UDF at materialization time;
-        # unwrap the Py4J/worker traceback back to the reference's clean
-        # fail-fast message (osm_loader.go:216-218)
-        msg = str(e)
-        if "missing from the node scan" in msg:
-            core = [l for l in msg.splitlines() if "missing from the node scan" in l]
-            print("ERROR: " + core[0].strip(), file=sys.stderr)
-            print("(pass --permissive to proceed on clipped extracts)", file=sys.stderr)
-            spark.stop()
-            return 1
-        raise
+    expanded = pipeline.build_expanded(src, tag_whitelist=tags, strict=not args.permissive)
+    expanded = expanded.persist()
+    n_edges = expanded.count()
 
     stem = args.out.split(".csv")[0]  # main.go:42-45 derives names the same way
     fname_edges = stem + ".csv"
@@ -118,11 +143,8 @@ def main(argv=None) -> int:
         print("sink: single-file (reference parity)")
         sinks.write_csv(edge_rows, "expanded_id", fname_edges, sinks.EDGES_HEADER)
         sinks.write_csv(vertex_rows, "first_seen", fname_vertices, sinks.VERTICES_HEADER)
-    print(f"Total expanded edges: {n_edges}")  # osm_loader.go:434
-    print(f"Elapsed: {time.time() - t0:.3f}s")
     expanded.unpersist()
-    spark.stop()
-    return 0
+    return n_edges
 
 
 if __name__ == "__main__":

@@ -1,4 +1,4 @@
-"""Per-iteration checkpointing + lineage for the iterative algorithms.
+"""Durable per-iteration checkpoints + lineage for the iterative algorithms.
 
 North-rule contract: every ``checkpoint_every``-th iteration commits (a)
 the vertex-state table and (b) a lineage row (algorithm, iteration,
@@ -14,7 +14,6 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -137,14 +136,3 @@ class CheckpointManager:
                 return spark.read.parquet(meta["checkpoint_path"]), meta["iteration"]
         return None
 
-
-def localcheckpoint(df: DataFrame, level: StorageLevel, eager: bool = True) -> DataFrame:
-    """Lineage cut without durable storage (used between durable commits
-    to stop plan growth in the driver loop).  Pass eager=False when the
-    next driver-side action will materialize it anyway — halves the jobs
-    per iteration.
-
-    ``level``: ``MEMORY_AND_DISK`` (serialized) for PageRank and LPA
-    (BENCH/ab_pr_ckpt_level.json), ``MEMORY_AND_DISK_DESER`` for
-    connected components (BENCH/ab_cc_ckpt_level_r6.json)."""
-    return df.localCheckpoint(eager=eager, storageLevel=level)

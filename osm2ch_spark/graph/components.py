@@ -14,13 +14,13 @@ of the component (exact, oracle-comparable).
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osm2ch_spark.graph.adjacency import canonical_edges, symmetrize, vertices_table
-from osm2ch_spark.graph.checkpoint import localcheckpoint
 from osm2ch_spark.graph.loop import iterate
+# the one lineage cut, under the name the traced benchmark counts rounds by
+from osm2ch_spark.workerenv import materialize_df as localcheckpoint
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -106,8 +106,7 @@ def connected_components(
         # — the fixed point is identical.  eager=False: the signature
         # aggregate in begin() is the first action and materializes the
         # blocks — an eager checkpoint here paid a separate full pass.
-        return localcheckpoint(canonical_edges(edges), StorageLevel.MEMORY_AND_DISK_DESER,
-                               eager=False)
+        return localcheckpoint(canonical_edges(edges), eager=False)
 
     def begin(e: DataFrame):
         sig = _signature(e)
@@ -115,8 +114,7 @@ def connected_components(
         def step(e: DataFrame):
             nonlocal sig
             # eager=False: the signature aggregate below materializes it
-            new_e = localcheckpoint(_small_star(_large_star(e)),
-                                    StorageLevel.MEMORY_AND_DISK_DESER, eager=False)
+            new_e = localcheckpoint(_small_star(_large_star(e)), eager=False)
             new_sig = _signature(new_e)
             # a matching signature is confirmed EXACTLY (counts already
             # equal, so a one-sided anti-join against the previous set

@@ -388,8 +388,6 @@ def expand_edges(edges: DataFrame) -> DataFrame:
                     F.col("source_node").alias("dsn"),
                     F.col("target_node").alias("dtn"),
                     F.col("cost_km").alias("dcost"),
-                    F.element_at("geom_lons", 1).alias("dlon0"),
-                    F.element_at("geom_lats", 1).alias("dlat0"),
                     F.element_at("geom_lons", -1).alias("dlon1"),
                     F.element_at("geom_lats", -1).alias("dlat1"),
                 )
@@ -406,43 +404,25 @@ def expand_edges(edges: DataFrame) -> DataFrame:
         F.col("cost_km").alias("src_cost"),
         F.element_at("geom_lons", 1).alias("s_lon0"),
         F.element_at("geom_lats", 1).alias("s_lat0"),
-        F.element_at("geom_lons", -1).alias("s_lon1"),
-        F.element_at("geom_lats", -1).alias("s_lat1"),
     )
     j = e1.join(cand, F.col("src_target_node") == F.col("_node"), "inner").drop("_node")
     # F5 (self pair, osm_loader.go:302-304) + F6 (U-turn: exact float
     # equality on endpoint pairs, osm_loader.go:306-312) applied INSIDE
-    # the candidate array — same EqualTo semantics as the row filters
+    # the candidate array — same EqualTo semantics as the row filters.
+    # F6 compares only the far endpoints: both edges' near ends are the
+    # joined node's first-wins coordinates, identical doubles, so their
+    # half of the reference's test always holds
     j = j.withColumn(
         "_cands",
         F.filter(
             "_cands",
             lambda c: (c["did"] != F.col("src_edge_id"))
-            & ~(
-                (F.col("s_lon0") == c["dlon1"])
-                & (F.col("s_lat0") == c["dlat1"])
-                & (F.col("s_lon1") == c["dlon0"])
-                & (F.col("s_lat1") == c["dlat0"])
-            ),
+            & ~((F.col("s_lon0") == c["dlon1"]) & (F.col("s_lat0") == c["dlat1"])),
         ),
-    ).drop("s_lon0", "s_lat0", "s_lon1", "s_lat1")
-    # the four endpoint doubles exist only for the F6 filter above — strip
-    # them before the range exchange / checkpoint so the materialized
-    # candidate arrays carry 5 fields instead of 9 (guide §2.3: project
-    # before the exchange; the explode below never reads them either)
-    j = j.withColumn(
-        "_cands",
-        F.transform(
-            "_cands",
-            lambda c: F.struct(
-                c["did"].alias("did"),
-                c["tway"].alias("tway"),
-                c["dsn"].alias("dsn"),
-                c["dtn"].alias("dtn"),
-                c["dcost"].alias("dcost"),
-            ),
-        ),
-    )
+    ).drop("s_lon0", "s_lat0")
+    # the far-end doubles exist only for F6 — strip them before the
+    # exchange and checkpoint (the explode below never reads them)
+    j = j.withColumn("_cands", F.transform("_cands", lambda c: c.dropFields("dlon1", "dlat1")))
     # the ID2 layout (docstring): each pair row goes to the partition of
     # its source edge in the ID1 table, so no range sampling re-runs this
     # join (at sf0.1 that nearly doubled the barrier's task time); an

@@ -1,12 +1,13 @@
-"""Python-worker memory settings and the pipeline's one barrier.
+"""Python-worker memory settings and the engine's one lineage cut.
 
 ``get_spark`` exports :data:`MALLOC_ENV` before the JVM starts (and as
 executorEnv), so every worker serves Arrow-batch numpy and Arrow buffers
 from a retained glibc heap: the first batch warms it and later batches
 run without page faults, which on a lazily provisioned host cost ~100 µs
 each and contend across cores (BENCH/perf_notes_r03.md §2,
-BENCH/perf_notes_r04.md §2).  :func:`materialize_df` is the pipeline's
-materialization barrier (BENCH/ab_pipe_ckpt_level.json).  Worker
+BENCH/perf_notes_r04.md §2).  :func:`materialize_df` is the engine's
+one lineage cut, at one storage level, for pipeline barriers and graph
+loops alike (BENCH/ab_one_ckpt_level.json).  Worker
 start-up -- preload, freeze, zip invalidation, one daemon per session --
 is ``pydaemon.py`` (BENCH/ab_pydaemon_perfbench.json,
 BENCH/ab_one_pool.json).
@@ -29,14 +30,19 @@ MALLOC_ENV = {
     "PYTHONMALLOC": "malloc",
 }
 
-def materialize_df(df):
-    """Eager local checkpoint — the engine's one materialization
-    primitive for the pipeline's fan-out tables.  DISK_ONLY: each barrier
-    table is scanned by 2–3 downstream stages, and deserialized blocks
-    pin per-row object graphs that dominate full-GC tracing for the rest
-    of the run (BENCH/ab_pipe_ckpt_level.json).  Eager so the fan-out
-    consumers scan a finished RDD instead of racing to build cache
-    blocks."""
+def materialize_df(df, eager=True):
+    """Local checkpoint at DISK_ONLY -- the engine's one lineage cut, for
+    the pipeline's fan-out tables and every graph-loop iteration alike.
+
+    One level: in-memory blocks share the heap with execution and
+    broadcasts, and deserialized ones pin per-row object graphs that full
+    GCs trace for the rest of the run.  With CC's cuts deserialized, sf0.1
+    connected components failed to build a broadcast in every session on
+    a 7.7 GB heap; at DISK_ONLY it completes, and PageRank is flat
+    (BENCH/ab_one_ckpt_level.json).  Eager (the default) for
+    pipeline fan-outs, whose consumers share one first action and would
+    otherwise race to build the blocks; ``eager=False`` for loop cuts,
+    which the loop's next sync aggregate materializes in its own job."""
     from pyspark import StorageLevel
 
-    return df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    return df.localCheckpoint(eager=eager, storageLevel=StorageLevel.DISK_ONLY)

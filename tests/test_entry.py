@@ -82,6 +82,29 @@ def test_cli_sink_autoswitch():
     assert pick_distributed(100, False, True, 5_000_000) is True  # forced dist
 
 
+def test_cli_error_line():
+    """The CLI turns two failures into one clean line, whatever traceback
+    wraps them, and lets every other failure raise."""
+    from osm2ch_spark.cli import error_line
+
+    strict = RuntimeError(
+        "PythonException:\n  Traceback (most recent call last):\n"
+        "ValueError: way-node reference(s) missing from the node scan, e.g. node 2\n"
+        "\tat org.apache.spark.api.python.BasePythonRunner")
+    line = error_line(strict)
+    assert line.startswith("ValueError: way-node reference(s) missing") and "node 2" in line
+    assert "--permissive" in line
+
+    disk = RuntimeError(
+        "An error occurred while calling o123.count.\n"
+        "java.io.IOException: No space left on device\n\tat java.io.FileOutputStream")
+    line = error_line(disk)
+    assert "spark.local.dir" in line and "OSM2CH_LOCAL_DIR" in line
+    assert "\n" not in line
+
+    assert error_line(RuntimeError("java.lang.OutOfMemoryError: Java heap space")) is None
+
+
 def test_tpch_ways_wide_partkeys(spark, tmp_path):
     """The packed (l_linenumber, l_partkey) sort key keeps node ids and
     their order exact for partkeys at and above 2^32."""

@@ -325,3 +325,79 @@ def test_cc_lpa_resume(spark, tmp_path, graphs):
         ).collect()
     }
     assert resumed_lpa == full_lpa
+
+
+# Runs in a child process: PageRank for a fixed number of iterations,
+# then connected components, both committing every iteration.
+_KILLED_RUN = """
+import sys
+from osm2ch_spark import get_spark
+from osm2ch_spark.graph import connected_components, pagerank
+
+src, ck, pr_iters = sys.argv[1], sys.argv[2], int(sys.argv[3])
+spark = get_spark(master="local[2]", shuffle_partitions=4)
+edges = spark.read.parquet(src)
+pagerank(edges, max_iter=pr_iters, tol=0.0, checkpoint_dir=ck, checkpoint_every=1).count()
+connected_components(edges, checkpoint_dir=ck, checkpoint_every=1).count()
+"""
+
+
+def test_resume_after_kill(spark, tmp_path):
+    """Resume survives a real kill, not just a clean re-entry: a child
+    session (its JVM and Python workers in one process group) runs
+    PageRank, then connected components, and is SIGKILLed as soon as
+    CC's first lineage row appears, mid-loop.  Resumed here, PageRank
+    continues from the killed session's last commit and CC from
+    whatever its commits left; both equal uninterrupted runs."""
+    import json
+    import os
+    import signal
+    import subprocess
+    import sys
+    import time
+
+    # a path over shuffled ids: CC needs several rounds, so the kill
+    # lands mid-loop
+    perm = np.random.RandomState(7).permutation(400)
+    pairs = [(int(perm[i]), int(perm[i + 1])) for i in range(399)]
+    pairs += [(int(perm[i]), int(perm[(i * 37) % 400])) for i in range(0, 400, 50)]
+    df = edge_df(spark, pairs)
+    src = str(tmp_path / "edges.parquet")
+    df.write.parquet(src)
+    ck = str(tmp_path / "ck")
+    cc_lineage = os.path.join(ck, "connected_components", "lineage.json")
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join([repo] + paths),
+           "SPARK_DRIVER_MEMORY": "1g"}
+    child = subprocess.Popen([sys.executable, "-c", _KILLED_RUN, src, ck, "3"], env=env,
+                             stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
+                             start_new_session=True)
+    try:
+        deadline = time.monotonic() + 150
+        while not (os.path.exists(cc_lineage) and os.path.getsize(cc_lineage)):
+            assert child.poll() is None, "child exited before it could be killed"
+            assert time.monotonic() < deadline, "no CC lineage row"
+            time.sleep(0.02)
+    finally:
+        os.killpg(child.pid, signal.SIGKILL)
+        child.wait()
+    assert child.returncode == -signal.SIGKILL
+    killed_at = [json.loads(l)["iteration"] for l in open(cc_lineage) if l.endswith("\n")]
+
+    full_pr = {r["vertex"]: r["rank"] for r in pagerank(df, max_iter=6, tol=0.0).collect()}
+    pr = {r["vertex"]: r["rank"] for r in pagerank(
+        df, max_iter=6, tol=0.0, checkpoint_dir=ck, checkpoint_every=1, resume=True).collect()}
+    assert pr.keys() == full_pr.keys()
+    assert np.allclose([pr[v] for v in full_pr], list(full_pr.values()), rtol=0, atol=1e-12)
+
+    full_ck = str(tmp_path / "full")
+    full_cc = {r["vertex"]: r["component"] for r in connected_components(
+        df, checkpoint_dir=full_ck, checkpoint_every=1).collect()}
+    rounds = [json.loads(l)["iteration"]
+              for l in open(os.path.join(full_ck, "connected_components", "lineage.json"))]
+    assert max(killed_at) < max(rounds), "the kill landed after CC's last round"
+    cc = {r["vertex"]: r["component"] for r in connected_components(
+        df, checkpoint_dir=ck, checkpoint_every=1, resume=True).collect()}
+    assert cc == full_cc

@@ -287,6 +287,7 @@ def test_pagerank_iteration_join_not_smj(spark, monkeypatch):
     plans of the real loop at its lineage cuts (every rank table passes
     ``localcheckpoint``)."""
     import importlib
+    import re
 
     # the package re-exports the function under the module's name
     pr = importlib.import_module("osm2ch_spark.graph.pagerank")
@@ -314,6 +315,14 @@ def test_pagerank_iteration_join_not_smj(spark, monkeypatch):
     finally:
         spark.conf.set(key, threshold)
     # the initial ranks, then one rank update per iteration run (this
-    # regular graph converges after the first)
-    assert len(plans) >= 2 and all("Join" in p for p in plans[1:])
+    # regular graph converges after the first).  Each update holds ONE
+    # join, ranks ⋈ adjacency: the new rank is computed in the select of
+    # the contributions' aggregate, whose own rows carry has_out and the
+    # old rank, so no vertex-table join remains
+    assert len(plans) >= 2
+    for p in plans[1:]:
+        joins = re.findall(r"^\(\d+\) (\w*Join)", p, re.M)
+        assert joins == ["ShuffledHashJoin"], (joins, p)
+        keys = re.search(r"^Left keys \[\d+\]: \[(\w+)#", p, re.M)
+        assert keys and keys.group(1) == "source_vertex", p
     assert not [p for p in plans if "SortMergeJoin" in p]
