@@ -1,4 +1,4 @@
-from osm2ch_spark.graph.adjacency import build_adjacency, vertices_table  # noqa: F401
+from osm2ch_spark.graph.adjacency import build_adjacency  # noqa: F401
 from osm2ch_spark.graph.pagerank import pagerank  # noqa: F401
 from osm2ch_spark.graph.components import connected_components  # noqa: F401
 from osm2ch_spark.graph.label_propagation import label_propagation  # noqa: F401

@@ -3,10 +3,11 @@
 
 Undirected semantics over the directed edge table.  Converges in
 O(log n) rounds regardless of graph diameter (a min-propagation loop is
-O(diameter) — unacceptable on road grids).  Each round is two
-groupBy+explode passes; convergence is detected with a deterministic
-(count, xor-of-hash, sum-of-hash) signature of the edge set — no
-expensive set-difference join.
+O(diameter) — unacceptable on road grids).  Each round is two window
+passes (large-star, then small-star: a per-vertex min over one
+exchange each) plus one ``distinct``, and no round joins; convergence is
+detected with a deterministic (count and two xor-of-hash) signature of
+the edge set, confirmed by one anti-join only when the signatures match.
 
 Result: (vertex BIGINT, component BIGINT) with component = min vertex id
 of the component (exact, oracle-comparable).
@@ -14,10 +15,10 @@ of the component (exact, oracle-comparable).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from osm2ch_spark.graph.adjacency import canonical_edges, symmetrize, vertices_table
+from osm2ch_spark.graph.adjacency import canonical_edges, symmetrize
 from osm2ch_spark.graph.loop import iterate
 # the one lineage cut, under the name the traced benchmark counts rounds by
 from osm2ch_spark.workerenv import materialize_df as localcheckpoint
@@ -25,20 +26,18 @@ from osm2ch_spark.workerenv import materialize_df as localcheckpoint
 
 def _large_star(e: DataFrame) -> DataFrame:
     """For each u over symmetric neighbors: connect strictly larger
-    neighbors to m = min(Γ(u) ∪ {u}).  Join-based (a per-key min + an
-    equi-join) — no collect_set arrays, so hub vertices cost O(degree)
-    narrow rows instead of one giant list row."""
-    sym = symmetrize(e)
-    mins = sym.groupBy("u").agg(F.min("v").alias("mv"))
-    mins = mins.select("u", F.least("u", "mv").alias("m"))
-    out = (
-        sym.join(mins, "u")
+    neighbors v to m = min(Γ(u) ∪ {u}).  The per-key min is a window
+    over partitionBy(u), as in small-star: narrow rows, no collect_set
+    arrays, so hub vertices cost O(degree) rows instead of one giant list
+    row.  Every output row has v > u >= m, so none is a self-link."""
+    m = F.least("u", F.min("v").over(Window.partitionBy("u")))
+    # no distinct here: small_star's min is duplicate-insensitive and
+    # its final distinct restores set semantics — saves a shuffle per round
+    return (
+        symmetrize(e).withColumn("m", m)
         .filter(F.col("v") > F.col("u"))
         .select(F.col("v").alias("u"), F.col("m").alias("v"))
     )
-    # no distinct here: small_star's min-agg is duplicate-insensitive and
-    # its final distinct restores set semantics — saves a shuffle per round
-    return out.filter(F.col("u") != F.col("v"))
 
 
 def _small_star(e: DataFrame) -> DataFrame:
@@ -46,16 +45,13 @@ def _small_star(e: DataFrame) -> DataFrame:
     neighbors (and u itself) to their min.
 
     The per-key min is a WINDOW over partitionBy(u) rather than a
-    groupBy+self-join: ``e`` here is the UNMATERIALIZED large-star plan
-    (a join), and the join+agg shape scanned that plan twice per round
-    (once for the mins aggregate, once as the join probe — the exchanges
-    dedup via reuse, but the join itself re-executed).  The window makes
-    one pass over one exchange of ``canon`` (guide §2.4), and the
-    ``mins`` rows for the union drop out of the same pass with a
-    partition-local dedup (no extra shuffle — the window's partitioning
-    already satisfies the aggregate)."""
-    from pyspark.sql import Window
-
+    groupBy+self-join: ``e`` here is the UNMATERIALIZED large-star plan,
+    and the join+agg shape scanned that plan twice per round (once for
+    the mins aggregate, once as the join probe).  The window makes one
+    pass over one exchange of ``canon`` (guide §2.4), and the ``mins``
+    rows for the union drop out of the same pass with a partition-local
+    dedup (no extra shuffle — the window's partitioning already satisfies
+    the aggregate)."""
     canon = e.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
     proj = canon.withColumn("m", F.min("v").over(Window.partitionBy("u")))
     # one pass over the window output: every row emits (v, m); the row(s)
@@ -128,12 +124,14 @@ def connected_components(
 
     e = iterate(edges.sparkSession, "connected_components", init, begin, max_iter,
                 checkpoint_dir, checkpoint_every, resume)
-    # at convergence every edge points a vertex at its component root
-    roots = e.select(F.col("u").alias("vertex"), F.col("v").alias("component"))
-    roots = roots.groupBy("vertex").agg(F.min("component").alias("component"))
-    # single-use vertex set — no persist: caching a 10^8-row vertex set
-    # bought nothing and competed with execution memory for the whole loop
-    verts = vertices_table(edges).select("vertex")
-    return verts.join(roots, "vertex", "left").select(
-        "vertex", F.coalesce("component", F.col("vertex")).alias("component")
+    # every state row after a round has v < u, v on u's component, and at
+    # convergence v is its root: each endpoint sends itself as its own
+    # candidate, so one min per vertex labels every vertex (a root, or an
+    # endpoint of self-loops only, keeps its own id) with no join
+    ends = edges.select(F.col("source_vertex").alias("vertex")).unionAll(
+        edges.select(F.col("target_vertex").alias("vertex")))
+    return (
+        ends.select("vertex", F.col("vertex").alias("component"))
+        .unionAll(e.select(F.col("u").alias("vertex"), F.col("v").alias("component")))
+        .groupBy("vertex").agg(F.min("component").alias("component"))
     )

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from osm2ch_spark.graph.adjacency import canonical_edges, symmetrize, vertices_table
+from osm2ch_spark.graph.adjacency import canonical_edges, symmetrize
 from osm2ch_spark.session import shuffle_partitions
 
 
@@ -95,14 +95,10 @@ def triangles_per_vertex(edges: DataFrame) -> DataFrame:
     # the triangle set feeds three union branches (a/b/c) — barrier it so
     # the wedge join runs once, not three times
     t = materialize_df(triangles_df(edges))
-    verts = vertices_table(edges).select("vertex")
-    hits = (
-        t.select(F.col("a").alias("vertex"))
-        .unionAll(t.select(F.col("b").alias("vertex")))
-        .unionAll(t.select(F.col("c").alias("vertex")))
-        .groupBy("vertex")
-        .agg(F.count(F.lit(1)).alias("tri"))
-    )
-    return verts.join(hits, "vertex", "left").select(
-        "vertex", F.coalesce("tri", F.lit(0)).cast("long").alias("triangles")
-    )
+    # every endpoint counts 0 and every triangle corner 1: one sum gives
+    # each vertex its count, 0 for a vertex on no triangle, with no join
+    rows = edges.select(F.col("source_vertex").alias("vertex"), F.lit(0).alias("n"))
+    rows = rows.unionAll(edges.select(F.col("target_vertex").alias("vertex"), F.lit(0).alias("n")))
+    for corner in ("a", "b", "c"):
+        rows = rows.unionAll(t.select(F.col(corner).alias("vertex"), F.lit(1).alias("n")))
+    return rows.groupBy("vertex").agg(F.sum("n").alias("triangles"))

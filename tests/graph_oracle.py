@@ -98,6 +98,23 @@ def triangles_oracle(edges):
     return count
 
 
+def triangles_per_vertex_oracle(edges):
+    """Vertex -> number of triangles through it, for every endpoint of
+    ``edges`` (0 for a vertex on no triangle or on self-loops only)."""
+    und = {(min(u, v), max(u, v)) for u, v in edges if u != v}
+    adj = {}
+    for a, b in und:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    per_v = {x: 0 for e in edges for x in e}
+    for a, b in und:
+        for c in adj[a] & adj[b]:
+            if c > b:
+                for x in (a, b, c):
+                    per_v[x] += 1
+    return per_v
+
+
 def seeded_graph(kind: str, seed: int = 42):
     """Deterministic synthetic edge lists for stress tests."""
     rng = np.random.RandomState(seed)
@@ -123,4 +140,8 @@ def seeded_graph(kind: str, seed: int = 42):
                 if extra[i] != extra[i + 1]:
                     edges.append((base + int(extra[i]), base + int(extra[i + 1])))
         return sorted(set(edges))
+    if kind == "self_loops":
+        # a triangle with a self-loop on one corner, a pendant vertex on no
+        # triangle, a path, and an isolated self-loop vertex
+        return [(1, 2), (2, 3), (3, 1), (3, 3), (3, 4), (7, 5), (5, 6), (50, 50)]
     raise ValueError(kind)

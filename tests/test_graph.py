@@ -28,6 +28,7 @@ def graphs(spark):
     out = {
         "power_law": O.seeded_graph("power_law"),
         "multi_component": O.seeded_graph("multi_component"),
+        "self_loops": O.seeded_graph("self_loops"),
     }
     # expanded line graph of the t_junction fixture
     src = fixtures.micrograph_source(spark, ["t_junction", "split_shared_node"])
@@ -53,7 +54,7 @@ def test_pagerank_allclose(spark, key, graphs):
     assert abs(g.sum() - 1.0) < 1e-9
 
 
-@pytest.mark.parametrize("key", GRAPH_KEYS)
+@pytest.mark.parametrize("key", GRAPH_KEYS + ["self_loops"])
 def test_connected_components_exact(spark, key, graphs):
     edges = graphs[key]
     oracle = O.cc_oracle(edges)
@@ -83,13 +84,15 @@ def test_triangle_count_exact(spark, key, graphs):
 
 
 def test_triangles_per_vertex(spark, graphs):
-    edges = graphs["power_law"]
-    per_v = {
-        r["vertex"]: r["triangles"]
-        for r in triangles_per_vertex(edge_df(spark, edges)).collect()
-    }
-    # sum over vertices counts each triangle 3 times
-    assert sum(per_v.values()) == 3 * O.triangles_oracle(edges)
+    """Every endpoint gets its exact count, 0 where it is on no triangle
+    (a sum check alone would pass with such vertices missing)."""
+    for key in ["power_law", "self_loops"]:
+        edges = graphs[key]
+        per_v = {
+            r["vertex"]: r["triangles"]
+            for r in triangles_per_vertex(edge_df(spark, edges)).collect()
+        }
+        assert per_v == O.triangles_per_vertex_oracle(edges), key
 
 
 def test_triangles_skewed_hub(spark):

@@ -101,14 +101,16 @@ def test_etl_job_budget(spark, tmp_path):
 
 
 def test_graph_loop_job_budget(spark):
-    """Spark jobs of PageRank to convergence and of three LPA rounds on
-    the multi_component graph.  Each iteration must end in one aggregate
-    over its new state: a step that joins its new state back against the
-    old one to get its delta adds jobs every iteration.  This shape runs
-    133 PageRank and 26 LPA jobs; the join-back steps ran 195 and 35.
-    Each bound leaves the same 4 jobs of headroom as the ETL budget for
-    AQE re-plans and broadcasts that vary run to run."""
-    from osm2ch_spark.graph import label_propagation, pagerank
+    """Spark jobs of PageRank and CC to convergence and of three LPA
+    rounds on the multi_component graph.  Each iteration must end in one
+    aggregate over its new state: a step that joins its new state back
+    against the old one to get its delta adds jobs every iteration.  This
+    shape runs 133 PageRank, 34 CC and 26 LPA jobs; the join-back steps
+    ran 195 PageRank and 35 LPA jobs, and CC's large-star join (broadcast
+    at run time) with its joined result ran 46.  Each bound leaves the
+    same 4 jobs of headroom as the ETL budget for AQE re-plans and
+    broadcasts that vary run to run."""
+    from osm2ch_spark.graph import connected_components, label_propagation, pagerank
     from tests import graph_oracle as O
 
     sc = spark.sparkContext
@@ -118,6 +120,7 @@ def test_graph_loop_job_budget(spark):
     )
     jobs = {}
     for name, run in [("pagerank", lambda: pagerank(edges, tol=1e-6).collect()),
+                      ("connected_components", lambda: connected_components(edges).collect()),
                       ("label_propagation", lambda: label_propagation(edges, max_iter=3).collect())]:
         group = f"graph-job-budget-{name}"
         sc.setLocalProperty("spark.jobGroup.id", group)
@@ -126,7 +129,8 @@ def test_graph_loop_job_budget(spark):
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert jobs["pagerank"] <= 137 and jobs["label_propagation"] <= 30, jobs
+    assert (jobs["pagerank"] <= 137 and jobs["connected_components"] <= 38
+            and jobs["label_propagation"] <= 30), jobs
 
 
 def test_no_row_python_udfs(spark, monkeypatch):
@@ -326,3 +330,34 @@ def test_pagerank_iteration_join_not_smj(spark, monkeypatch):
         keys = re.search(r"^Left keys \[\d+\]: \[(\w+)#", p, re.M)
         assert keys and keys.group(1) == "source_vertex", p
     assert not [p for p in plans if "SortMergeJoin" in p]
+
+
+def test_cc_rounds_hold_no_join(spark, monkeypatch):
+    """Both stars are window passes and the result is one aggregate: no
+    plan CC cuts (the seed pairs and every round's new pairs) holds a
+    join or a broadcast.  The exact convergence check, an anti-join, is
+    not cut and not audited here."""
+    import importlib
+
+    cc = importlib.import_module("osm2ch_spark.graph.components")
+    from tests import graph_oracle as O
+
+    plans = []
+    cut = cc.localcheckpoint
+
+    def recording(df, *args, **kwargs):
+        plans.append(plan_of(df))
+        return cut(df, *args, **kwargs)
+
+    monkeypatch.setattr(cc, "localcheckpoint", recording)
+    pairs = O.seeded_graph("multi_component")
+    edges = spark.createDataFrame(
+        [(int(u), int(v), 1.0, False) for u, v in pairs],
+        "source_vertex long, target_vertex long, weight double, one_way boolean",
+    )
+    result = cc.connected_components(edges)
+    assert result.count() == len(O.cc_oracle(pairs))
+    # the seed, then one plan per round
+    assert len(plans) >= 3
+    for p in plans + [plan_of(result)]:
+        assert "Join" not in p and "BroadcastExchange" not in p, p
